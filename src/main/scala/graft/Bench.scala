@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint. Prints ONE JSON line with per-query times.
   *
@@ -11,6 +10,10 @@ import org.apache.spark.sql.SparkSession
   * the sum of medians. `subtotal_r5` sums medians over the exact 44-query
   * set benched in round 5, giving a like-for-like round-over-round signal
   * even as new queries are added.
+  *
+  * `SPARK_GRAFT_BENCH_DIAG=1` adds one stderr line per run: the split of
+  * the timed span into plan construction and execution, Janino compiles
+  * and JIT code-cache occupancy. Session settings: [[GraftSession]].
   */
 object Bench {
   /** The 44 queries present in BENCH_r05.json — the like-for-like comparison set. */
@@ -26,7 +29,7 @@ object Bench {
     "text_dup_ngrams", "text_langid", "text_quality", "text_repetition", "text_stats",
     "text_top_tokens", "text_unigram_lp")
 
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
     if (n == 0) 0.0 else if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
@@ -45,28 +48,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ casts (profile_cols_approx) must match Verify
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
-      // Janino class cache sized to the full query inventory (static conf,
-      // takes effect because this is the JVM's first session): the default
-      // 100 entries thrash under a 200+-plan interleaved sweep — every
-      // query re-Janino-compiles every round, and once the JIT code cache
-      // saturates those recompiles (and the regenerated methods' re-JIT)
-      // run de-optimized — the r15 pipe_jsonata 12.6 s mechanism. Re-sized
-      // r17: the 213-query sweep now generates ~3.7k distinct fragments
-      // (diag-measured: a 2000-entry cache recompiled ~3.1k fragments in
-      // round 2 — full eviction thrash, a broad +5-15% tax on every
-      // round); 8000 leaves headroom for round-2 growth.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // session/codegen warmup so the first measured query doesn't absorb
     // JVM + Catalyst initialization
@@ -78,17 +63,21 @@ object Bench {
     val failed = collection.mutable.LinkedHashSet[String]()
     for (round <- 1 to runs; name <- names) {
       val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      // toRdd.count() forces every output column to be materialized;
-      // Dataset.count() would let Catalyst prune projection-only work and
-      // under-report the cost of compute-heavy columns.
+      val cgm = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val (c0, cc0) = if (diag) (cgm.getCount, codeCacheUsedMb()) else (0L, 0.0)
+      // timed: plan construction (incl. eager control-plane work) + toRdd.count(),
+      // which forces every output column to be materialized; Dataset.count()
+      // would let Catalyst prune projection-only work and under-report the
+      // cost of compute-heavy columns.
       // A failed run records NO sample (a failure typically returns fast;
       // folding its short elapsed into the median would let a regression
       // masquerade as a speedup) — it lands in the `failed` field instead.
-      val cgm = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-      val (c0, cc0) = if (diag) (cgm.getCount, codeCacheUsedMb()) else (0L, 0.0)
+      val t0 = System.nanoTime()
+      var t1 = t0 // end of construction
       try {
-        fn(spark, sfDir).queryExecution.toRdd.count()
+        val df = fn(spark, sfDir)
+        t1 = System.nanoTime()
+        df.queryExecution.toRdd.count()
         samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
@@ -96,9 +85,9 @@ object Bench {
           System.err.println(s"[bench] $name FAILED (round $round): $e")
       }
       if (diag) System.err.println(
-        f"[diag] round=$round name=$name sec=${(System.nanoTime() - t0) / 1e9}%.3f " +
-          f"janinoCompiles=${cgm.getCount - c0} codeCacheMB=${codeCacheUsedMb()}%.1f " +
-          f"(was ${cc0}%.1f)")
+        f"[diag] round=$round name=$name construct=${(t1 - t0) / 1e9}%.3f " +
+          f"exec=${(System.nanoTime() - t1) / 1e9}%.3f janinoCompiles=${cgm.getCount - c0} " +
+          f"codeCacheMB=${codeCacheUsedMb()}%.1f (was ${cc0}%.1f)")
     }
 
     // a query with zero successful runs is excluded from every total and

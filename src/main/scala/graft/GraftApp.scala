@@ -137,11 +137,9 @@ object GraftApp {
     // spark-submit injects spark.master; direct runMain gets local[*]
     val master = sys.props.get("spark.master")
       .orElse(sys.env.get("SPARK_MASTER")).getOrElse("local[*]")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .appName("graft-mqtt-bridge")
       .master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

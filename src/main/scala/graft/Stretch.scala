@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stretch harness: materialize FACTOR× copies of the tables behind
@@ -24,17 +24,8 @@ object Stretch {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     // optional 4th+ args: measure these queries instead of the default set
     val queries = if (args.length > 3) args.drop(3).toSeq else Queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Bench/Verify/Explain: Tables.events' TIMESTAMP_NTZ
-      // branch casts through the session TZ, so a non-UTC host would
-      // otherwise materialize shifted instants into the stretch tables
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(100000).selectExpr("sum(id * 2)").collect()
 
@@ -99,14 +90,11 @@ object Stretch {
       println(s"[stretch] wrote ${factor}x tables to $workDir")
     }
 
-    def medianTime(name: String, dir: String, runs: Int = 3): Double = {
-      val ts = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(runs / 2)
-    }
+    def medianTime(name: String, dir: String): Double = Bench.median((1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
+      (System.nanoTime() - t0) / 1e9
+    })
 
     val rows = queries.map { q =>
       val t1 = medianTime(q, srcDir)

@@ -37,8 +37,9 @@ object Tables {
     * so every consumer (incl. `unix_micros`) sees one logical type:
     *
     *   1. TIMESTAMP(NANOS)                   — Spark 4 rejects by default;
-    *      read nanos as long via the legacy conf, then `DIV 1000` → µs
-    *      timestamp (exact: the generator's values have zero sub-µs residue).
+    *      read nanos as long via the legacy conf (set by [[GraftSession]]),
+    *      then `DIV 1000` → µs timestamp (exact: the generator's values
+    *      have zero sub-µs residue).
     *   2. TIMESTAMP_MICROS isAdjustedToUTC=0 — Spark 4 reads TIMESTAMP_NTZ;
     *      cast to TimestampType. The session TZ is pinned UTC, so the cast
     *      is value-identical to DuckDB's naive read of the same micros.
@@ -48,17 +49,10 @@ object Tables {
     * DuckDB surfaces all three as a µs TIMESTAMP, so oracles agree.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // prefer setting this at session build (Bench/Verify do); only flip it
-    // when the builder didn't (the conf's registered default is false) —
-    // avoids re-mutating session state on every load
-    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => raw
-    }
+    if (raw.schema("ts").dataType == LongType)
+      raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+    else normTs(raw) // cases 2 and 3
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

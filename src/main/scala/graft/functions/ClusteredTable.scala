@@ -280,34 +280,44 @@ object ClusteredTable {
     completeDirs(deltaRoot(root), "c=")
       .filter(c => fsOf(c).exists(new Path(c, "_ABSORBS")))
 
-  /** Bounded cache of `_ABSORBS` contents keyed on file path + mtime: the
-    * list publishes inside the artifact's claim and is immutable after,
-    * so one read per publish suffices — the auto-compaction sink used to
-    * re-open every active artifact's list after EVERY micro-batch
-    * (tailParts) and compactTail re-read them again for the size tiers
-    * (the r16 ADVICE finding); on an object store each open is a
-    * round-trip. The mtime key keeps a re-created root at the same path
-    * (fresh-lifecycle tests/bench) from serving stale lists.
+  /** One publish of an artifact dir, from one listing of it: `marker`'s
+    * mtime plus a part-file name, which carries the writing job's random
+    * UUID — so a root rebuilt at the same path within one mtime tick
+    * still reads as a new publish. None if `marker` is absent.
+    */
+  private def publishStamp(fs: FileSystem, dir: Path, marker: String): Option[String] = {
+    val names = ls(fs, dir).map(st => st.getPath.getName -> st.getModificationTime)
+    names.find(_._1 == marker).map(m =>
+      s"${m._2}@${names.map(_._1).find(_.startsWith("part-")).getOrElse("")}")
+  }
+
+  /** Bounded cache of `_ABSORBS` contents keyed on file path + publish
+    * stamp: the list publishes inside the artifact's claim and is
+    * immutable after, so one read per publish suffices — the
+    * auto-compaction sink used to re-open every active artifact's list
+    * after EVERY micro-batch (tailParts) and compactTail re-read them
+    * again for the size tiers (the r16 ADVICE finding); on an object
+    * store each open is a round-trip.
     */
   private val absorbsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Long, Set[String])](256, 0.75f, true) {
+    new java.util.LinkedHashMap[String, (String, Set[String])](256, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Set[String])]): Boolean = size() > 256
+          e: java.util.Map.Entry[String, (String, Set[String])]): Boolean = size() > 256
     })
 
   /** The `d=` artifact names a compacted artifact absorbed. */
   private def absorbsOf(c: Path): Set[String] = {
     val fs = fsOf(c)
     val f = new Path(c, "_ABSORBS")
-    val mtime = fs.getFileStatus(f).getModificationTime
+    val stamp = publishStamp(fs, c, "_ABSORBS").orNull // absent: fs.open throws
     val hit = absorbsCache.get(f.toString)
-    if (hit != null && hit._1 == mtime) hit._2
+    if (hit != null && hit._1 == stamp) hit._2
     else {
       val in = fs.open(f)
       val set =
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toSet
         finally in.close()
-      absorbsCache.put(f.toString, (mtime, set))
+      absorbsCache.put(f.toString, (stamp, set))
       set
     }
   }
@@ -1185,19 +1195,19 @@ object ClusteredTable {
     * the per-scan O(table) aggregate (r14's one `weak`).
     */
   /** Bounded process-wide cache of collected `_envelopes` catalogs keyed
-    * on catalog path; the publish time (`_SUCCESS` mtime) in the value
-    * guards a re-created root at the same path (fresh-lifecycle tests and
-    * bench queries rmTree + rebuild) from serving stale rows. A claimed
-    * version's catalog is immutable, so a (path, mtime) hit is exact.
+    * on catalog path; the publish stamp in the value guards a re-created
+    * root at the same path (fresh-lifecycle tests and bench queries
+    * rmTree + rebuild) from serving stale rows. A claimed version's
+    * catalog is immutable, so a (path, stamp) hit is exact.
     * Only positive reads cache — a not-yet-visible catalog (markers-last
     * materialization on an eventually-consistent store) must be re-probed.
     */
   private val envelopeCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String,
-        (Long, org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])](
+        (String, org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])](
         64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String,
-          (Long, org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])]): Boolean =
+          (String, org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])]): Boolean =
         size() > 64
     })
 
@@ -1209,21 +1219,19 @@ object ClusteredTable {
   private def envelopeRows(s: SparkSession,
       dir: Path): Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])] = {
     val env = new Path(dir, "_envelopes")
-    val fs = fsOf(env)
-    val success = new Path(env, "_SUCCESS")
-    val mtime =
-      try {
-        if (!fs.exists(success)) return None
-        fs.getFileStatus(success).getModificationTime
-      } catch { case _: java.io.IOException => return None }
+    val stamp =
+      try publishStamp(fsOf(env), env, "_SUCCESS")
+      catch { case _: java.io.IOException => None }
     val key = env.toString
-    val hit = envelopeCache.get(key)
-    if (hit != null && hit._1 == mtime) Some((hit._2, hit._3))
-    else {
-      val df = s.read.parquet(env.toString)
-      val rows = df.collect().toSeq // ≤ numFiles rows
-      envelopeCache.put(key, (mtime, df.schema, rows))
-      Some((df.schema, rows))
+    stamp.map { st =>
+      val hit = envelopeCache.get(key)
+      if (hit != null && hit._1 == st) (hit._2, hit._3)
+      else {
+        val df = s.read.parquet(env.toString)
+        val rows = df.collect().toSeq // ≤ numFiles rows
+        envelopeCache.put(key, (st, df.schema, rows))
+        (df.schema, rows)
+      }
     }
   }
 

@@ -583,36 +583,32 @@ object PipelineQueries {
 
   /** Regular-grid gap filling with forward fill — the sensor-series
     * normalization step between raw MQTT events and model features
-    * (models want one row per (user, hour), observed or not). Per-user
-    * hourly grid from that user's own [min, max] observed hour (the grid
-    * Generate is per-user-bounded, never a global calendar cross join),
-    * left join of observations onto the grid on (user_id, h), then
-    * last-non-null forward fill per user. Scale shape: one
-    * partial-aggregated shuffle to (user, hour) cells, a tiny per-user
-    * bounds aggregate over those cells, and user-keyed join + window —
-    * everything after the first agg is sized by user-hours, not events.
+    * (models want one row per (user, hour), observed or not): one row per
+    * hour of each user's [min, max] observed span; `is_gap` unless the
+    * hour has a non-null mean, `value_ff` the last non-null mean so far.
+    * Each observed (user, hour) cell OWNS the hours up to the next cell
+    * ([h, next_h)), so one user-keyed window over cells gives `next_h`
+    * (lead) and the carried value (last non-null), and the grid is an
+    * explode of each cell's range — a projection, never a grid join or a
+    * grid-sized window. Scale shape: one partial-aggregated shuffle to
+    * cells, then that one window.
     */
   def pipeGapFill(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val obs = Tables.events(s, dir)
       .select(col("user_id"), expr("unix_micros(ts) DIV 3600000000").as("h"), col("value"))
       .groupBy("user_id", "h").agg(round(avg("value"), 6).as("v"))
-    // each observation OWNS the grid hours up to the next observation
-    // ([h, next_h) — the last one owns just itself), so one lead window
-    // over the (user, hour) cells replaces the per-user grid Generate,
-    // the (user, h) equi-join back onto it AND the last-non-null
-    // forward-fill window over the full grid: value_ff is the interval
-    // owner's v BY CONSTRUCTION and is_gap is hh > h. Same rows, same
-    // values; the grid-sized relation is now touched by a projection
-    // only (r17 — was: exec-dominant join + window over user×hours rows)
     val wSeq = Window.partitionBy("user_id").orderBy("h")
-    obs.withColumn("next_h", lead("h", 1).over(wSeq))
-      .select(col("user_id"), col("h"), col("v"),
+    obs.select(col("user_id"), col("h"), col("v"),
+        lead("h", 1).over(wSeq).as("next_h"),
+        last("v", ignoreNulls = true)
+          .over(wSeq.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("v_ff"))
+      .select(col("user_id"), col("h"), col("v"), col("v_ff"),
         explode(sequence(col("h"), coalesce(col("next_h") - 1, col("h")))).as("hh"))
       .select(col("user_id"),
         date_format(timestamp_seconds(col("hh") * 3600), "yyyy-MM-dd HH:mm:ss").as("bucket"),
-        (col("hh") =!= col("h")).as("is_gap"),
-        col("v").as("value_ff"))
+        (col("hh") =!= col("h") || col("v").isNull).as("is_gap"),
+        col("v_ff").as("value_ff"))
       .orderBy("user_id", "bucket")
   }
 

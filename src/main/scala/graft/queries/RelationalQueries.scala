@@ -1929,7 +1929,7 @@ object RelationalQueries {
       // bias of a 60-bit plane is negligible, unlike a 32-bit plane's
       case "str"  => conv(substring(md5(col(c)), 1, 15), 16, 10).cast("long")
       // parquet surfaces l_shipdate as TIMESTAMP_NTZ; the session pins
-      // timeZone=UTC (Verify/Bench/Explain builders), so the cast to
+      // timeZone=UTC (GraftSession), so the cast to
       // TIMESTAMP is instant-preserving and unix_millis matches DuckDB's
       // epoch_ms on the naive value
       case "ts"   => unix_millis(col(c).cast("timestamp"))

@@ -103,9 +103,10 @@ class MqttMicroBatchStream(options: Map[String, String]) extends MicroBatchStrea
   private val topics = options.getOrElse("topics", "#").split(",").map(_.trim).toSeq
   private val timeoutMs =
     options.get("datatimeoutsecs").map(_.toLong * 1000).getOrElse(900000L)
-  // admission control: cap records admitted per micro-batch so a burst
-  // doesn't produce one giant batch (backlog drains over later triggers)
-  // AND bounds the driver buffer between triggers
+  // admission control: cap the records admitted per micro-batch so a
+  // burst doesn't produce one giant batch (backlog drains over later
+  // triggers). It does not bound what the driver buffers between
+  // triggers: the client queue behind it is unbounded
   private val maxPerBatch =
     options.get("maxrecordsperbatch").map(_.toInt).getOrElse(Int.MaxValue)
   // batch parallelism: slice each admitted range into ~this many records

@@ -13,17 +13,8 @@ class BucketingSpec extends SparkTestBase {
   test("bucketed fact-fact join executes without a shuffle exchange") {
     // at real scale neither fact side is broadcastable — simulate that so
     // the bucket co-location (not a broadcast) is what avoids the shuffle
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-      .foreach { case (k, v) => spark.conf.set(k, v) }
-    try runBucketedJoin()
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(runBucketedJoin())
   }
 
   private def runBucketedJoin(): Unit = {

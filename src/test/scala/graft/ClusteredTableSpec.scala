@@ -1080,4 +1080,43 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(ids(root) == (0L until 50L).toSeq)
     assert(ClusteredTable.tailParts(root).isEmpty)
   }
+
+  test("catalog caches never serve a rebuilt root's old _envelopes or " +
+      "_ABSORBS, even when the rebuild lands within one mtime tick") {
+    val root = Files.createTempDirectory("ct_rebuild").toString
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    def path(rel: String) = new org.apache.hadoop.fs.Path(s"$root/$rel")
+    def mtime(rel: String) = fs.getFileStatus(path(rel)).getModificationTime
+    def rebuild(): Unit = ClusteredTable.rmTree(new java.io.File(root))
+    // _envelopes: v=0 re-folded with other bounds, _SUCCESS at the old mtime
+    val envOk = "base/v=0/_envelopes/_SUCCESS"
+    ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "00")
+    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    assert(ClusteredTable.envelopes(spark, root, 0L, "d1", "d2").isDefined)
+    val tEnv = mtime(envOk)
+    rebuild()
+    ClusteredTable.append(mk(Seq((5L, 7, 9))), root, "00")
+    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    fs.setTimes(path(envOk), tEnv, -1)
+    assert(mtime(envOk) == tEnv)
+    assert(ClusteredTable.envelopes(spark, root, 0L, "d1", "d2").get
+      .map(e => (e._2, e._3, e._4, e._5)) == Seq((7L, 7L, 9L, 9L)))
+    // _ABSORBS: c=02 absorbs {d=01, d=02} after a fold of d=00, then,
+    // rebuilt without the fold, {d=00, d=01, d=02} at the same mtime
+    val absorbs = "delta/c=02/_ABSORBS"
+    rebuild()
+    ClusteredTable.append(mk(Seq((1L, 0, 0))), root, "00")
+    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    (1 to 2).foreach(i => ClusteredTable.append(mk(Seq((i + 1L, i, i))), root, f"$i%02d"))
+    assert(ClusteredTable.compactTail(spark, root) == 1)
+    assert(ClusteredTable.tailParts(root) == Seq("c=02"))
+    val tAbs = mtime(absorbs)
+    rebuild()
+    (0 to 2).foreach(i => ClusteredTable.append(mk(Seq((i + 1L, i, i))), root, f"$i%02d"))
+    assert(ClusteredTable.compactTail(spark, root) == 1)
+    fs.setTimes(path(absorbs), tAbs, -1)
+    assert(mtime(absorbs) == tAbs)
+    assert(ClusteredTable.tailParts(root) == Seq("c=02"))
+    assert(ids(root) == Seq(1L, 2L, 3L))
+  }
 }

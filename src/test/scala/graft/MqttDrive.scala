@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Manual end-to-end drive of the public surface: in-JVM broker → DSv2
@@ -9,9 +8,7 @@ import org.apache.spark.sql.types._
   */
 object MqttDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val broker = new MqttTestBroker()
     val ck = java.nio.file.Files.createTempDirectory("drive_ck").toString

@@ -116,4 +116,32 @@ class QueriesSmokeSpec extends SparkTestBase {
       assert(bloom(doc) >= hits, s"doc $doc: bloom ${bloom(doc)} < exact $hits")
     }
   }
+
+  test("pipe_gap_fill: all-null hours at the start, middle and end of a " +
+      "series are gaps that carry the last non-null value") {
+    // absent from the sf data; the DuckDB oracle's grid + left join +
+    // last_value(v IGNORE NULLS) treats such an hour as a gap
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val h0 = 472222L // 2023-11-14 22:00 UTC, in hours
+    val dir = java.nio.file.Files.createTempDirectory("graft_gap_fill").toString
+    // (user_id, hour offset, value); user 1 has no event at all in hour 2
+    Seq[(Long, Long, Option[Double])](
+      (1, 0, None), (1, 1, Some(10.0)), (1, 1, Some(20.0)), (1, 3, None), (1, 3, None),
+      (1, 4, Some(30.0)), (1, 4, None), (1, 5, None), (2, 0, Some(5.0)))
+      .toDF("user_id", "dh", "value")
+      .select(col("user_id"),
+        timestamp_seconds((lit(h0) + col("dh")) * 3600 + 60).as("ts"), col("value"))
+      .write.parquet(s"$dir/events.parquet")
+    val got = SparkEntry.queries("pipe_gap_fill")(spark, dir).collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2), Option(r.get(3))))
+    assert(got == Seq(
+      (1L, "2023-11-14 22:00:00", true, None),
+      (1L, "2023-11-14 23:00:00", false, Some(15.0)),
+      (1L, "2023-11-15 00:00:00", true, Some(15.0)),
+      (1L, "2023-11-15 01:00:00", true, Some(15.0)),
+      (1L, "2023-11-15 02:00:00", false, Some(30.0)),
+      (1L, "2023-11-15 03:00:00", true, Some(30.0)),
+      (2L, "2023-11-14 22:00:00", false, Some(5.0))))
+  }
 }

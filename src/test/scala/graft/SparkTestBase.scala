@@ -8,17 +8,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * session; sbt forks a single test JVM so suites reuse it).
   */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     // static conf: saveAsTable output (BucketingSpec) goes to tmp, not cwd
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
     .getOrCreate()
 
   def sf(path: String = "sf0.001"): String = s"/root/testdata/$path"
+
+  /** Run `f` with runtime confs set on the shared session, then restore them. */
+  def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Single-column helper: evaluate a Column over one-row input. */
   def evalRows(df: DataFrame): Seq[Seq[Any]] =

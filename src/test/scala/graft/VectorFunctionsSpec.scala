@@ -63,13 +63,4 @@ class VectorFunctionsSpec extends SparkTestBase {
       assert(df.select(dot(col("a"), col("b"))).as[Double].head() == 32.0)
     }
   }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }
