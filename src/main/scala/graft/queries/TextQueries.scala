@@ -3444,18 +3444,21 @@ object TextQueries {
       s"""$pairsCore
          |SELECT id_a, id_b, j_word, j_shingle FROM pairs ORDER BY id_a, id_b""".stripMargin,
     // the same capped peeling unrolled as chained CTEs (emb_pca1
-    // precedent); stable compares the last two rounds
+    // precedent); stable compares the last two rounds. Each round joins
+    // the previous one twice, so an inlined CTE chain grows as
+    // 2^rounds copies of the pair core: the rounds (and sym) are
+    // MATERIALIZED so DuckDB computes each once
     "dedup_kcore" -> {
       val rounds = (1 to KcoreRounds).map { r =>
         val prev = if (r == 1) "n0" else s"a${r - 1}"
-        s"""a$r AS (SELECT a AS node FROM (
+        s"""a$r AS MATERIALIZED (SELECT a AS node FROM (
            |  SELECT s.a, count(1) AS c FROM sym s
            |  JOIN $prev x ON s.a = x.node JOIN $prev y ON s.b = y.node
            |  GROUP BY s.a) WHERE c >= $KcoreK)""".stripMargin
       }.mkString(",\n")
       s"""$pairsCore,
          |e AS (SELECT id_a AS a, id_b AS b FROM pairs),
-         |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
+         |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
          |n0 AS (SELECT DISTINCT a AS node FROM sym),
          |$rounds,
          |cd AS (SELECT s.a AS node, CAST(count(1) AS BIGINT) AS core_deg

@@ -110,7 +110,9 @@ class MqttClient(
           }
         }
       } catch {
-        case NonFatal(_) if running.get() =>
+        // close() shut the socket under the blocked read: a clean stop
+        case NonFatal(_) if !running.get() => ()
+        case NonFatal(_) =>
           reconnects.incrementAndGet()
           Thread.sleep(reconnectBackoffMillis)
       }

@@ -66,6 +66,29 @@ class MqttSourceSpec extends SparkTestBase {
     } finally broker.close()
   }
 
+  test("close() stops a connected client without an uncaught exception") {
+    val reported = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((t: Thread, e: Throwable) =>
+      reported.add(s"${t.getName}: $e"))
+    val broker = new MqttTestBroker()
+    try {
+      val client = new MqttClient(broker.url, Seq("#"), clientId = "quiet-stop").start()
+      assert(client.awaitConnected())
+      val reader = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+        .find(_.getName == "mqtt-reader-quiet-stop").get
+      client.close()
+      reader.join(5000)
+      assert(!reader.isAlive, "the reader loop must end after close()")
+      val fromReaders = reported.toArray(Array.empty[String]).filter(_.startsWith("mqtt-reader-"))
+      assert(fromReaders.isEmpty, s"uncaught on a clean stop: ${fromReaders.mkString("; ")}")
+      assert(client.reconnects.get() == 0)
+    } finally {
+      broker.close()
+      Thread.setDefaultUncaughtExceptionHandler(prev)
+    }
+  }
+
   test("idle watchdog reconnects the client after data timeout") {
     val broker = new MqttTestBroker()
     try {
