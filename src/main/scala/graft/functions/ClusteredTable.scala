@@ -46,15 +46,15 @@ import org.apache.spark.sql.functions._
   * object-store-clean as is. Filesystem credentials/config come from
   * the active SparkSession's Hadoop configuration when one exists.
   *
-  * Crash safety without a transaction log, the MaterializedViewStream
-  * discipline: a version is visible only when its `_MANIFEST` exists,
-  * and since the fold writes parquet + manifest into a hidden staging
-  * directory and publishes both through ONE atomic claim rename (see
-  * `optimize`'s OCC contract), a crash at any point leaves either a
-  * never-visible staging orphan or a complete version — nothing torn
-  * is ever visible. The same claim rename is the table's optimistic-
-  * concurrency point: racing maintainers fold in parallel, exactly one
-  * claims `v=<next>`, the loser re-folds against the winner's state.
+  * Crash safety without a transaction log: a version is visible only
+  * when its `_MANIFEST` exists, and since the fold writes parquet +
+  * manifest into a hidden staging directory and publishes both through
+  * ONE atomic claim rename (see `optimize`'s OCC contract), a crash at
+  * any point leaves either a never-visible staging orphan or a complete
+  * version — nothing torn is ever visible. The same claim rename is
+  * the table's optimistic-concurrency point: racing maintainers fold in
+  * parallel, exactly one claims `v=<next>`, the loser re-folds against
+  * the winner's state.
   * Deltas are never deleted by optimize itself — they become garbage
   * the moment a complete manifest names them, and `vacuum()` reclaims
   * them (plus staging orphans) at leisure. Re-running optimize after
@@ -131,6 +131,8 @@ import org.apache.spark.sql.functions._
   * vacuum's retention window (`keepVersions`, default 1: immediate).
   */
 object ClusteredTable {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Ledger I/O configuration: the active session's Hadoop conf (so
     * cluster filesystem settings and credentials apply) or a default
@@ -571,6 +573,9 @@ object ClusteredTable {
               .coalesce(1).write.mode("overwrite").parquet(envPath)
           case None =>
             // refusal fallback: the original one-aggregate catalog build
+            log.warn(s"graft-clustered: footer statistics refused for the " +
+              s"envelope catalog of $staging — building it with an aggregate " +
+              "job over the staged fold instead")
             val staged = s.read.parquet(staging.toString)
             val envAggs = dims.zipWithIndex.flatMap { case (c, i) =>
               Seq(min(col(c).cast("long")).as(s"mn${i + 1}"),
@@ -667,6 +672,8 @@ object ClusteredTable {
     // launches per sizing. Refusal falls back to the scan counts.
     val sizeDirs = vs.lastOption.map(_._2).toSeq ++ pendingD
     val rows = footerRowCount(sizeDirs).getOrElse {
+      log.warn(s"graft-clustered: footer row count refused at $root — " +
+        "sizing the fold with count() jobs instead")
       vs.lastOption.map(v => s.read.parquet(v._2.toString).count()).getOrElse(0L) +
         (if (pendingD.isEmpty) 0L
          else s.read.parquet(pendingD.map(_.toString): _*).count())
@@ -939,20 +946,21 @@ object ClusteredTable {
   private def durable(dir: Path): Boolean = fsOf(dir).exists(new Path(dir, "_SUCCESS"))
 
   /** CLAIMED artifact write — the concurrency-hardened sibling of
-    * [[append]]/[[delete]] for maintainers that may TICK CONCURRENTLY
-    * (ReplicaStream): the batch is written to a hidden sibling staging
-    * directory and published under its final name through the same
-    * atomic claim rename optimize uses. Two writers racing the same
-    * still-missing artifact therefore can never interleave bytes under
-    * one path: exactly one claim wins, the loser discards its staging
-    * and the surviving artifact is one writer's complete output. An
-    * already-durable artifact is skipped before any work (the
-    * fill-gaps contract). Returns true iff this call published it.
+    * [[append]]/[[delete]] for writers that may race on one artifact
+    * name (overlapping [[applyChanges]] replays): the batch is written
+    * to a hidden sibling staging directory and published under its
+    * final name through the same atomic claim rename optimize uses.
+    * Two writers racing the same still-missing artifact therefore can
+    * never interleave bytes under one path: exactly one claim wins, the
+    * loser discards its staging and the surviving artifact is one
+    * writer's complete output. An already-durable artifact is skipped
+    * before any work (the fill-gaps contract). Returns true iff this
+    * call published it.
     *
     * The deterministic-content contract still applies: all racers must
     * derive the same rows for the same name (true for changefeed
-    * windows and seeds — the content is the primary's retained
-    * artifacts), so WHICH writer wins never matters.
+    * windows — the content is the source's retained artifacts), so
+    * WHICH writer wins never matters.
     */
   def appendClaimed(df: DataFrame, root: String, name: String): Boolean =
     writeClaimed(df, new Path(deltaRoot(root), s"d=$name"))
@@ -960,31 +968,6 @@ object ClusteredTable {
   /** [[appendClaimed]] for equality-delete artifacts. */
   def deleteClaimed(keys: DataFrame, root: String, name: String): Boolean =
     writeClaimed(keys.dropDuplicates(), new Path(dvRoot(root), s"x=$name"))
-
-  /** Settle a tiny piece of table-level metadata exactly once: publish
-    * a single-file directory `<name>/v` (containing `content`) under
-    * `dir` through the claim-rename discipline, and return the DURABLE
-    * value — the winner's, whichever caller that was. `content` is
-    * only evaluated when no durable value exists yet. ReplicaStream
-    * settles its seed version this way, so concurrent virgin ticks can
-    * never seed two different primary versions: whoever wins the claim
-    * decides, everyone else reads the decision.
-    */
-  private[graft] def claimMeta(dir: String, name: String, content: => String): String = {
-    val target = new Path(dir, name)
-    val fs = fsOf(target)
-    val valueFile = new Path(target, "v")
-    if (!fs.exists(valueFile)) {
-      val tmp = new Path(dir, s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      try {
-        val out = fs.create(new Path(tmp, "v"), true)
-        try out.write(content.getBytes("UTF-8")) finally out.close()
-        claimRename(fs, tmp, target)
-      } finally fs.delete(tmp, true) // no-op for the claim winner
-    }
-    val in = fs.open(valueFile)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
 
   private def writeClaimed(df: DataFrame, target: Path): Boolean = {
     val fs = fsOf(target)
@@ -999,9 +982,9 @@ object ClusteredTable {
         // reclaim THIS staging mid-write once the target artifact is
         // durable (some other tick published it — this writer had lost
         // anyway). Re-check and absorb as the lost race instead of
-        // propagating — in ReplicaStream.attach a propagated error would
-        // kill the driving streaming query over a benign outcome; the
-        // same tolerance optimize's fold path applies to a gutted staging.
+        // propagating — a replayed applyChanges must not fail over a
+        // benign outcome; the same tolerance optimize's fold path
+        // applies to a gutted staging.
         if (fs.exists(new Path(target, "_SUCCESS"))) return false else throw e
     }
     // a half-published artifact (exists but not durable — a crashed
@@ -1016,47 +999,10 @@ object ClusteredTable {
     else { fs.delete(staging, true); false }
   }
 
-  /** Newest complete base version id, if any — the changefeed cursor a
-    * downstream consumer (graft.streaming.ReplicaStream) polls.
+  /** Newest complete base version id, if any — the cursor a changefeed
+    * consumer polls to pick its next `changes(from, to)` window.
     */
   def latestVersion(root: String): Option[Long] = versions(root).lastOption.map(_._1)
-
-  /** Whether complete base version `v` is still retained (un-vacuumed)
-    * — the staleness probe ReplicaStream's seed self-heal uses.
-    */
-  private[graft] def hasVersion(root: String, v: Long): Boolean =
-    versions(root).exists(_._1 == v)
-
-  /** The newest durable GENERATION of a [[claimMeta]]-settled value:
-    * generations are `<prefix>`, `<prefix>.2`, `<prefix>.3`, … and a
-    * newer generation SUPERSEDES the older ones — the self-heal shape
-    * for settled-but-stale metadata (ReplicaStream's seed claim when
-    * the primary's retention lapses the claimed version): claims are
-    * never deleted (a delete racing a fresh re-claim could destroy the
-    * racer's decision), only outranked by claiming the next generation
-    * through the same one-winner [[claimMeta]] rename. Returns
-    * (generation, value); None if no generation is durable yet.
-    */
-  private[graft] def claimedMeta(dir: String, prefix: String): Option[(Int, String)] = {
-    val d = new Path(dir)
-    val fs = fsOf(d)
-    ls(fs, d)
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        val gen: Option[Int] =
-          if (n == prefix) Some(1)
-          else if (n.startsWith(prefix + "."))
-            scala.util.Try(n.stripPrefix(prefix + ".").toInt).toOption
-          else None
-        gen.filter(_ => fs.exists(new Path(st.getPath, "v"))).map((_, st.getPath))
-      }
-      .sortBy(_._1).lastOption
-      .map { case (g, p) =>
-        val in = fs.open(new Path(p, "v"))
-        try (g, scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
-      }
-  }
 
   /** VERSION HISTORY — the DESCRIBE HISTORY surface: one row per
     * complete (un-vacuumed) base version with the CUMULATIVE artifact
@@ -1078,8 +1024,9 @@ object ClusteredTable {
     * artifact directories. Because manifests accumulate and survive
     * vacuum (they live inside the retained newest version), this set is
     * a durable, crash-consistent ledger of everything ever ingested —
-    * ReplicaStream derives its applied-watermark from it instead of
-    * keeping side state that could desynchronize.
+    * the clustered tail source (ClusteredTailStream) tells reclaimed
+    * delta names from lost ones with it instead of keeping side state
+    * that could desynchronize.
     */
   def artifactNames(root: String): Set[String] = {
     val compacted = compactedDirs(root)
@@ -1087,8 +1034,8 @@ object ClusteredTable {
       deltaDirs(root).map(_.getName) ++ dvDirs(root).map(_.getName) ++
       // a compacted artifact accounts for itself AND its absorbed
       // originals — the ledger must keep naming them after vacuum
-      // reclaims the original directories (ReplicaStream's watermark
-      // reads window names out of this set)
+      // reclaims the original directories (the tail source reads delta
+      // names out of this set)
       compacted.map(_.getName) ++ compacted.flatMap(absorbsOf)
   }
 
@@ -1829,11 +1776,11 @@ object ClusteredTable {
     val stagingTargets = stagings.flatMap(targetOf).toSet
     val staleBases = vs.dropRight(keepVersions)
       .filter { case (v, _) => !stagingTargets.contains(v) }.map(_._2)
-    // claimed-write stagings (`.staging-<artifact>-<uuid>` under delta/
-    // and dv/, from appendClaimed/deleteClaimed): dead once their target
-    // artifact is durably published — their claim can only fail. A
-    // crashed writer's orphan whose target never published stays until
-    // some tick publishes it (the fill-gaps replay always will).
+    // artifact stagings (`.staging-<artifact>-<uuid>` under delta/ and
+    // dv/, from appendClaimed/deleteClaimed and compactTail): dead once
+    // their target artifact is durably published — their claim can only
+    // fail. A crashed writer's orphan whose target never published stays
+    // — a replay or a later compaction may still publish it.
     val staleArtStagings =
       (ls(fs, deltaRoot(root)) ++ ls(fs, dvRoot(root)))
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(".staging-"))
@@ -1864,8 +1811,8 @@ object ClusteredTable {
     * Scale: reads ONLY the window's delta/DV artifacts plus the
     * `fromV` base for delete pre-images — never a two-snapshot diff
     * join; DV key sets broadcast. This is what an incremental view
-    * maintainer (MaterializedViewStream) consumes instead of rescanning
-    * the table.
+    * maintainer or [[applyChanges]] consumes instead of rescanning the
+    * table.
     */
   def changes(s: SparkSession, root: String, fromV: Long, toV: Long): DataFrame = {
     val vmap = versions(root).toMap

@@ -25,9 +25,9 @@ object TextFunctions {
   def h32(c: Column, seed: Column): Column =
     h32(concat(c, lit("#"), seed.cast("string")))
 
-  /** Shuffle rank for training-shard layout — shared by the batch
-    * corpus_shuffle query and GraftPipeline.shardGate so the batch
-    * layout and streaming assignment cannot diverge.
+  /** Shuffle rank for training-shard layout — the corpus_shuffle
+    * query's rank and the basis of [[shardId]], so a document's rank
+    * and its shard cannot diverge.
     */
   def shardRank(key: Column): Column =
     h32(concat(lit("shuf#"), key.cast("string")))
@@ -41,7 +41,7 @@ object TextFunctions {
     */
   def tokens(text: Column): Column = split(text, " ")
 
-  // ---- Bloom bitmask (shared: text_bloom batch query + noveltyGate) -----
+  // ---- Bloom bitmask (shared by the text_bloom query and its oracle) ----
   val BloomBits = 1024   // filter size m (positions 0..m-1)
   val BloomHashes = 4    // k seeded h32 hashes per shingle
 
@@ -244,9 +244,9 @@ object TextFunctions {
     langIdFromHits(en, de, fr, es)
   }
 
-  /** Fasttext-style classifier surface, shared by the batch query
-    * (TextQueries.textClassifierScore) and the streaming gate
-    * (GraftPipeline.classifierGate) so decisions cannot diverge. The
+  /** Fasttext-style classifier surface, shared by the queries that score
+    * with it (TextQueries.textClassifierScore, textCalibration and the
+    * filter-agreement table) so their decisions cannot diverge. The
     * weight table is the trained-weight hand-off point: it is loaded at
     * PLAN TIME from `fixtures/classifier_weights.csv` (schema
     * `bucket INT 0..1023, weight DOUBLE`; path overridable via the
@@ -295,17 +295,22 @@ object TextFunctions {
     val p = java.nio.file.Paths.get(
       sys.env.getOrElse("GRAFT_CLASSIFIER_WEIGHTS", "fixtures/classifier_weights.csv"))
     if (java.nio.file.Files.isReadable(p)) loadClassifierWeights(p)
-    else classifierWeightsFormula
+    else {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"graft: no readable classifier weights at ${p.toAbsolutePath} — " +
+          "using classifierWeightsFormula, the stand-in the fixture was generated from")
+      classifierWeightsFormula
+    }
   }
 
   /** Mean hashed-feature weight from a pre-hashed feature array (see
     * [[hashArray]]): the linear bag-of-ngrams score. Keep iff >= 0.
     * The score is a double left-fold of non-dyadic weights divided by
     * n_feats, so the keep decision is NOT drift-free in the abstract —
-    * it is flip-proof only because batch (textClassifierScore), stream
-    * (classifierGate), and the oracle SQL all fold the same weights in
+    * it is flip-proof only because the queries (textClassifierScore and
+    * the tables built on it) and the oracle SQL fold the same weights in
     * the same array order. Do not reorder or tree-reduce this
-    * summation without changing all three together.
+    * summation without changing both together.
     */
   def classifierScoreFromHashes(hs: Column, nFeats: Column): Column =
     graft.expressions.TextKernelExpressions.classifierScoreNative(
@@ -319,10 +324,9 @@ object TextFunctions {
         pmod(h, lit(ClassifierBuckets.toLong)).cast("int") + 1)),
       lit(0.0), (a, x) => a + x) / nFeats
 
-  /** PII regex classes, in redaction order, shared by the batch scan
-    * (TextQueries.textPii) and the streaming scrub
-    * (GraftPipeline.piiScrub). Regex built-ins only — the whole surface
-    * stays a codegen'd stateless projection.
+  /** PII regex classes, in redaction order, shared by the scan and the
+    * redaction of TextQueries.textPii. Regex built-ins only — the whole
+    * surface stays a codegen'd stateless projection.
     */
   val PiiPatterns: Seq[(String, String)] = Seq(
     "email" -> "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}",
@@ -348,10 +352,10 @@ object TextFunctions {
 
   /** Gopher-rule keep conjunction (Rae et al. '21 subset) from
     * already-materialized parts — cheap comparisons, safe to inline.
-    * Single source of the thresholds for the batch query
-    * (TextQueries.textGopherRules) and the streaming gate
-    * (GraftPipeline.gopherGate), so batch and stream can never disagree
-    * on a decision. Parts: word count, mean word length, symbol-char
+    * Single source of the thresholds for every query that applies the
+    * rules (TextQueries.textGopherRules and the calibration, per-source
+    * health and filter-agreement tables), so they can never disagree on
+    * a decision. Parts: word count, mean word length, symbol-char
     * ratio, stopword hits.
     */
   def gopherKeepFromParts(nWords: Column, meanWordLen: Column,

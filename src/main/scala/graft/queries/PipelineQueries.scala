@@ -225,8 +225,8 @@ object PipelineQueries {
   /** Gap sessionization via Spark's NATIVE `session_window` aggregate —
     * the Spark-first form of [[pipeSessionize]]'s manual lag/running-sum
     * construction, and the one that carries over to Structured Streaming
-    * verbatim (GraftPipeline.sessionStats uses exactly this operator
-    * with a watermark). One groupBy(user, session_window(ts, gap)):
+    * verbatim (the same operator behind a watermark). One
+    * groupBy(user, session_window(ts, gap)):
     * Catalyst plans a single exchange on user_id and merges windows
     * within partitions — same shuffle count as the manual form with two
     * window passes fused away. Boundary semantics differ from the
@@ -747,9 +747,7 @@ object PipelineQueries {
     * into a |types|-row aggregate, the decay a pure projection against
     * a broadcast 1-row max — no window state at all, and at stream time
     * the same sum folds incrementally (decay is multiplicative, so a
-    * stored sum re-bases by one multiply per batch —
-    * [[graft.streaming.DecayStream]] is that fold, spec-pinned against
-    * this closed form). The λ factor is
+    * stored sum re-bases by one multiply per batch). The λ factor is
     * spelled ln(2)/7 in BOTH engines so the per-row doubles are
     * bit-identical before the (order-insensitive under rounding) sum.
     */

@@ -537,18 +537,18 @@ object RelationalQueries {
 
   /** CHANGEFEED — net row-level CDC between two optimize versions
     * (graft.functions.ClusteredTable.changes), the primitive an
-    * incremental consumer (a MaterializedViewStream maintainer, a
-    * downstream sync) reads INSTEAD of diffing snapshots: v=0 holds the
-    * even keys; the window then appends the odd early-month rows,
-    * deletes every o_orderkey%7=0 key, appends the odd late-month rows
-    * (AFTER the delete), and optimizes into v=1. The feed must net the
-    * window: early-month %7=0 inserts cancel against the delete, the
-    * late-month %7=0 rows survive as inserts (sequence rule — n_k7
-    * pins it observably), and the deletes emit PRE-IMAGE rows for
-    * exactly the %7=0 keys that existed at v=0. DuckDB re-derives the
-    * net diff from the raw table; a feed that double-emits, misses a
-    * cancellation, or leaks the delete across the sequence boundary
-    * goes red.
+    * incremental consumer (a view maintainer, a replica fed through
+    * ClusteredTable.applyChanges) reads INSTEAD of diffing snapshots:
+    * v=0 holds the even keys; the window then appends the odd
+    * early-month rows, deletes every o_orderkey%7=0 key, appends the
+    * odd late-month rows (AFTER the delete), and optimizes into v=1.
+    * The feed must net the window: early-month %7=0 inserts cancel
+    * against the delete, the late-month %7=0 rows survive as inserts
+    * (sequence rule — n_k7 pins it observably), and the deletes emit
+    * PRE-IMAGE rows for exactly the %7=0 keys that existed at v=0.
+    * DuckDB re-derives the net diff from the raw table; a feed that
+    * double-emits, misses a cancellation, or leaks the delete across
+    * the sequence boundary goes red.
     *
     * Scale: changes() reads ONLY the window's delta/DV artifacts plus
     * the from-version for pre-images — feed cost scales with the

@@ -1572,7 +1572,7 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  private def ClfBuckets = ClassifierBuckets // shared with the streaming gate
+  private def ClfBuckets = ClassifierBuckets // shared with TextFunctions
   private val ClfScale = 8.0
 
   /** Fasttext-style linear quality classifier (the GPT-3 / LLaMA
@@ -2516,7 +2516,7 @@ object TextQueries {
   }
 
   // Bloom geometry lives in TextFunctions (BloomBits/BloomHashes), shared
-  // with the streaming noveltyGate so batch and stream probe one filter
+  // with the oracle SQL so both engines probe one filter
 
   /** Bloom-filter decontamination — the join→broadcast-filter rewrite of
     * [[textContaminate]] for when the eval set outgrows a comfortable

@@ -2,7 +2,7 @@ package graft.sources.mqtt
 
 import java.net.{Socket, URI}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 import scala.util.control.NonFatal
 import MqttCodec._
 
@@ -46,6 +46,8 @@ class MqttClient(
   @volatile private var socket: Socket = _
   /** reconnect counter (tests/metrics) */
   val reconnects = new AtomicLong(0)
+  /** what broke the connection (or refused it) before the latest reconnect */
+  val lastCause = new AtomicReference[Throwable]()
 
   // One lock per connection around every packet write: ack() runs on the
   // consumer thread while the reader thread can write PingResp (or PubAck
@@ -112,8 +114,11 @@ class MqttClient(
       } catch {
         // close() shut the socket under the blocked read: a clean stop
         case NonFatal(_) if !running.get() => ()
-        case NonFatal(_) =>
-          reconnects.incrementAndGet()
+        case NonFatal(e) =>
+          lastCause.set(e)
+          val n = reconnects.incrementAndGet()
+          MqttClient.log.warn(s"mqtt $url: connection lost (${e.getClass.getName}: " +
+            s"${e.getMessage}); reconnect #$n in $reconnectBackoffMillis ms")
           Thread.sleep(reconnectBackoffMillis)
       }
     }
@@ -148,4 +153,8 @@ class MqttClient(
     try if (socket != null) { send(socket.getOutputStream, Disconnect); socket.close() }
     catch { case NonFatal(_) => () }
   }
+}
+
+object MqttClient {
+  private[mqtt] val log = org.slf4j.LoggerFactory.getLogger(classOf[MqttClient])
 }

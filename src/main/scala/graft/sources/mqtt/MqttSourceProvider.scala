@@ -150,7 +150,14 @@ class MqttMicroBatchStream(options: Map[String, String]) extends MicroBatchStrea
       // client acks on receipt (the loss window shrinks to driver memory)
       client = new MqttClient(url, topics, dataTimeoutMillis = timeoutMs,
         subscribeQos = qos, autoAck = walDir.isEmpty).start()
-      client.awaitConnected()
+      // no throw: the client keeps retrying in the background, as the
+      // reference's client does; the warning makes a dead URL visible
+      if (!client.awaitConnected()) {
+        val cause = Option(client.lastCause.get())
+          .map(e => s"${e.getClass.getName}: ${e.getMessage}").getOrElse("none recorded")
+        MqttClient.log.warn(s"mqtt source: no connection to $url yet " +
+          s"(last cause: $cause); still retrying")
+      }
     }
     client
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -39,40 +39,4 @@ class StatsListener(onReport: (Long, Long) => Unit = (s, e) =>
     onReport(s, e)
     (s, e)
   }
-}
-
-/** S2 — idle watchdog (src/DataTimeoutUtil.js:1-18 + wiring js:86-97):
-  * if no input rows arrive for `timeoutMillis`, fire `onTimeout` (the
-  * reference force-reconnects the source; a Spark query owner restarts
-  * the query or the source's connection manager reconnects internally).
-  * Reset-on-data, like the reference's resettable timer. timeout=0
-  * disables (js:57-61).
-  */
-class IdleWatchdog(timeoutMillis: Long, onTimeout: () => Unit,
-    clock: () => Long = () => System.currentTimeMillis())
-    extends StreamingQueryListener {
-
-  private val lastData = new AtomicReference[java.lang.Long](clock())
-  @volatile var fired: Boolean = false
-
-  override def onQueryStarted(event: QueryStartedEvent): Unit = {
-    lastData.set(clock())
-    fired = false
-  }
-  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
-
-  override def onQueryProgress(event: QueryProgressEvent): Unit = {
-    if (event.progress.numInputRows > 0) {
-      lastData.set(clock()) // data seen -> reset, DataTimeoutUtil.reset()
-      fired = false
-    } else check()
-  }
-
-  override def onQueryIdle(event: QueryIdleEvent): Unit = check()
-
-  private def check(): Unit =
-    if (timeoutMillis > 0 && !fired && clock() - lastData.get() >= timeoutMillis) {
-      fired = true
-      onTimeout()
-    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.PipelineFunctions._
@@ -172,486 +172,14 @@ object GraftPipeline {
       .withWatermark("arrival_ts", watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Stream-stream enrichment join — the streaming form of the batch
-    * pipe_interval_join: each left record joins right records with the
-    * same key whose event time falls in [left_ts - tolerance, left_ts]
-    * (the "most recent calibration/config within the horizon" shape).
-    * Both sides carry watermarks so Spark bounds the join state: each
-    * side buffers only rows inside watermark + tolerance, NOT the full
-    * stream — the state-store analog of the batch range-join pruning.
-    * Inner join; right columns come back prefixed `r_`. Works on batch
-    * DataFrames identically (the condition is the same range predicate).
-    */
-  def enrichStream(left: DataFrame, right: DataFrame, key: String,
-      toleranceSecs: Int, watermark: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark("arrival_ts", watermark)
-    val r0 = right.withWatermark("arrival_ts", watermark)
-    val r = r0.columns.foldLeft(r0)((df, c) => df.withColumnRenamed(c, s"r_$c"))
-    l.join(r,
-      col(key) === col(s"r_$key") &&
-        col("r_arrival_ts") >= col("arrival_ts") - expr(s"INTERVAL $toleranceSecs SECONDS") &&
-        col("r_arrival_ts") <= col("arrival_ts"))
-  }
-
-  /** Deterministic sampling gate — the streaming form of the batch
-    * sample_balanced selection: keep a record iff its key's portable
-    * 32-bit hash falls under `rate`. Stateless pure projection (no
-    * watermark, no store); the hash gate means a replayed micro-batch
-    * makes identical decisions, so at-least-once delivery cannot skew
-    * the sample. Integer-only test, like the batch query.
-    */
-  def sampleGate(routed: DataFrame, keyCol: String, rate: Double): DataFrame = {
-    require(rate >= 0.0 && rate <= 1.0, s"rate must be in [0, 1], got $rate")
-    routed.filter(
-      pmod(graft.functions.TextFunctions.h32(col(keyCol).cast("string")), lit(1000000L))
-        < lit((rate * 1000000L).toLong))
-  }
-
-  /** Quality gate — the streaming form of text_curate's quality arm: drop
-    * records whose payload text scores under `minScore`, with the same
-    * blended score the batch queries use (length/alpha/stopword). A
-    * stateless projection+filter; pair with `observe`/StatsListener for
-    * drop accounting like the malformed-JSON F1 path.
-    */
-  def qualityGate(routed: DataFrame, textCol: String, minScore: Double): DataFrame = {
-    import graft.functions.TextFunctions._
-    val t = col(textCol)
-    val staged = graft.functions.PipelineFunctions.stageBarrier(
-      routed, routed.columns.map(col).toSeq,
-      "q_toks" -> tokens(t))
-    staged
-      .withColumn("quality", qualityScoreFromParts(
-        length(t),
-        length(regexp_replace(t, "[^A-Za-z ]", "")),
-        size(col("q_toks")),
-        stopwordHits(col("q_toks"), StopwordsEn)))
-      .filter(col("quality") >= minScore)
-      .drop("q_toks")
-  }
-
-  /** Gopher-rule gate — the streaming form of text_gopher_rules' named
-    * rule filter (Rae et al. '21 subset): drop records whose payload
-    * text fails the keep conjunction (word count, mean word length,
-    * symbol ratio, stopword floor), with the thresholds shared from
-    * TextFunctions.gopherKeepFromParts so the batch query and this gate
-    * can never disagree on a decision (GopherGateSpec pins it). A
-    * stateless projection+filter — no watermark, no state store — and a
-    * pure function of the payload, so a replayed micro-batch makes
-    * identical decisions (at-least-once-benign like sampleGate). The
-    * token array stages once behind a Generate barrier; every rule part
-    * reads the staged column, one tokenize per record.
-    */
-  def gopherGate(routed: DataFrame, textCol: String): DataFrame = {
-    import graft.functions.TextFunctions._
-    val t = col(textCol)
-    val staged = graft.functions.PipelineFunctions.stageBarrier(
-      routed, routed.columns.map(col).toSeq,
-      "g_toks" -> tokens(t))
-    val parts = graft.functions.PipelineFunctions.stageBarrier(
-      staged, (routed.columns :+ "g_toks").map(col).toSeq,
-      "g_n_words" -> size(col("g_toks")).cast("long"),
-      "g_word_chars" -> aggregate(
-        transform(col("g_toks"), w => length(w).cast("long")),
-        lit(0L), (a, x) => a + x),
-      "g_stop_hits" -> stopwordHits(col("g_toks"), StopwordsEn).cast("long"))
-    parts
-      .filter(gopherKeepFromParts(
-        col("g_n_words"),
-        col("g_word_chars").cast("double") /
-          greatest(col("g_n_words"), lit(1L)).cast("double"),
-        length(regexp_replace(t, "[A-Za-z0-9 .,]", "")).cast("double") /
-          greatest(length(t), lit(1)).cast("double"),
-        col("g_stop_hits")))
-      .drop("g_toks", "g_n_words", "g_word_chars", "g_stop_hits")
-  }
-
-  /** Classifier gate — the streaming form of text_classifier_score's
-    * fasttext-style linear filter (the GPT-3/LLaMA-style selection
-    * companion to [[gopherGate]]'s named rules): unigram+bigram hashed
-    * features, mean literal-table weight, keep iff raw score >= 0 — the
-    * same exact integer-derived comparison as the batch query
-    * (thresholds and weights shared via TextFunctions, spec-pinned), so
-    * no float drift and no batch/stream divergence. Stateless pure
-    * projection+filter; replay-stable; one tokenize + one md5 kernel
-    * pass per record behind Generate barriers.
-    */
-  def classifierGate(routed: DataFrame, textCol: String): DataFrame = {
-    import graft.functions.TextFunctions._
-    val t = col(textCol)
-    val staged = graft.functions.PipelineFunctions.stageBarrier(
-      routed, routed.columns.map(col).toSeq,
-      "c_toks" -> tokens(t))
-    val feats = graft.functions.PipelineFunctions.stageBarrier(
-      staged, (routed.columns :+ "c_toks").map(col).toSeq,
-      "c_feats" -> concat(col("c_toks"), wordShingles(col("c_toks"), 2)))
-    val hashed = graft.functions.PipelineFunctions.stageBarrier(
-      feats, (routed.columns :+ "c_feats").map(col).toSeq,
-      "c_hs" -> hashArray(col("c_feats")))
-    hashed
-      .filter(classifierScoreFromHashes(col("c_hs"), size(col("c_feats"))) >= 0.0)
-      .drop("c_feats", "c_hs")
-  }
-
-  /** PII scrub — the streaming form of text_pii's redaction arm: replace
-    * every email / IPv4 / phone / key-shaped span in `textCol` with its
-    * typed placeholder (classes and order shared via
-    * TextFunctions.PiiPatterns, so batch and stream redact identically)
-    * and append a `pii_hits` total for drop/alert routing. The
-    * compliance transform a production ingest runs INLINE, before
-    * anything persists: a stateless regex projection — codegen'd
-    * built-ins, no UDF, no state — so at-least-once replay rewrites the
-    * same record to the same bytes.
-    */
-  def piiScrub(routed: DataFrame, textCol: String): DataFrame = {
-    import graft.functions.TextFunctions._
-    val t = col(textCol)
-    val staged = graft.functions.PipelineFunctions.stageBarrier(
-      routed, routed.columns.filterNot(_ == textCol).map(col).toSeq,
-      textCol -> piiRedact(t),
-      "pii_hits" -> piiCounts(t).map(_._2).reduce(_ + _))
-    staged.select((routed.columns :+ "pii_hits").map(col).toSeq: _*)
-  }
-
-  /** Shard-assignment gate — the streaming form of corpus_shuffle's
-    * shard id: append the deterministic training-shard assignment
-    * (`TextFunctions.shardId`, shared with the batch query so a record
-    * ingested through the stream lands in the SAME shard the batch
-    * layout would place it in) for shard-homed routing — e.g.
-    * `partitionBy(shardCol)` at the sink, so each shard's files grow
-    * append-only and a trainer reads them independently. A stateless
-    * pure projection: hash of the key, replay-stable under
-    * at-least-once delivery, no state, no shuffle (the co-location
-    * happens at the SINK's partitioning, not via an exchange here).
-    * Position/byte offset within a shard remain the batch layout pass's
-    * job (they need the shard's full rank order); the gate guarantees
-    * only — but exactly — that stream and batch agree on WHICH shard.
-    */
-  def shardGate(routed: DataFrame, keyCol: String, nShards: Int,
-      shardCol: String = "shard"): DataFrame = {
-    require(nShards > 0, s"nShards must be positive, got $nShards")
-    require(!routed.columns.contains(shardCol),
-      s"input already has a '$shardCol' column — pass a different shardCol")
-    routed.withColumn(shardCol,
-      graft.functions.TextFunctions.shardId(col(keyCol), nShards))
-  }
-
-  /** Watermark-delay recommender — the hand-off from the batch disorder
-    * profile ([[graft.queries.PipelineQueries.pipeLateness]] /
-    * `pipe_watermark_fit`) to the `withWatermark` lateness budget a
-    * streaming deployment actually passes: the SMALLEST candidate delay
-    * whose kept-fraction over the measured per-user event-time disorder
-    * meets `targetKeptFrac`, or — when no candidate does — the ceiling
-    * of the maximum observed disorder (keeps everything the profile
-    * saw). Disorder is the pipe_lateness definition exactly: within each
-    * user's arrival sequence, how far the already-seen event-time
-    * high-water mark is ahead of the event. Control-plane cost: ONE
-    * 1-row aggregate collect over a user-keyed window — the same per-key
-    * sort a sessionization pass pays, never a global arrival sort; run
-    * it on a profiling slice, hand the returned string to
-    * `withWatermark(tsCol, delay)`. Returns e.g. "60 seconds".
-    */
-  def recommendWatermarkDelay(events: DataFrame, userCol: String,
-      seqCol: String, tsCol: String, targetKeptFrac: Double,
-      candidatesS: Seq[Long] = Seq(0L, 30L, 60L, 300L, 900L, 3600L)): String = {
-    import org.apache.spark.sql.expressions.Window
-    require(targetKeptFrac > 0.0 && targetKeptFrac <= 1.0,
-      s"targetKeptFrac must be in (0, 1], got $targetKeptFrac")
-    require(candidatesS.nonEmpty && candidatesS.forall(_ >= 0L),
-      "candidate delays must be non-negative seconds")
-    val w = Window.partitionBy(userCol).orderBy(seqCol)
-    val disorder = events
-      .select(col(userCol), col(seqCol), unix_micros(col(tsCol)).as("us"))
-      .withColumn("d_us", max("us").over(w) - col("us"))
-    val sortedC = candidatesS.distinct.sorted
-    val aggCols = (count(lit(1)).as("total") +:
-      sortedC.map(d => sum(when(col("d_us") <= d * 1000000L, 1L).otherwise(0L))
-        .as(s"k$d"))) :+ max("d_us").as("max_d_us")
-    val row = disorder.agg(aggCols.head, aggCols.tail: _*).collect().head
-    val total = row.getAs[Long]("total")
-    require(total > 0L, "cannot profile an empty event slice")
-    val secs = sortedC
-      .find(d => row.getAs[Long](s"k$d").toDouble / total >= targetKeptFrac)
-      .getOrElse(math.ceil(row.getAs[Long]("max_d_us") / 1e6).toLong)
-    s"$secs seconds"
-  }
-
-  /** Streaming ANN list assignment — knn_ivf_incremental's frozen-coarse-
-    * quantizer argmax ([[graft.queries.VectorQueries.knnIvfIncremental]])
-    * as a stateless streaming transform, completing the curation-gate
-    * family on the vector plane: each arriving embedding is assigned to
-    * its nearest IVF list so a streaming ingest can route vectors to
-    * index shards (or drop out-of-distribution ones) without touching
-    * the index. The quantizer is control-plane exactly as in the batch
-    * query: trained once on the EXISTING corpus, frozen, and entering
-    * the stream plan as nLists × dim literal doubles — so the per-record
-    * work is a pure shuffle-free projection (per-centroid cosine staged
-    * once behind a Generate barrier, argmax = array_position of the
-    * max, ties and all-NULL cosines to the lowest list id — the exact
-    * construction of `assignListsProjection`, spec-pinned stream ==
-    * batch). No state, no watermark; replay assigns identically because
-    * the quantizer is frozen literals.
-    */
-  def annAssignGate(routed: DataFrame, vecCol: String,
-      cent: Seq[(Int, Seq[Double])]): DataFrame = {
-    import graft.functions.VectorFunctions.cosine
-    // the gate passes the full input schema through and appends list_id,
-    // staging the per-centroid cosines under an internal name — reject
-    // inputs that would collide at analysis time with a clear message
-    require(!routed.columns.contains("list_id"),
-      "annAssignGate: input already has a 'list_id' column")
-    require(!routed.columns.contains("a_coss"),
-      "annAssignGate: input already has an 'a_coss' column (reserved staging name)")
-    val centArr = array(cent.map { case (_, cv) => array(cv.map(lit): _*) }: _*)
-    val listIds = array(cent.map { case (lid, _) => lit(lid) }: _*)
-    val staged = graft.functions.PipelineFunctions.stageBarrier(
-      routed, routed.columns.map(col).toSeq,
-      "a_coss" -> transform(centArr, cv => cosine(col(vecCol), cv)))
-    staged.select(routed.columns.map(col) :+
-      element_at(listIds,
-        coalesce(array_position(col("a_coss"), array_max(col("a_coss"))), lit(1L))
-          .cast("int")).as("list_id"): _*)
-  }
-
-  /** Control-plane builder for [[noveltyGate]]: the distinct k-shingles of
-    * an existing corpus aggregated into a dense Bloom bitmask
-    * (TextFunctions.BloomBits bits as BloomBits/32 longs — the exact
-    * text_bloom filter layout and hash family). The collect is bounded at
-    * 32 longs whatever the corpus size — the same frozen-index
-    * control-plane pattern as kmeansCentroids for [[annAssignGate]].
-    */
-  def noveltyBloom(docs: DataFrame, textCol: String, k: Int = 3,
-      bits: Int = graft.functions.TextFunctions.BloomBits): Seq[Long] = {
-    import graft.functions.TextFunctions._
-    require(bits > 0 && bits % 32 == 0, s"bits must be a positive multiple of 32, got $bits")
-    val words = bits / 32
-    val row = docs
-      .select(tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(explode(array_distinct(wordShingles(col("toks"), k))).as("sh"))
-      .select(explode(bloomPositions(h32(col("sh")), bits)).as("p"))
-      .select((col("p") / 32).cast("int").as("w"), bloomBit(col("p")).as("bit"))
-      .groupBy("w").agg(bit_or(col("bit")).as("bits"))
-      .agg(map_from_entries(collect_list(struct(col("w"), col("bits")))).as("m"))
-      .select(transform(sequence(lit(0), lit(words - 1)),
-        w => coalesce(element_at(col("m"), w), lit(0L))).as("bloom"))
-      .collect()(0)
-    row.getSeq[Long](0)
-  }
-
-  /** Streaming shingle-novelty gate — text_novelty's question ("how much
-    * of this document has the corpus not seen?") answered per arriving
-    * record against a FROZEN corpus: the existing corpus's shingles live
-    * in a Bloom bitmask ([[noveltyBloom]]) entering the plan as
-    * literal longs (the filter geometry travels with the mask, so
-    * deployments size m to their corpus), and each record's distinct
-    * shingles probe it with the text_bloom hash family. Appends `n_shingles` and
-    * `novelty` (share of shingles NOT in the filter; null when the text
-    * has fewer than k tokens). Stateless, shuffle-free, watermark-free —
-    * replay scores identically because the filter is frozen literals.
-    * Bloom error is one-sided exactly the safe way round: a false
-    * positive UNDERCOUNTS novelty (a genuinely novel shingle can look
-    * seen), so a novelty-threshold admission gate never admits
-    * duplicates it was told to stop; it can only be slightly
-    * over-conservative (~(n_corpus·k/m)^k per probe).
-    */
-  def noveltyGate(routed: DataFrame, textCol: String, bloom: Seq[Long],
-      k: Int = 3): DataFrame = {
-    import graft.functions.TextFunctions._
-    require(bloom.nonEmpty, "noveltyGate: empty bloom bitmask")
-    val bits = bloom.length * 32 // geometry travels with the mask
-    for (c <- Seq("n_shingles", "novelty", "g_shs"))
-      require(!routed.columns.contains(c),
-        s"noveltyGate: input already has a '$c' column (reserved)")
-    val bloomArr = array(bloom.map(lit): _*)
-    val staged = stageBarrier(routed, routed.columns.map(col).toSeq,
-      "g_shs" -> array_distinct(wordShingles(tokens(col(textCol)), k)))
-    val n = size(col("g_shs"))
-    val nSeen = size(filter(col("g_shs"), sh =>
-      forall(bloomPositions(h32(sh), bits), p => bloomMember(bloomArr, p))))
-    staged.select(routed.columns.map(col) ++ Seq(
-      n.cast("long").as("n_shingles"),
-      when(n > 0, round((n - nSeen).cast("double") / n.cast("double"), 6))
-        .as("novelty")): _*)
-  }
-
-  /** Streaming Count-Min build — the batch text_cms as a continuously
-    * maintained aggregation: tokens hash into (row, bucket) counters,
-    * update-mode emits changed counters per micro-batch. The state store
-    * holds EXACTLY depth × width counters forever — constant state with
-    * no watermark required, the property that makes sketches the right
-    * streaming profile structure (an exact distinct/top-k would grow
-    * state with the key space). Estimation stays the batch-side min
-    * across rows against the latest counter snapshot.
-    */
-  def cmsStream(input: DataFrame, tokenCol: String,
-      depth: Int = 4, width: Int = 1024): DataFrame =
-    input
-      .select(explode(split(col(tokenCol), " ")).as("tok"))
-      .select(col("tok"), explode(sequence(lit(0), lit(depth - 1))).as("r"))
-      .select(col("r"),
-        pmod(graft.functions.TextFunctions.h32(col("tok"), col("r")), lit(width)).as("b"))
-      .groupBy("r", "b").agg(count(lit(1)).as("c"))
-
-  /** Streaming heavy hitters — sharded SpaceSaving (see [[TopKStream]]):
-    * tokens route to `shards` summaries of at most `k` counters each, so
-    * state is shards × k rows whatever the vocabulary. Read the latest
-    * snapshot per (shard, token) and union for the global top-k.
-    */
-  def topkStream(input: DataFrame, tokenCol: String,
-      k: Int = 32, shards: Int = 16): Dataset[TopKStream.Hit] = {
-    import input.sparkSession.implicits._
-    val toks = input
-      .select(explode(split(col(tokenCol), " ")).as("token"))
-      .select(
-        pmod(graft.functions.TextFunctions.h32(col("token")), lit(shards))
-          .cast("int").as("shard"),
-        col("token"))
-      .as[TopKStream.Tok]
-    TopKStream(toks, k)
-  }
-
-  /** Streaming fixed-k per-group sample (see [[FixedKStream]]): keep
-    * the k smallest-hash-rank record ids per group — converges to
-    * exactly the batch sample_fixed_k winner set on the same records.
-    */
-  def fixedKStream(input: DataFrame, groupCol: String, idCol: String,
-      k: Int = 50): Dataset[FixedKStream.Sample] = {
-    import input.sparkSession.implicits._
-    FixedKStream(
-      input.select(col(groupCol).cast("string").as("group"),
-        col(idCol).cast("long").as("id")).as[FixedKStream.Rec], k)
-  }
-
-  /** Trending top-k — [[TopKWindowedStream]] over an arbitrary
-    * (event-time, token) projection: tumbling `windowSecs` windows,
-    * `shards` SpaceSaving summaries of `k` counters each per window,
-    * watermark `delay` driving per-window finalization. Tokens shard by
-    * the portable h32 so a token always lands in the same summary.
-    */
-  def trendingTopkStream(input: DataFrame, tsCol: String, tokenCol: String,
-      windowSecs: Int, shards: Int = 4, k: Int = 10,
-      delay: String = "10 minutes"): Dataset[TopKWindowedStream.WHit] = {
-    import input.sparkSession.implicits._
-    require(windowSecs > 0 && shards > 0 && k > 0,
-      s"windowSecs/shards/k must be positive, got $windowSecs/$shards/$k")
-    input.withWatermark(tsCol, delay)
-      .withColumn("w", window(col(tsCol), s"$windowSecs seconds"))
-      .select(col(tsCol).as("ts"),
-        unix_millis(col("w.start")).as("windowStart"),
-        pmod(graft.functions.TextFunctions.h32(col(tokenCol).cast("string")),
-          lit(shards)).cast("int").as("shard"),
-        col(tokenCol).cast("string").as("token"))
-      .as[TopKWindowedStream.WTok]
-      .transform(TopKWindowedStream(_, windowSecs * 1000L, k))
-  }
-
-  /** Streaming WEIGHTED fixed-k per-group sample — [[WeightedKStream]]
-    * (the batch sample_weighted's A-ES criterion as maintained state)
-    * over an arbitrary (group, id, weight) projection of the stream.
-    */
-  def weightedKStream(input: DataFrame, groupCol: String, idCol: String,
-      weightCol: String, k: Int = 50): Dataset[WeightedKStream.Sample] = {
-    import input.sparkSession.implicits._
-    WeightedKStream(
-      input.select(col(groupCol).cast("string").as("group"),
-        col(idCol).cast("long").as("id"),
-        col(weightCol).cast("double").as("weight")).as[WeightedKStream.Rec], k)
-  }
-
   /** Content-keyed streaming exact dedup — the batch dedup_exact as a
     * stream, layered on [[dedupStream]]: the dedup key is the md5
     * FINGERPRINT of the payload text, not the text itself, so a state row
     * costs 32 bytes + timestamp whatever the document size — at
     * 100 TB/day the state store holds the horizon's distinct-hash set,
-    * never its text (the exact counterpart of NearDupStream's near-dup
-    * bucket state).
+    * never its text.
     */
   def dedupStreamByContent(routed: DataFrame, textCol: String,
       watermark: String = "10 minutes"): DataFrame =
     dedupStream(routed.withColumn("fp", md5(col(textCol))), Seq("fp"), watermark)
-
-  /** Streaming HyperLogLog build — the batch text_hll as a continuously
-    * maintained aggregation: per (key, register-index), the max leading-
-    * zero rank. State is EXACTLY |keys| × 2^p register rows forever —
-    * like [[cmsStream]], constant state per key with no watermark, where
-    * an exact streaming distinct would grow state with the value space.
-    * Registers use the same h32 / idx / rho construction as the batch
-    * text_hll oracle, so a snapshot of this state plugs straight into
-    * the same alpha / linear-counting estimate. Update mode emits only
-    * registers whose max advanced in the micro-batch.
-    */
-  def hllStream(input: DataFrame, keyCol: String, tokenCol: String,
-      p: Int = 8): DataFrame = {
-    val suffixBits = 32 - p
-    val div = 1L << suffixBits
-    input
-      .select(col(keyCol).as("k"), explode(split(col(tokenCol), " ")).as("tok"))
-      .select(col("k"),
-        graft.functions.TextFunctions.h32(col("tok")).as("hv"))
-      .select(col("k"),
-        (col("hv") / div).cast("int").as("idx"),
-        when(pmod(col("hv"), lit(div)) === 0, lit(suffixBits + 1))
-          .otherwise(lit(suffixBits + 1) - length(bin(pmod(col("hv"), lit(div)))))
-          .as("rho"))
-      .groupBy("k", "idx").agg(max("rho").as("mr"))
-  }
-
-  /** Streaming exponentially-decayed activity counter per key — the
-    * batch pipe_recency_weight folded incrementally (see [[DecayStream]]
-    * for the re-basing algebra and state bound). Input: any (key,
-    * event-time) projection; emits per key the decayed weight AT the
-    * key's newest seen event time — one multiply re-bases it to any
-    * later "now".
-    */
-  def decayStream(input: DataFrame, keyCol: String,
-      tsCol: String): Dataset[DecayStream.Decayed] = {
-    import input.sparkSession.implicits._
-    DecayStream(
-      input.select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("tsUs")).as[DecayStream.Ev])
-  }
-
-  /** Exact windowed distinct-user counts — the streaming form of the
-    * batch pipe_rolling_active's DAU leg: tumbling event-time windows,
-    * COUNT(DISTINCT user) per window, exact. Two chained stateful
-    * operators (Spark's multiple-stateful-operator support): a
-    * streaming dedup on (window, user) — state is one row per distinct
-    * user per un-finalized window, expired by the watermark — followed
-    * by a windowed count over the deduped rows, finalized in append
-    * mode when the watermark passes window end. That state bound is the
-    * scale contract: per-window DAU rows, not events; a day window at
-    * 100 TB holds |DAU| keys across the cluster's state stores, the
-    * same cardinality the batch day-grain aggregate shuffles — when
-    * even that is too large, [[hllStream]]'s register maintenance is
-    * the constant-state fallback. Works identically on a batch frame
-    * (dedup + aggregate), which is what the spec pins stream output
-    * against.
-    */
-  def dauStream(input: DataFrame, tsCol: String, userCol: String,
-      windowSecs: Int, delay: String = "10 minutes"): DataFrame = {
-    require(windowSecs > 0, s"windowSecs must be positive, got $windowSecs")
-    input
-      .withWatermark(tsCol, delay)
-      .select(window(col(tsCol), s"$windowSecs seconds").as("w"),
-        col(userCol).as("u"))
-      .dropDuplicates("w", "u")
-      .groupBy(col("w"))
-      .agg(count(lit(1)).as("n_distinct"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("n_distinct"))
-  }
-
-  /** Gap-based sessions per stream over event time — the streaming form of
-    * the batch pipe_sessionize query, via the built-in session_window
-    * (state store managed by Spark; watermark bounds state growth).
-    * Works identically on batch DataFrames.
-    */
-  def sessionStats(routed: DataFrame, gapSecs: Int, watermark: String = "10 minutes"): DataFrame =
-    routed
-      .withWatermark("arrival_ts", watermark)
-      .groupBy(session_window(col("arrival_ts"), s"$gapSecs seconds").as("w"), col("stream_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("valid"), 1L).otherwise(0L)).as("n_valid"))
-      .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
-        col("stream_id"), col("n_events"), col("n_valid"))
 }

@@ -151,22 +151,4 @@ class ClaimCommitterSpec extends SparkTestBase {
       assert(ids(root) == Seq(1L, 2L))
     }
   }
-
-  test("claimMeta settles once through the conditional-put committer, and " +
-      "the full replica seed path works on it") {
-    withCommitter(new TornCommitter(crashAfterFirstChild = false)) {
-      val p = Files.createTempDirectory("cps_rp").toString
-      val r = Files.createTempDirectory("cps_rr").toString
-      ClusteredTable.append(mk(Seq((1L, 1, 0), (2L, 2, 0))), p, "00")
-      ClusteredTable.optimize(spark, p, "d1", "d2", 4, 16) // v=0
-      assert(graft.streaming.ReplicaStream.catchUp(spark, p, r, Seq("id")) == 0L)
-      // the settled claim is put-committed: marker + value both durable
-      assert(new java.io.File(r, ".claim-_seed.claim").isFile)
-      assert(new java.io.File(r, "_seed.claim/v").isFile)
-      // converged, and a replay tick is a no-op
-      assert(graft.streaming.ReplicaStream.catchUp(spark, p, r, Seq("id")) == 0L)
-      val a = ClusteredTable.read(spark, r).select("id").as[Long].collect().toSeq.sorted
-      assert(a == Seq(1L, 2L))
-    }
-  }
 }

@@ -89,6 +89,23 @@ class MqttSourceSpec extends SparkTestBase {
     }
   }
 
+  test("a broker going down under a connected client records the cause of each reconnect") {
+    val broker = new MqttTestBroker()
+    val client = new MqttClient(broker.url, Seq("#"), reconnectBackoffMillis = 50).start()
+    try {
+      assert(client.awaitConnected())
+      assert(client.lastCause.get() == null)
+      broker.close()
+      var tries = 0
+      while (client.reconnects.get() < 2 && tries < 100) { Thread.sleep(20); tries += 1 }
+      assert(client.reconnects.get() >= 2, "the client must keep retrying")
+      // the first drop is the severed socket; every retry after it is
+      // refused because nothing listens on the port any more
+      assert(client.lastCause.get().isInstanceOf[java.net.ConnectException],
+        s"cause: ${client.lastCause.get()}")
+    } finally client.close()
+  }
+
   test("idle watchdog reconnects the client after data timeout") {
     val broker = new MqttTestBroker()
     try {

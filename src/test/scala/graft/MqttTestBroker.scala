@@ -26,11 +26,13 @@ class MqttTestBroker(port0: Int = 0) extends AutoCloseable {
     val unacked = new java.util.concurrent.ConcurrentHashMap[Int, (String, Array[Byte])]()
   }
   private val subs = new CopyOnWriteArrayList[Sub]()
+  private val conns = new CopyOnWriteArrayList[Socket]()
 
   private val acceptThread = new Thread(() => {
     while (running.get()) {
       try {
         val s = server.accept()
+        conns.add(s)
         new Thread(() => handle(s), "mqtt-broker-conn").start()
       } catch { case NonFatal(_) => () }
     }
@@ -58,6 +60,7 @@ class MqttTestBroker(port0: Int = 0) extends AutoCloseable {
     } catch { case NonFatal(_) => () }
     finally {
       subs.removeIf(_.socket eq s)
+      conns.remove(s)
       try s.close() catch { case NonFatal(_) => () }
     }
   }
@@ -104,8 +107,11 @@ class MqttTestBroker(port0: Int = 0) extends AutoCloseable {
       }
     }
 
+  /** Stops accepting and drops every open connection, as a broker that
+    * goes down does. */
   override def close(): Unit = {
     running.set(false)
     try server.close() catch { case NonFatal(_) => () }
+    conns.forEach(c => try c.close() catch { case NonFatal(_) => () })
   }
 }

@@ -261,28 +261,6 @@ class PropertiesSpec extends SparkTestBase {
     assert(got.exists { case (_, nTrue, nEst) => nEst > nTrue })
   }
 
-  test("SpaceSaving fold: est>=true, est-err<=true, capacity k, heavy hitters resident") {
-    val streamG = for {
-      n <- Gen.choose(20, 300)
-      toks <- Gen.listOfN(n, Gen.oneOf((0 until 12).map(i => s"t$i")))
-    } yield toks
-    samples(streamG, 30).foreach { stream =>
-      val k = 4
-      val m = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-      stream.foreach(t => graft.streaming.TopKStream.foldToken(m, t, k))
-      val truth = stream.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      assert(m.size <= k)
-      m.foreach { case (tok, (est, err)) =>
-        assert(est >= truth(tok), s"$tok undercounted")
-        assert(est - err <= truth(tok), s"$tok lower bound violated")
-      }
-      // any token with true count > N/k must be resident (SpaceSaving thm)
-      val threshold = stream.size.toDouble / k
-      truth.collect { case (tok, c) if c > threshold => tok }
-        .foreach(tok => assert(m.contains(tok), s"heavy hitter $tok evicted"))
-    }
-  }
-
   test("hilbertKey == the classic xy2d transform on every cell; bijective; unit steps") {
     // independent reference: Wikipedia's xy2d, straight imperative port
     def xy2d(n: Int, x0: Int, y0: Int): Int = {
@@ -359,26 +337,6 @@ class PropertiesSpec extends SparkTestBase {
         val (xs, _, _) = cases(i)
         assert(m == ref(xs, a, b), s"xs=$xs a=$a b=$b got=$m exp=${ref(xs, a, b)}")
       }
-    }
-  }
-
-  test("DecayStream.fold: any batch split equals the closed form at the max ts") {
-    import graft.streaming.DecayStream
-    val lam = DecayStream.LambdaPerUs
-    val tsGen = Gen.listOfN(12, Gen.choose(0L, 30L * 86400000000L)) // ≤30 days in µs
-    val cutGen = Gen.listOfN(3, Gen.choose(0, 12))
-    samples(Gen.zip(tsGen, cutGen), 60).foreach { case (ts, cuts) =>
-      val sorted = (cuts :+ 0 :+ ts.length).distinct.sorted
-      val batches = sorted.zip(sorted.tail).map { case (a, b) => ts.slice(a, b) }
-      val folded = batches.foldLeft(DecayStream.DecayState(Long.MinValue, 0.0, 0L))(
-        DecayStream.fold)
-      if (ts.nonEmpty) {
-        val base = ts.max
-        val exact = ts.map(t => math.exp(-lam * (base - t))).sum
-        assert(folded.baseUs == base && folded.n == ts.length)
-        assert(math.abs(folded.sum - exact) < 1e-9,
-          s"split $sorted: ${folded.sum} != $exact")
-      } else assert(folded.n == 0L)
     }
   }
 }

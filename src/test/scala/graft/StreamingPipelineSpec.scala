@@ -249,64 +249,6 @@ class StreamingPipelineSpec extends SparkTestBase {
     assert(rows(Timestamp.valueOf("2026-01-01 10:05:00")) == 1L)
   }
 
-  test("session windows: gap-based sessions per stream (batch form)") {
-    val rows = Seq(
-      ("/t", """{"on":true,"watts":1.0}""", Timestamp.valueOf("2026-01-01 09:00:00")),
-      ("/t", """{"on":true,"watts":2.0}""", Timestamp.valueOf("2026-01-01 09:00:20")),
-      ("/t", "bad json", Timestamp.valueOf("2026-01-01 09:00:40")),
-      // > 60s gap -> new session
-      ("/t", """{"on":true,"watts":3.0}""", Timestamp.valueOf("2026-01-01 09:05:00")))
-      .toDF("topic", "payload", "arrival_ts")
-    val cfg = GraftConfig(payloadSchema = schema, fixedStreamId = Some("s1"))
-    val sessions = GraftPipeline.sessionStats(GraftPipeline.plan(rows, cfg), gapSecs = 60)
-      .orderBy("session_start")
-      .select("n_events", "n_valid").as[(Long, Long)].collect().toSeq
-    assert(sessions == Seq((3L, 2L), (1L, 1L)))
-  }
-
-  test("sessionStats on a REAL stream: sessions merge across micro-batches, " +
-      "watermark finalizes, finalized rows == batch form") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L + sec))
-    val mem = MemoryStream[(String, Timestamp, Boolean)]
-    val q = GraftPipeline.sessionStats(
-        mem.toDF().toDF("stream_id", "arrival_ts", "valid"),
-        gapSecs = 60, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("graft_sessions_stream")
-      .outputMode("append").start()
-    try {
-      // batch 1 opens a session; batch 2 EXTENDS it (the state-store
-      // session merge a batch groupBy gets for free and a stream must
-      // do across triggers); batch 3 is 300s later, so the watermark
-      // passes the first session's end and finalizes it
-      mem.addData(("s1", ts(0), true), ("s1", ts(20), false))
-      q.processAllAvailable()
-      mem.addData(("s1", ts(40), true))
-      q.processAllAvailable()
-      mem.addData(("s1", ts(300), true))
-      q.processAllAvailable()
-      mem.addData(("s1", ts(310), true)) // extra trigger to flush the final
-      q.processAllAvailable()
-      val streamed = spark.table("graft_sessions_stream")
-        .select("session_start", "session_end", "stream_id", "n_events", "n_valid")
-        .collect().map(_.toSeq).toSeq
-      // exactly one finalized session: [0, 40+60), 3 events, 2 valid
-      assert(streamed == Seq(Seq(ts(0), ts(100), "s1", 3L, 2L)), streamed.toString)
-      // the same operator over the same rows as a BATCH frame agrees on
-      // every finalized session (the batch also emits the open one)
-      val batch = GraftPipeline.sessionStats(
-          Seq(("s1", ts(0), true), ("s1", ts(20), false), ("s1", ts(40), true),
-            ("s1", ts(300), true), ("s1", ts(310), true))
-            .toDF("stream_id", "arrival_ts", "valid"),
-          gapSecs = 60, watermark = "0 seconds")
-        .orderBy("session_start")
-        .collect().map(_.toSeq).toSeq
-      assert(batch.head == streamed.head)
-      assert(batch == Seq(Seq(ts(0), ts(100), "s1", 3L, 2L),
-        Seq(ts(300), ts(370), "s1", 2L, 2L)))
-    } finally q.stop()
-  }
-
   test("streaming exact dedup drops repeats within the watermark") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, String, Timestamp)]
@@ -331,510 +273,6 @@ class StreamingPipelineSpec extends SparkTestBase {
     assert(spark.table("graft_dedup").count() == 2) // 1.0-watts once + 2.0-watts
   }
 
-  test("sampleGate: deterministic, replay-stable, batch-identical selection") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(String, Timestamp)]
-    val input = mem.toDF().toDF("key", "arrival_ts")
-    val gated = GraftPipeline.sampleGate(input, "key", 0.5)
-    val q = gated.writeStream.format("memory").queryName("graft_gate")
-      .outputMode("append").start()
-    val rows = (0 until 200).map(i => (s"k$i", Timestamp.valueOf("2026-01-01 10:00:00")))
-    mem.addData(rows: _*)
-    q.processAllAvailable()
-    // replay the same keys — the gate must make identical decisions
-    mem.addData(rows: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_gate").select("key").collect().map(_.getString(0))
-    assert(streamed.length % 2 == 0) // every kept key kept twice
-    val batch = GraftPipeline.sampleGate(
-      rows.toDF("key", "arrival_ts"), "key", 0.5)
-      .select("key").collect().map(_.getString(0)).toSet
-    assert(streamed.toSet == batch) // stream and batch agree exactly
-    assert(batch.size > 50 && batch.size < 150) // ~rate, not degenerate
-  }
-
-  test("gopherGate: stream decisions == batch text_gopher_rules keeps") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sfDir = "/root/testdata/sf0.001"
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = GraftPipeline.gopherGate(mem.toDF().toDF("doc_id", "text"), "text")
-      .writeStream.format("memory").queryName("graft_gopher_gate")
-      .outputMode("append").start()
-    mem.addData(docs: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_gopher_gate")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val batchKeep = graft.queries.TextQueries.textGopherRules(spark, sfDir)
-      .filter(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(streamed == batchKeep) // shared gopherKeepFromParts: no divergence
-    assert(streamed.nonEmpty && streamed.size < docs.size) // both rules fire
-    // gate passes the input schema through untouched
-    val kept = GraftPipeline.gopherGate(Seq((1L, "x")).toDF("doc_id", "text"), "text")
-    assert(kept.columns.toSeq == Seq("doc_id", "text"))
-  }
-
-  test("classifierGate: stream decisions == batch text_classifier_score keeps") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sfDir = "/root/testdata/sf0.001"
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = GraftPipeline.classifierGate(mem.toDF().toDF("doc_id", "text"), "text")
-      .writeStream.format("memory").queryName("graft_clf_gate")
-      .outputMode("append").start()
-    mem.addData(docs: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_clf_gate")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val batchKeep = graft.queries.TextQueries.textClassifierScore(spark, sfDir)
-      .filter(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(streamed == batchKeep) // shared weights + threshold: no divergence
-    assert(streamed.nonEmpty && streamed.size < docs.size)
-  }
-
-  test("composed curation chain: gopher → classifier → shard in ONE stateless plan == batch") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sfDir = "/root/testdata/sf0.001"
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val mem = MemoryStream[(Long, String)]
-    // the production ingest shape: quality gates then shard-homed routing,
-    // all composed into one streaming plan
-    val chained = GraftPipeline.shardGate(
-      GraftPipeline.classifierGate(
-        GraftPipeline.gopherGate(mem.toDF().toDF("doc_id", "text"), "text"),
-        "text"),
-      "doc_id", 8)
-    val q = chained.writeStream.format("memory").queryName("graft_curation_chain")
-      .outputMode("append").start()
-    mem.addData(docs: _*)
-    q.processAllAvailable()
-    // the whole chain is stateless projections/filters — no state store
-    // operator anywhere, so replay is benign and state is zero at any rate
-    assert(q.lastProgress == null || q.lastProgress.stateOperators.isEmpty)
-    q.stop()
-    val streamed = spark.table("graft_curation_chain")
-      .select("doc_id", "shard").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val gopherKeep = graft.queries.TextQueries.textGopherRules(spark, sfDir)
-      .filter(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    val clfKeep = graft.queries.TextQueries.textClassifierScore(spark, sfDir)
-      .filter(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    val shards = graft.queries.TextQueries.corpusShuffle(spark, sfDir)
-      .select("doc_id", "shard").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val expect = (gopherKeep intersect clfKeep).map(id => id -> shards(id)).toMap
-    assert(streamed == expect) // keeps AND shard homes match batch exactly
-    assert(streamed.nonEmpty && streamed.size < docs.size)
-  }
-
-  test("shardGate: stream shard ids == batch corpus_shuffle layout") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sfDir = "/root/testdata/sf0.001"
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = GraftPipeline.shardGate(mem.toDF().toDF("doc_id", "text"), "doc_id", 8)
-      .writeStream.format("memory").queryName("graft_shard_gate")
-      .outputMode("append").start()
-    mem.addData(docs: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_shard_gate")
-      .select("doc_id", "shard").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val batch = graft.queries.TextQueries.corpusShuffle(spark, sfDir)
-      .select("doc_id", "shard").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(streamed == batch) // shared TextFunctions.shardId: no divergence
-    assert(streamed.values.toSet.size == 8) // every shard populated
-    // collision guard + validation
-    intercept[IllegalArgumentException] {
-      GraftPipeline.shardGate(Seq((1L, 2)).toDF("doc_id", "shard"), "doc_id", 8)
-    }
-    intercept[IllegalArgumentException] {
-      GraftPipeline.shardGate(Seq(Tuple1(1L)).toDF("doc_id"), "doc_id", 0)
-    }
-  }
-
-  test("annAssignGate: stream list assignments == batch frozen-quantizer argmax") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sfDir = "/root/testdata/sf0.001"
-    val e = graft.queries.VectorQueries.embProjection(spark, sfDir)
-    // mirror knn_ivf_incremental: quantizer trained (and frozen) on the
-    // OLD corpus; the vec_id % 10 == 9 slice is the arriving ingest
-    val old = e.filter(pmod(col("vec_id"), lit(10)) =!= 9)
-    val cent = graft.queries.VectorQueries.kmeansCentroids(old, nLists = 8, iters = 2)
-    val batchRows = e.filter(pmod(col("vec_id"), lit(10)) === 9)
-    val batchAssign = graft.queries.VectorQueries.assignListsProjection(batchRows, cent)
-      .select("vec_id", "list_id").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val ingest = batchRows.select(col("vec_id"), col("v")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = GraftPipeline.annAssignGate(mem.toDF().toDF("vec_id", "v"), "v", cent)
-      .writeStream.format("memory").queryName("graft_ann_assign")
-      .outputMode("append").start()
-    mem.addData(ingest: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_ann_assign")
-      .select("vec_id", "list_id").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(streamed == batchAssign) // same frozen literals: no divergence
-    assert(streamed.nonEmpty && streamed.values.toSet.size > 1) // routing is nontrivial
-    // gate passes the input schema through and appends list_id
-    assert(spark.table("graft_ann_assign").columns.toSeq == Seq("vec_id", "v", "list_id"))
-  }
-
-  test("noveltyGate: stream == batch; corpus docs read zero novelty, new docs positive") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sfDir = "/root/testdata/sf0.001"
-    val docs = graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    // frozen filter over the EXISTING corpus = even doc_ids; all docs arrive.
-    // m sized to the corpus (the deployment contract): 64 Kbit keeps the
-    // false-positive rate ~1e-6 for this corpus's ~1e3 distinct shingles,
-    // where the 1 Kbit text_bloom default would saturate
-    val old = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val bloom = GraftPipeline.noveltyBloom(old, "text", bits = 65536)
-    def toMap(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => r.getLong(0) -> (r.getLong(1), Option(r.get(2)))).toMap
-    val batch = toMap(GraftPipeline.noveltyGate(docs, "text", bloom)
-      .select("doc_id", "n_shingles", "novelty").collect())
-    val arriving = docs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = GraftPipeline.noveltyGate(mem.toDF().toDF("doc_id", "text"), "text", bloom)
-      .writeStream.format("memory").queryName("graft_novelty")
-      .outputMode("append").start()
-    mem.addData(arriving: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = toMap(spark.table("graft_novelty")
-      .select("doc_id", "n_shingles", "novelty").collect())
-    assert(streamed == batch) // frozen literals: no batch/stream divergence
-    // one-sided error, the safe way round: a corpus doc can NEVER read
-    // novel (no false negatives) ...
-    val oldIds = old.select("doc_id").collect().map(_.getLong(0)).toSet
-    val corpusNv = streamed.collect {
-      case (id, (_, Some(nv))) if oldIds(id) => nv.asInstanceOf[Double] }
-    assert(corpusNv.nonEmpty && corpusNv.forall(_ == 0.0))
-    // ... while unseen docs keep positive novelty despite false positives
-    val newNv = streamed.collect {
-      case (id, (_, Some(nv))) if !oldIds(id) => nv.asInstanceOf[Double] }
-    assert(newNv.exists(_ > 0.0))
-    // gate passes the input schema through and appends its two columns
-    assert(spark.table("graft_novelty").columns.toSeq ==
-      Seq("doc_id", "text", "n_shingles", "novelty"))
-  }
-
-  test("noveltyGate rejects reserved-column collisions and bad masks") {
-    import spark.implicits._
-    val bloom = Seq.fill(32)(0L)
-    val clash = Seq((1L, "a b c d", 0.5)).toDF("doc_id", "text", "novelty")
-    intercept[IllegalArgumentException](
-      GraftPipeline.noveltyGate(clash, "text", bloom))
-    val ok = Seq((1L, "a b c d")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException](
-      GraftPipeline.noveltyGate(ok, "text", Seq.empty))
-  }
-
-  test("watermark recommender: smallest profiled delay meeting the target fraction") {
-    val sfDir = "/root/testdata/sf0.001"
-    val ev = graft.Tables.events(spark, sfDir)
-    val cands = Seq(0L, 30L, 60L, 300L)
-    val target = 0.95
-    val delay = GraftPipeline.recommendWatermarkDelay(
-      ev, "user_id", "event_id", "ts", target, cands)
-    val secs = delay.split(" ").head.toLong
-    // pin against the what-if table the profile feeds: the recommended
-    // delay's kept_frac meets the target and every smaller candidate's
-    // does not (pipe_watermark_fit uses the same candidate grid)
-    val fit = graft.queries.PipelineQueries.pipeWatermarkFit(spark, sfDir)
-      .collect().map(r => r.getAs[Int]("delay_s").toLong -> r.getAs[Double]("kept_frac"))
-      .toMap
-    fit.keySet.intersect(cands.toSet) match { case ks => assert(ks == cands.toSet) }
-    cands.find(fit(_) >= target) match {
-      case Some(best) => assert(secs == best,
-        s"recommender must pick the smallest qualifying candidate ($best), got $secs")
-      case None => assert(secs > cands.max,
-        "with no qualifying candidate the fallback must exceed every candidate")
-    }
-    // the fallback path explicitly: if 0 s keeps less than everything, a
-    // target of 1.0 over candidates {0} must recommend covering the max
-    // observed disorder instead of returning the unqualified candidate
-    val all = GraftPipeline.recommendWatermarkDelay(
-      ev, "user_id", "event_id", "ts", 1.0, Seq(0L))
-    if (fit(0L) < 1.0) assert(all != "0 seconds") else assert(all == "0 seconds")
-  }
-
-  test("watermark recommender hand-off: the delay gates a streaming agg as profiled") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.streaming.OutputMode
-    // synthetic profile: user 0 emits t=0..99s in order, then 5 events
-    // re-emitted 50 s late (disorder exactly 50 s within the arrival seq)
-    def ts(s: Long) = new Timestamp(1700000000000L + s * 1000L)
-    val onTime = (0L until 100L).map(i => (0L, i, ts(i)))
-    val late = (0L until 5L).map(i => (0L, 100L + i, ts(50L + i))) // 50s behind hwm
-    val profile = (onTime ++ late).toDF("user_id", "event_id", "ts")
-    val rec = GraftPipeline.recommendWatermarkDelay(
-      profile, "user_id", "event_id", "ts", 1.0, Seq(0L, 10L, 60L))
-    assert(rec == "60 seconds") // smallest candidate covering the 50s tail
-
-    // replay in arrival order under each delay: a watermarked window-count
-    // drops the late rows iff the delay is below the profiled disorder
-    def runWith(delay: String): Long = {
-      val mem = MemoryStream[(Long, Long, Timestamp)]
-      val name = s"graft_wm_${delay.replace(' ', '_')}"
-      val q = mem.toDF().toDF("user_id", "event_id", "ts")
-        .withWatermark("ts", delay)
-        .groupBy(window(col("ts"), "10 seconds")).count()
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      mem.addData(onTime: _*)
-      q.processAllAvailable() // watermark now 99s - delay
-      mem.addData(late: _*)
-      q.processAllAvailable()
-      mem.addData((0L, 999L, ts(100000L))) // sentinel: close every window
-      q.processAllAvailable()
-      q.stop()
-      spark.table(name).filter(col("window.start") < ts(100000L))
-        .agg(sum("count")).collect().head.getLong(0)
-    }
-    assert(runWith(rec) == 105L)          // recommended delay keeps 100%
-    assert(runWith("0 seconds") == 100L)  // no budget: the 5 late rows drop
-  }
-
-  test("annAssignGate rejects inputs colliding with its output/staging columns") {
-    val cent = Seq(0 -> Seq(1.0, 0.0), 1 -> Seq(0.0, 1.0))
-    val clash1 = Seq((1L, Seq(1.0, 0.0), 5)).toDF("vec_id", "v", "list_id")
-    intercept[IllegalArgumentException](GraftPipeline.annAssignGate(clash1, "v", cent))
-    val clash2 = Seq((1L, Seq(1.0, 0.0), 5)).toDF("vec_id", "v", "a_coss")
-    intercept[IllegalArgumentException](GraftPipeline.annAssignGate(clash2, "v", cent))
-  }
-
-  test("piiScrub: stream redaction == batch; hits counted; schema + pii_hits") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = Seq(
-      (1L, "write to bob.smith@example.com or call 555-1234 today"),
-      (2L, "server 10.0.0.1 token sk-abcdef0123456789abcd"),
-      (3L, "nothing sensitive here"))
-    val mem = MemoryStream[(Long, String)]
-    val q = GraftPipeline.piiScrub(mem.toDF().toDF("doc_id", "text"), "text")
-      .writeStream.format("memory").queryName("graft_pii_scrub")
-      .outputMode("append").start()
-    mem.addData(rows: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("graft_pii_scrub")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val batch = GraftPipeline.piiScrub(rows.toDF("doc_id", "text"), "text")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed == batch) // identical bytes under replay/batch
-    val byId = streamed.map(t => t._1 -> t).toMap
-    assert(byId(1L)._2 == "write to <EMAIL> or call <PHONE> today")
-    assert(byId(1L)._3 == 2L)
-    assert(byId(2L)._2 == "server <IP> token <KEY>")
-    assert(byId(2L)._3 == 2L)
-    assert(byId(3L) == ((3L, "nothing sensitive here", 0L)))
-  }
-
-  test("qualityGate drops low-quality payload text, keeps schema") {
-    val docs = Seq(
-      ("good", "the quick brown fox jumps over the lazy dog and it is a fine day for that " * 3),
-      ("bad", "@@@@ #### $$$$ %%%% 1234 !!!!"))
-      .toDF("k", "body")
-    val kept = GraftPipeline.qualityGate(docs, "body", 0.5)
-    assert(kept.select("k").collect().map(_.getString(0)).toSeq == Seq("good"))
-    assert(kept.columns.toSeq == Seq("k", "body", "quality"))
-  }
-
-  test("topkStream: exact counts below capacity; SpaceSaving bounds under eviction") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // Phase A: vocabulary fits (k = 8 >= 4 distinct) -> counts are EXACT
-    val memA = MemoryStream[String]
-    val qA = GraftPipeline.topkStream(memA.toDF().toDF("body"), "body", k = 8, shards = 4)
-      .writeStream.format("memory").queryName("graft_topk_a")
-      .outputMode("update").start()
-    memA.addData("a b a", "c a")
-    qA.processAllAvailable()
-    memA.addData("a d b")
-    qA.processAllAvailable()
-    qA.stop()
-    // latest snapshot per (shard, token) across update-mode emissions
-    val snapA = spark.table("graft_topk_a")
-      .groupBy("shard", "token")
-      .agg(org.apache.spark.sql.functions.max("count").as("count"))
-      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-    assert(snapA == Map("a" -> 4L, "b" -> 2L, "c" -> 1L, "d" -> 1L))
-
-    // Phase B: k = 2, single shard -> eviction; SpaceSaving guarantees:
-    // est >= true, est - err <= true, summary never exceeds k
-    val memB = MemoryStream[String]
-    val qB = GraftPipeline.topkStream(memB.toDF().toDF("body"), "body", k = 2, shards = 1)
-      .writeStream.format("memory").queryName("graft_topk_b")
-      .outputMode("update").start()
-    memB.addData("a a a b c")
-    qB.processAllAvailable()
-    qB.stop()
-    val rowsB = spark.table("graft_topk_b")
-      .groupBy("token")
-      .agg(org.apache.spark.sql.functions.max("count").as("count"),
-        org.apache.spark.sql.functions.max("err").as("err"))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val truth = Map("a" -> 3L, "b" -> 1L, "c" -> 1L)
-    // the final summary holds exactly k survivors
-    val lastBatch = spark.table("graft_topk_b").collect()
-    assert(rowsB.keySet.size <= 3 && rowsB.contains("a"))
-    rowsB.foreach { case (tok, (est, err)) =>
-      assert(est >= truth(tok), s"$tok undercounted")
-      assert(est - err <= truth(tok), s"$tok bound violated")
-    }
-    // 'a' is a true heavy hitter (count > N/k = 2.5): must be resident
-    assert(rowsB("a")._1 == 3L && rowsB("a")._2 == 0L)
-    assert(lastBatch.nonEmpty)
-  }
-
-  test("decayStream: incremental fold equals the closed form under any batch split") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
-    val lam = DecayStream.LambdaPerUs
-    // one key, five events across ~3 days; closed form at the max ts
-    val secs = Seq(0L, 3600L, 90000L, 180000L, 259200L)
-    val usAtMax = secs.map(t => (259200L - t) * 1000000L)
-    val closedForm = usAtMax.map(d => math.exp(-lam * d)).sum
-    // split A: 2 + 3
-    val memA = MemoryStream[(String, java.sql.Timestamp)]
-    val qA = GraftPipeline.decayStream(memA.toDF().toDF("k", "ts"), "k", "ts")
-      .writeStream.format("memory").queryName("graft_decay_a")
-      .outputMode("update").start()
-    memA.addData(("view", ts(0)), ("view", ts(3600)))
-    qA.processAllAvailable()
-    memA.addData(("view", ts(90000)), ("view", ts(180000)), ("view", ts(259200)))
-    qA.processAllAvailable(); qA.stop()
-    // split B: 4 + 1 late row (older than the base — no re-base needed)
-    val memB = MemoryStream[(String, java.sql.Timestamp)]
-    val qB = GraftPipeline.decayStream(memB.toDF().toDF("k", "ts"), "k", "ts")
-      .writeStream.format("memory").queryName("graft_decay_b")
-      .outputMode("update").start()
-    memB.addData(("view", ts(3600)), ("view", ts(90000)), ("view", ts(180000)),
-      ("view", ts(259200)))
-    qB.processAllAvailable()
-    memB.addData(("view", ts(0))) // late
-    qB.processAllAvailable(); qB.stop()
-    for (tbl <- Seq("graft_decay_a", "graft_decay_b")) {
-      val last = spark.table(tbl).filter(col("n") === 5L).collect()
-      assert(last.length == 1, s"$tbl missing the n=5 snapshot")
-      val r = last(0)
-      assert(r.getLong(1) == 259200L * 1000000L) // base = max event time
-      assert(math.abs(r.getDouble(3) - closedForm) < 1e-9,
-        s"$tbl weight ${r.getDouble(3)} != closed form $closedForm")
-    }
-  }
-
-  test("dauStream: exact per-window distinct users, append finalization, batch==stream") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
-    val mem = MemoryStream[(java.sql.Timestamp, Long)]
-    val q = GraftPipeline.dauStream(
-        mem.toDF().toDF("ts", "user_id"), "ts", "user_id",
-        windowSecs = 60, delay = "0 seconds")
-      .writeStream.format("memory").queryName("graft_dau")
-      .outputMode("append").start()
-    // window [0,60): user 1 twice + user 2 -> 2 distinct; [60,120): users 2,3 -> 2
-    val data = Seq((ts(10), 1L), (ts(11), 1L), (ts(20), 2L), (ts(70), 2L), (ts(80), 3L))
-    mem.addData(data: _*)
-    q.processAllAvailable()
-    // advance the watermark far past both windows -> append-mode finalization
-    mem.addData((ts(500), 9L))
-    q.processAllAvailable()
-    mem.addData((ts(510), 9L))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("graft_dau")
-      .filter(col("window_start") < ts(120)).collect()
-      .map(r => r.getTimestamp(0).toInstant.getEpochSecond -> r.getLong(2)).toMap
-    assert(out == Map(0L -> 2L, 60L -> 2L))
-    // the SAME plan over the same rows as a batch frame agrees
-    val batch = GraftPipeline.dauStream(
-        spark.createDataFrame(data ++ Seq((ts(500), 9L), (ts(510), 9L)))
-          .toDF("ts", "user_id"), "ts", "user_id",
-        windowSecs = 60, delay = "0 seconds")
-      .filter(col("window_start") < ts(120)).collect()
-      .map(r => r.getTimestamp(0).toInstant.getEpochSecond -> r.getLong(2)).toMap
-    assert(batch == out)
-  }
-
-  test("trendingTopkStream: per-window exact counts, watermark finalization, no resurrection") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ts(sec: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec))
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val q = GraftPipeline.trendingTopkStream(
-        mem.toDF().toDF("ts", "token"), "ts", "token",
-        windowSecs = 60, shards = 2, k = 10, delay = "0 seconds")
-      .writeStream.format("memory").queryName("graft_trending")
-      .outputMode("update").start()
-    // window [0, 60): a×3, b×1; window [60, 120): c×1
-    mem.addData((ts(10), "a"), (ts(11), "a"), (ts(20), "b"), (ts(30), "a"), (ts(70), "c"))
-    q.processAllAvailable()
-    val interim = spark.table("graft_trending")
-      .filter(col("windowStart") === 0L && !col("fin")).collect()
-      .map(r => r.getString(2) -> r.getLong(3)).toMap
-    assert(interim == Map("a" -> 3L, "b" -> 1L)) // exact below capacity
-    // advance the watermark far past window 0's end -> final emission
-    mem.addData((ts(500), "z"))
-    q.processAllAvailable()
-    mem.addData((ts(510), "z")) // extra batch so the due timeout fires
-    q.processAllAvailable()
-    val fin0 = spark.table("graft_trending")
-      .filter(col("windowStart") === 0L && col("fin")).collect()
-      .map(r => r.getString(2) -> r.getLong(3)).toMap
-    assert(fin0 == Map("a" -> 3L, "b" -> 1L)) // one final snapshot, exact
-    // a late row for the finalized window is dropped, never resurrected
-    val before = spark.table("graft_trending").filter(col("windowStart") === 0L).count()
-    mem.addData((ts(15), "a"))
-    q.processAllAvailable()
-    q.stop()
-    val after = spark.table("graft_trending").filter(col("windowStart") === 0L).count()
-    assert(after == before) // no new window-0 emissions of any kind
-  }
-
-  test("cmsStream: constant-state counters accumulate; estimates never undercount") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[String]
-    val q = GraftPipeline.cmsStream(mem.toDF().toDF("body"), "body", depth = 4, width = 16)
-      .writeStream.format("memory").queryName("graft_cms")
-      .outputMode("update").start()
-    mem.addData("alpha beta alpha", "gamma alpha")
-    q.processAllAvailable()
-    mem.addData("alpha beta")
-    q.processAllAvailable()
-    q.stop()
-    // latest counter per (r, b) across update-mode emissions
-    val counters = spark.table("graft_cms")
-      .groupBy("r", "b").agg(org.apache.spark.sql.functions.max("c").as("c"))
-      .select(col("r").cast("int"), col("b").cast("int"), col("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(counters.size <= 4 * 16) // state bounded by depth x width
-    def estimate(tok: String): Long = (0 until 4).map { r =>
-      val b = spark.range(1).select(
-        pmod(graft.functions.TextFunctions.h32(lit(tok), lit(r)), lit(16)).cast("int"))
-        .head().getInt(0)
-      counters.getOrElse((r, b), 0L)
-    }.min
-    assert(estimate("alpha") >= 4) // 4 true occurrences across both batches
-    assert(estimate("beta") >= 2)
-    assert(estimate("gamma") >= 1)
-  }
-
   test("dedupStreamByContent: payload-identical records collapse within the horizon") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, Timestamp)]
@@ -854,103 +292,5 @@ class StreamingPipelineSpec extends SparkTestBase {
     val bodies = spark.table("graft_dedup_stream")
       .select("body").collect().map(_.getString(0)).toSeq
     assert(bodies.sorted == Seq("a different document", "the quick brown fox"))
-  }
-
-  test("hllStream: registers equal the batch construction; state is bounded") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(String, String)]
-    val q = GraftPipeline.hllStream(mem.toDF().toDF("lang", "body"), "lang", "body", p = 4)
-      .writeStream.format("memory").queryName("graft_hll")
-      .outputMode("update").start()
-    mem.addData(("en", "alpha beta alpha gamma"), ("de", "der die das"))
-    q.processAllAvailable()
-    mem.addData(("en", "delta beta"), ("de", "der und"))
-    q.processAllAvailable()
-    q.stop()
-    // latest register value per (k, idx) across update-mode emissions
-    val got = spark.table("graft_hll")
-      .groupBy("k", "idx").agg(org.apache.spark.sql.functions.max("mr").as("mr"))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-    assert(got.size <= 2 * 16, s"state exceeded keys x 2^p: ${got.size}")
-    // batch reference: identical construction over the full token set
-    val batch = GraftPipeline.hllStream(
-      Seq(("en", "alpha beta alpha gamma"), ("de", "der die das"),
-        ("en", "delta beta"), ("de", "der und")).toDF("lang", "body"),
-      "lang", "body", p = 4)
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-    assert(got == batch)
-  }
-
-  test("stream-stream enrichment join matches only within the tolerance window") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ev = MemoryStream[(String, Double, Timestamp)]
-    val cal = MemoryStream[(String, Double, Timestamp)]
-    val events = ev.toDF().toDF("device", "reading", "arrival_ts")
-    val calib = cal.toDF().toDF("device", "offset", "arrival_ts")
-    val joined = GraftPipeline.enrichStream(events, calib, "device",
-      toleranceSecs = 60, watermark = "0 seconds")
-    val ck = Files.createTempDirectory("enrich_ck").toString
-    val q = joined.writeStream.format("memory").queryName("graft_enrich")
-      .outputMode("append").option("checkpointLocation", ck).start()
-
-    def t(s: String) = Timestamp.valueOf(s)
-    cal.addData(("d1", 0.5, t("2026-01-01 10:00:00")),
-      ("d2", 0.9, t("2026-01-01 10:00:00")))
-    ev.addData(
-      ("d1", 20.0, t("2026-01-01 10:00:30")),  // 30s after d1 calib: match
-      ("d1", 21.0, t("2026-01-01 10:02:00")),  // 120s after: outside tolerance
-      ("d3", 22.0, t("2026-01-01 10:00:30")))  // no calibration at all
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("graft_enrich")
-      .select("device", "reading", "r_offset").as[(String, Double, Double)]
-      .collect().toSet
-    assert(rows == Set(("d1", 20.0, 0.5)))
-  }
-
-  test("stateful per-stream counters report-and-reset via flatMapGroupsWithState") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.streaming.StatefulCounters
-    import graft.streaming.StatefulCounters.{In, Report}
-    val mem = MemoryStream[In]
-    val reports = StatefulCounters(mem.toDS(), intervalMillis = 500)
-    val ck = Files.createTempDirectory("state_ck").toString
-    val q = reports.writeStream.format("memory").queryName("graft_counts")
-      .outputMode("append").option("checkpointLocation", ck).start()
-
-    mem.addData(In("a", valid = true), In("a", valid = true), In("a", valid = false),
-      In("b", valid = true))
-    // With processing-time timeouts the engine keeps scheduling batches
-    // (the timeout clock advances every trigger), so processAllAvailable
-    // never quiesces — the timed-out groups' reports arrive on an
-    // auto-triggered batch; poll the sink with a deadline instead.
-    var tries = 0
-    while (spark.table("graft_counts").count() < 2 && tries < 200) {
-      Thread.sleep(200); tries += 1
-    }
-    q.stop()
-
-    val out = spark.table("graft_counts").as[Report].collect()
-      .map(r => r.streamId -> ((r.success, r.error))).toMap
-    assert(out("a") == ((2L, 1L)))
-    assert(out("b") == ((1L, 0L)))
-  }
-
-  test("idle watchdog fires after timeout, resets on data") {
-    var now = 0L
-    var fires = 0
-    val wd = new IdleWatchdog(1000, () => fires += 1, () => now)
-    // simulate: query starts at t=0; idle checks below threshold don't fire
-    now = 500
-    wd.onQueryIdle(null)
-    assert(fires == 0)
-    now = 1500
-    wd.onQueryIdle(null)
-    assert(fires == 1)
-    // does not re-fire while still idle
-    now = 3000
-    wd.onQueryIdle(null)
-    assert(fires == 1)
   }
 }
