@@ -65,7 +65,7 @@ import org.apache.spark.sql.functions._
   *
   * ENVELOPE CATALOG: each fold also lands `_envelopes/` inside the
   * version directory — one row per z-bucket with the fold-time min/max
-  * of the two clustered dimensions (as long). It is written into the
+  * of each clustered dimension (as long). It is written into the
   * STAGING directory before the claim, so data + manifest + catalog
   * publish through the same atomic rename and are consistent by
   * construction (one version, one catalog — the `_index/` argument).
@@ -389,8 +389,28 @@ object ClusteredTable {
       .parquet(new Path(dvRoot(root), s"x=$name").toString)
 
   /** Fold newest base + all un-folded deltas into the next z-ordered
-    * base version. Returns the new version id (or the current one if
-    * there was nothing to fold). Idempotent from any crash point.
+    * base version, clustered on the integer dimensions `dims` (k ≥ 1,
+    * via [[ZorderLayout.writeN]]; Morton generalizes to any k, hilbert
+    * stays 2-D and rejects loudly otherwise). Returns the new version id
+    * (or the current one if there was nothing to fold). Idempotent from
+    * any crash point.
+    *
+    * The fold publishes a k-dim envelope catalog — per z-bucket, per-dim
+    * min/max as `mn<i>`/`mx<i>` with the dimension name recorded as
+    * `d<i>_col`; a reader asking for a prefix of the folded dims still
+    * gets true bounds (see [[envelopes]]).
+    *
+    * ZONE MAPS (`statsCols`): additionally record per-bucket min/max
+    * for columns that are NOT clustered dimensions — the Delta/Iceberg
+    * file-stats idea at bucket grain. They ride the same catalog
+    * artifact (`s<i>_col`/`s<i>_mn`/`s<i>_mx` columns, nullable bounds
+    * for evolution-era buckets with only NULLs), publish under the same
+    * claim, and let the source prune on ANY mapped column a filter
+    * touches ([[zoneMaps]]) — useful exactly when a column correlates
+    * with the layout without being clustered on (event time under an
+    * entity-clustered layout is the canonical case). A zone map never
+    * changes which rows qualify — only which buckets are read; an
+    * uncorrelated column's maps simply keep every bucket.
     *
     * OPTIMISTIC CONCURRENCY (the Delta/Iceberg commit-protocol shape on
     * a filesystem): the fold writes into a HIDDEN staging directory —
@@ -430,41 +450,11 @@ object ClusteredTable {
     * create-exclusive marker (conditional put) with markers-last
     * materialization on object stores without atomic rename.
     */
-  def optimize(s: SparkSession, root: String, d1Col: String, d2Col: String,
-      bits: Int, numFiles: Int, maxAttempts: Int = 5,
-      reindex: Seq[String] = Nil, maxRecordsPerFile: Long = 0L,
-      curve: String = "morton"): Long =
-    optimizeN(s, root, Seq(d1Col, d2Col), bits, numFiles, maxAttempts,
-      reindex, maxRecordsPerFile, curve)
-
-  /** The k-dimensional fold: [[optimize]] is the k=2 case. Clusters on
-    * any number of integer dimensions via [[ZorderLayout.writeN]]
-    * (Morton generalizes; hilbert stays 2-D and rejects loudly there)
-    * and publishes a k-dim envelope catalog — per z-bucket, per-dim
-    * min/max as `mn<i>`/`mx<i>` with the dimension name recorded as
-    * `d<i>_col` (for k=2 byte-identical to the historical schema, so
-    * every existing reader keeps working; a 2-D reader on a k-dim
-    * catalog sees the first two dims' true bounds — still a sound
-    * prune, just on fewer dimensions). OCC contract, crash safety,
-    * manifest and reindex semantics are [[optimize]]'s, unchanged.
-    *
-    * ZONE MAPS (`statsCols`): additionally record per-bucket min/max
-    * for integral columns that are NOT clustered dimensions — the
-    * Delta/Iceberg file-stats idea at bucket grain. They ride the same
-    * catalog artifact (`s<i>_col`/`s<i>_mn`/`s<i>_mx` columns, nullable
-    * bounds for evolution-era buckets with only NULLs), publish under
-    * the same claim, and let the source prune on ANY mapped column a
-    * filter touches ([[zoneMaps]]) — useful exactly when a column
-    * correlates with the layout without being clustered on (event time
-    * under an entity-clustered layout is the canonical case). A zone
-    * map never changes which rows qualify — only which buckets are
-    * read; an uncorrelated column's maps simply keep every bucket.
-    */
-  def optimizeN(s: SparkSession, root: String, dims: Seq[String],
+  def optimize(s: SparkSession, root: String, dims: Seq[String],
       bits: Int, numFiles: Int, maxAttempts: Int = 5,
       reindex: Seq[String] = Nil, maxRecordsPerFile: Long = 0L,
       curve: String = "morton", statsCols: Seq[String] = Nil): Long = {
-    require(dims.nonEmpty, "optimizeN needs at least one clustered dimension")
+    require(dims.nonEmpty, "optimize needs at least one clustered dimension")
     require(statsCols.forall(!dims.contains(_)),
       "statsCols duplicate clustered dimensions — their bounds are already enveloped")
     // `reindex` closes the index lifecycle operationally: a fresh fold
@@ -549,7 +539,7 @@ object ClusteredTable {
         val envPath = new Path(staging, "_envelopes").toString
         val litCols = dims.zipWithIndex.map { case (c, i) => (s"d${i + 1}_col", c) } ++
           statsCols.zipWithIndex.map { case (c, i) => (s"s${i + 1}_col", c) }
-        footerEnvelopes(staging, dims, statsCols, isStr) match {
+        footerEnvelopes(s, staging, dims, statsCols, isStr) match {
           case Some(rows) =>
             // ENVELOPES FROM FOOTERS (r18): the staged files were just
             // written with exact column statistics in their footers, so
@@ -572,7 +562,8 @@ object ClusteredTable {
             s.createDataFrame(full.asJava, StructType(fields))
               .coalesce(1).write.mode("overwrite").parquet(envPath)
           case None =>
-            // refusal fallback: the original one-aggregate catalog build
+            // refusal fallback: the one-aggregate catalog build (a string
+            // stats column past parquet's 4 KB footer-statistics limit)
             log.warn(s"graft-clustered: footer statistics refused for the " +
               s"envelope catalog of $staging — building it with an aggregate " +
               "job over the staged fold instead")
@@ -639,58 +630,33 @@ object ClusteredTable {
     * time — the knob that otherwise quietly rots as a table grows (16
     * files chosen at day one means 6 TB files at 100 TB, no parallelism
     * and no skipping granularity; 4096 files chosen defensively means
-    * a day-one table of empty splinters). Mechanism: one metadata-cheap
-    * row count over the fold inputs (parquet footers), then
-    * numFiles = the smallest power of two ≥ rows / targetRowsPerFile,
-    * clamped to [1, 2^(2·bits)] — powers of two always divide the z-key
-    * domain, so the static-bucket invariant [[ZorderLayout.write]]
-    * requires holds at every size. Each fold re-derives the count, so
-    * the layout tracks growth (and shrinkage after purges) with no
-    * operator retuning; envelope catalogs, Bloom indexes and zfile
-    * pruning are all per-version and follow along automatically.
+    * a day-one table of empty splinters). Mechanism: one driver-side
+    * row count over the fold inputs' parquet footers (zero Spark jobs),
+    * then [[autoFileCount]]. Each fold re-derives the count, so the
+    * layout tracks growth (and shrinkage after purges) with no operator
+    * retuning; envelope catalogs, Bloom indexes and zfile pruning are
+    * all per-version and follow along automatically. Deletes only
+    * shrink the count, so ignoring pending DVs errs toward at most one
+    * size step up. An unreadable footer fails the fold: the same files
+    * are its input.
     */
-  def optimizeAuto(s: SparkSession, root: String, d1Col: String, d2Col: String,
-      bits: Int, targetRowsPerFile: Long): Long =
-    optimizeAutoN(s, root, Seq(d1Col, d2Col), bits, targetRowsPerFile)
-
-  /** The k-dimensional [[optimizeAuto]] (same sizing chain, clamped to
-    * the k-dim z-domain `2^(k·bits)`). */
-  def optimizeAutoN(s: SparkSession, root: String, dims: Seq[String],
+  def optimizeAuto(s: SparkSession, root: String, dims: Seq[String],
       bits: Int, targetRowsPerFile: Long): Long = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile must be positive")
     val vs = versions(root)
     val folded = vs.lastOption.map { case (_, dir) => manifest(dir) }.getOrElse(Set.empty)
-    val pendingD = pendingDeltaLike(root, folded)
-    // footer-stats row counts — no data pages read (the q_agg_pushdown
-    // observation, used operationally), at most TWO jobs: one over the
-    // (zfile-partitioned) base, one multi-path over all flat deltas
-    // (mixing the two in one read trips partition-structure inference);
-    // deletes only shrink the count, so ignoring pending DVs errs
-    // toward at most one size step up
-    // driver-side footer row count (r18) — zero Spark jobs; the former
-    // count() jobs read only footers anyway but still paid two job
-    // launches per sizing. Refusal falls back to the scan counts.
-    val sizeDirs = vs.lastOption.map(_._2).toSeq ++ pendingD
-    val rows = footerRowCount(sizeDirs).getOrElse {
-      log.warn(s"graft-clustered: footer row count refused at $root — " +
-        "sizing the fold with count() jobs instead")
-      vs.lastOption.map(v => s.read.parquet(v._2.toString).count()).getOrElse(0L) +
-        (if (pendingD.isEmpty) 0L
-         else s.read.parquet(pendingD.map(_.toString): _*).count())
-    }
-    optimizeN(s, root, dims, bits,
+    val rows = footerRowCount(s, vs.lastOption.map(_._2).toSeq ++ pendingDeltaLike(root, folded))
+    optimize(s, root, dims, bits,
       autoFileCount(rows, targetRowsPerFile, bits, dims.length))
   }
 
   /** [[optimizeAuto]]'s sizing formula, exposed so its decision is
     * independently checkable (q_optimize_auto's oracle re-derives it in
     * SQL): the smallest power of two ≥ rows/targetRowsPerFile, clamped
-    * to [1, 4^bits] — powers of two always divide the z-key domain.
+    * to the k-dim z-domain [1, 2^(k·bits)] — powers of two always divide
+    * the z-key domain, so the static-bucket invariant
+    * [[ZorderLayout.writeN]] requires holds at every size.
     */
-  def autoFileCount(rows: Long, targetRowsPerFile: Long, bits: Int): Int =
-    autoFileCount(rows, targetRowsPerFile, bits, 2)
-
-  /** The k-dimensional sizing formula: clamp to `2^(k·bits)`. */
   def autoFileCount(rows: Long, targetRowsPerFile: Long, bits: Int, k: Int): Int = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile must be positive")
     val maxFiles = 1 << (k * bits)
@@ -999,11 +965,6 @@ object ClusteredTable {
     else { fs.delete(staging, true); false }
   }
 
-  /** Newest complete base version id, if any — the cursor a changefeed
-    * consumer polls to pick its next `changes(from, to)` window.
-    */
-  def latestVersion(root: String): Option[Long] = versions(root).lastOption.map(_._1)
-
   /** VERSION HISTORY — the DESCRIBE HISTORY surface: one row per
     * complete (un-vacuumed) base version with the CUMULATIVE artifact
     * count its manifest records. Pure metadata plane: one listing plus
@@ -1133,14 +1094,6 @@ object ClusteredTable {
     (vs.lastOption.map(_._1), df)
   }
 
-  /** The fold-time envelope catalog of base version `v`: one row per
-    * z-bucket, (zfile, min d1, max d1, min d2, max d2) with bounds as
-    * long. None if the version predates the catalog (pre-upgrade
-    * table) or was folded on DIFFERENT dimension columns — the caller
-    * must then fall back to recomputing (or not prune). ≤numFiles rows
-    * read from one tiny parquet: the metadata-plane read that replaces
-    * the per-scan O(table) aggregate (r14's one `weak`).
-    */
   /** Bounded process-wide cache of collected `_envelopes` catalogs keyed
     * on catalog path; the publish stamp in the value guards a re-created
     * root at the same path (fresh-lifecycle tests and bench queries
@@ -1161,7 +1114,7 @@ object ClusteredTable {
   /** The `_envelopes` catalog of one version dir, collected at most once
     * per publish: before this, a scan whose filters touched any
     * non-dim column read the same tiny parquet up to three times
-    * (envelopesN + both zone-map planes — the r16 ADVICE finding).
+    * (envelopes + both zone-map planes — the r16 ADVICE finding).
     */
   private def envelopeRows(s: SparkSession,
       dir: Path): Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])] = {
@@ -1182,32 +1135,19 @@ object ClusteredTable {
     }
   }
 
-  def envelopes(s: SparkSession, root: String, v: Long, d1Col: String,
-      d2Col: String): Option[Seq[(Int, Long, Long, Long, Long)]] =
-    versions(root).find(_._1 == v).flatMap { case (_, dir) =>
-      envelopeRows(s, dir).flatMap { case (_, rows) =>
-        // a k>2 catalog whose FIRST TWO dims match still serves this
-        // 2-D read: per-dim min/max are true bounds regardless of how
-        // many further dimensions the fold interleaved — pruning on a
-        // prefix of the clustered dims is sound, just less selective
-        if (rows.exists(r => r.getAs[String]("d1_col") != d1Col ||
-            r.getAs[String]("d2_col") != d2Col)) None
-        else Some(rows.map(r => (r.getAs[Int]("zfile_id"),
-          r.getAs[Long]("mn1"), r.getAs[Long]("mx1"),
-          r.getAs[Long]("mn2"), r.getAs[Long]("mx2"))).toSeq)
-      }
-    }
-
-  /** The k-dimensional envelope catalog read: one row per z-bucket,
-    * `(zfile, per-dim (min, max))` with bounds as long, in the order of
-    * `dims`. None if the version predates the catalog or the recorded
-    * `d<i>_col` names disagree with `dims` at any position — like the
-    * 2-D read, a catalog with MORE dimensions than asked still serves a
-    * matching prefix (per-dim bounds are true bounds; pruning a prefix
-    * is sound), but a name mismatch means a different fold and the
-    * caller must fall back to recomputing (or not prune).
+  /** The fold-time envelope catalog of base version `v`: one row per
+    * z-bucket, `(zfile, per-dim (min, max))` with bounds as long, in the
+    * order of `dims`. ≤numFiles rows read from one tiny parquet: the
+    * metadata-plane read that replaces the per-scan O(table) aggregate
+    * (r14's one `weak`). None if the version predates the catalog or
+    * the recorded `d<i>_col` names disagree with `dims` at any position
+    * — the caller must then fall back to recomputing (or not prune). A
+    * catalog with MORE dimensions than asked still serves a matching
+    * prefix: per-dim min/max are true bounds regardless of how many
+    * further dimensions the fold interleaved, so pruning on a prefix is
+    * sound, just less selective.
     */
-  def envelopesN(s: SparkSession, root: String, v: Long,
+  def envelopes(s: SparkSession, root: String, v: Long,
       dims: Seq[String]): Option[Seq[(Int, Seq[(Long, Long)])]] =
     versions(root).find(_._1 == v).flatMap { case (_, dir) =>
       envelopeRows(s, dir).flatMap { case (schema, rows) =>
@@ -1222,36 +1162,30 @@ object ClusteredTable {
       }
     }
 
-  /** The ZONE MAPS of base version `v` (see [[optimizeN]]'s statsCols):
-    * for each stats-collected column, per z-bucket (zfile, min, max)
-    * with bounds as long — None bounds mean the bucket holds only NULLs
-    * for that column (schema evolution), i.e. "no bound, keep". Columns
-    * are self-described by the catalog's `s<i>_col` fields, so readers
-    * discover what is mapped without any out-of-band config; an empty
-    * map means the version collected no stats. Same ≤numFiles-row
-    * metadata-plane read as [[envelopesN]].
+  /** The ZONE MAPS of base version `v` (see [[optimize]]'s statsCols) on
+    * one key plane, chosen by `T`: `zoneMaps[Long]` serves the integral
+    * stats columns, `zoneMaps[String]` the string ones. For each mapped
+    * column of that plane, per z-bucket (zfile, min, max) — None bounds
+    * mean the bucket holds only NULLs for that column (schema
+    * evolution), i.e. "no bound, keep". String bounds are
+    * binary-collated (unsigned UTF-8 bytes — the ordering Spark's string
+    * comparison and DuckDB's default collation share, so a pruning
+    * decision made with it agrees with both engines). Columns and their
+    * plane are self-described by the catalog (`s<i>_col` and the bound
+    * column's parquet type), so readers discover what is mapped without
+    * any out-of-band config; an empty map means the version collected
+    * no stats on that plane. Same ≤numFiles-row metadata-plane read as
+    * [[envelopes]].
     */
-  def zoneMaps(s: SparkSession, root: String,
-      v: Long): Map[String, Seq[(Int, Option[Long], Option[Long])]] =
-    zoneMapsTyped[Long](s, root, v,
-      org.apache.spark.sql.types.LongType, (r, at) => r.getLong(at))
-
-  /** [[zoneMaps]] for STRING-typed stats columns (the date-string /
-    * URL-prefix plane): bounds are binary-collated min/max strings —
-    * the same unsigned-UTF-8-byte ordering Spark's string comparison
-    * and DuckDB's default collation use, so a pruning decision made
-    * with it agrees with both engines. Which plane a column lives on
-    * is the catalog column's own parquet type.
-    */
-  def zoneMapsString(s: SparkSession, root: String,
-      v: Long): Map[String, Seq[(Int, Option[String], Option[String])]] =
-    zoneMapsTyped[String](s, root, v,
-      org.apache.spark.sql.types.StringType, (r, at) => r.getString(at))
-
-  private def zoneMapsTyped[T](s: SparkSession, root: String, v: Long,
-      dt: org.apache.spark.sql.types.DataType,
-      get: (org.apache.spark.sql.Row, Int) => T):
-      Map[String, Seq[(Int, Option[T], Option[T])]] =
+  def zoneMaps[T](s: SparkSession, root: String, v: Long)(
+      implicit tag: scala.reflect.ClassTag[T]): Map[String, Seq[(Int, Option[T], Option[T])]] = {
+    import org.apache.spark.sql.types.{DataType, LongType, StringType}
+    val dt: DataType = tag.runtimeClass match {
+      case c if c == java.lang.Long.TYPE => LongType
+      case c if c == classOf[String] => StringType
+      case c => throw new IllegalArgumentException(
+        s"zoneMaps: no zone-map plane for ${c.getName} (Long or String)")
+    }
     versions(root).find(_._1 == v).flatMap { case (_, dir) =>
       envelopeRows(s, dir).map { case (fields, rows) =>
         val idxs = fields.fieldNames.collect {
@@ -1259,13 +1193,12 @@ object ClusteredTable {
               fields(n.stripSuffix("_col") + "_mn").dataType == dt =>
             n.stripPrefix("s").stripSuffix("_col").toInt
         }.sorted
-        if (idxs.isEmpty) Map.empty[String, Seq[(Int, Option[T], Option[T])]]
-        else idxs.flatMap { i =>
+        idxs.flatMap { i =>
           rows.headOption.map { h =>
             h.getAs[String](s"s${i}_col") -> rows.map { r =>
               def bound(f: String): Option[T] = {
                 val at = r.fieldIndex(f)
-                if (r.isNullAt(at)) None else Some(get(r, at))
+                if (r.isNullAt(at)) None else Some(r.get(at).asInstanceOf[T])
               }
               (r.getAs[Int]("zfile_id"), bound(s"s${i}_mn"), bound(s"s${i}_mx"))
             }.toSeq
@@ -1273,6 +1206,7 @@ object ClusteredTable {
         }.toMap
       }
     }.getOrElse(Map.empty)
+  }
 
   /** A cheap fingerprint of the ledger state one snapshot binds to:
     * newest version id + the pending delta-like and DV artifact names.
@@ -1348,14 +1282,14 @@ object ClusteredTable {
 
   /** Exact row count of the data files under `dirs` from parquet footer
     * block counts alone — the metadata-plane replacement for a
-    * count() job over freshly written artifacts (optimizeAutoN's sizing
-    * read). None on any unreadable footer — caller falls back to the
-    * ordinary scan-count (the FooterStats refusal contract).
+    * count() job over freshly written artifacts (optimizeAuto's sizing
+    * read). An unreadable footer throws: a count() job would read the
+    * same footer.
     */
-  private def footerRowCount(dirs: Seq[Path]): Option[Long] = try {
+  private def footerRowCount(s: SparkSession, dirs: Seq[Path]): Long = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+    val conf = s.sessionState.newHadoopConf()
     def fileRows(f: Path): Long = {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
       try {
@@ -1367,8 +1301,8 @@ object ClusteredTable {
     // independent latency-bound I/O — a fold tail can hold dozens of
     // part files, and a serial walk measured SLOWER than the count()
     // job it replaces at 32 cores
-    Some(inFooterPool(dirs.flatMap(dataFilesUnder))(fileRows).sum)
-  } catch { case scala.util.control.NonFatal(_) => None }
+    inFooterPool(dirs.flatMap(dataFilesUnder))(fileRows).sum
+  }
 
   /** Run `f` over `xs` on a bounded pool (serial under 8 items); any
     * exception propagates to the caller unchanged in cause, wrapped
@@ -1399,15 +1333,17 @@ object ClusteredTable {
     * (integral, exact) and each zone-map column (integral exact; string
     * bounds are parquet's unsigned-byte min/max, the same binary
     * collation the aggregate's min/max produced). Returns one value row
-    * per bucket in the exact column order [[optimizeN]]'s aggregate
-    * emitted (zfile_id, mn/mx per dim, s_mn/s_mx per stats col). None
+    * per bucket in the exact column order of [[optimize]]'s refusal
+    * aggregate (zfile_id, mn/mx per dim, s_mn/s_mx per stats col). None
     * the moment any needed statistic is missing or unreadable — the
-    * caller then runs the original staged-read aggregate (the
-    * FooterStats refusal contract; nullability: a stats column with no
-    * non-null value in a bucket yields null bounds, exactly like the
-    * aggregate).
+    * caller then runs that staged-read aggregate (the FooterStats
+    * refusal contract; nullability: a stats column with no non-null
+    * value in a bucket yields null bounds, exactly like the aggregate).
+    * The input that makes it refuse: a string stats column whose min
+    * and max together reach parquet's 4 KB statistics limit — the
+    * writer then records no min/max at all for that chunk.
     */
-  private def footerEnvelopes(staging: Path, dims: Seq[String],
+  private def footerEnvelopes(s: SparkSession, staging: Path, dims: Seq[String],
       statsCols: Seq[String], isStr: String => Boolean): Option[Seq[Seq[Any]]] = try {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1416,7 +1352,7 @@ object ClusteredTable {
     val buckets = fs.listStatus(staging)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("zfile="))
     if (buckets.isEmpty) return None
-    val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+    val conf = s.sessionState.newHadoopConf()
     def cmpBytes(a: Array[Byte], b: Array[Byte]): Int = {
       var i = 0
       while (i < a.length && i < b.length) {
@@ -1498,10 +1434,8 @@ object ClusteredTable {
     * table never double-ingests. optimize()/vacuum() run out-of-band on
     * whatever cadence the operator chooses — ingest never waits on
     * layout work.
-    */
-  def sink(root: String): (DataFrame, Long) => Unit = sink(root, 0)
-
-  /** [[sink]] with AUTO-COMPACTION CADENCE: `compactAtParts > 0` makes
+    *
+    * AUTO-COMPACTION CADENCE: `compactAtParts > 0` makes
     * the sink self-healing under high-cadence ingest — after landing a
     * micro-batch, if the pending tail holds at least `compactAtParts`
     * artifacts, [[compactTail]] runs inline before the next trigger.
@@ -1517,7 +1451,7 @@ object ClusteredTable {
     * this only keeps the un-folded tail from growing unboundedly
     * between folds.
     */
-  def sink(root: String, compactAtParts: Int,
+  def sink(root: String, compactAtParts: Int = 0,
       sortDims: Seq[String] = Nil): (DataFrame, Long) => Unit =
     (df: DataFrame, batchId: Long) => {
       append(df, root, f"b$batchId%012d")
@@ -1559,7 +1493,7 @@ object ClusteredTable {
 
   /** PER-FILE BLOOM SECONDARY INDEX — point-lookup file skipping on a
     * key the layout does NOT cluster. Z-order envelope pruning serves
-    * box predicates on the two clustered dimensions; a point predicate
+    * box predicates on the clustered dimensions; a point predicate
     * on a high-cardinality foreign key (o_orderkey in a table clustered
     * on price × month) touches every file under min/max pruning,
     * because every file's envelope spans essentially the whole key
@@ -1593,7 +1527,7 @@ object ClusteredTable {
     * the common LLM-pipeline key: document ids, URLs, content hashes —
     * through putString (Murmur3 over UTF-8 bytes). The plane is chosen
     * from the column's type at build time and recorded in the index
-    * (`kind`), so a probe through the wrong plane reads as "no index"
+    * (`kind`), so a key that plane cannot hash reads as "no index"
     * and degrades to the unpruned scan, never to a missed bucket.
     */
   def buildIndex(s: SparkSession, root: String, keyCol: String, fpp: Double = 0.01): Unit = {
@@ -1634,51 +1568,61 @@ object ClusteredTable {
   }
 
   /** The newest base version's serialized per-bucket Bloom filters for
-    * `keyCol`, provided the index exists AND was built through the
-    * expected key plane; None otherwise (scan unpruned). ≤numFiles rows.
+    * `keyCol` with the key plane `buildIndex` recorded in `kind` (a
+    * pre-`kind` index (r14) is long-plane); None if there is no index.
+    * ≤numFiles rows.
     */
-  private def indexRows(s: SparkSession, root: String, keyCol: String,
-      kind: String): Option[Seq[(Int, Array[Byte])]] =
+  private def indexRows(s: SparkSession, root: String,
+      keyCol: String): Option[(String, Seq[(Int, Array[Byte])])] =
     versions(root).lastOption.flatMap { case (_, dir) =>
       val idx = indexDir(dir, keyCol)
       if (!fsOf(idx).exists(new Path(idx, "_SUCCESS"))) None
       else {
         val df = s.read.parquet(idx.toString)
-        // pre-kind indexes (r14) are all long-plane
-        val okKind = !df.columns.contains("kind") || {
-          // bounded: the distinct index-kind enum (1-2 values)
-          val ks = df.select("kind").distinct().collect().map(_.getString(0))
-          ks.forall(_ == kind)
-        }
-        if (!okKind) None
-        else Some(df.select("zfile_id", "bloom").collect() // ≤ numFiles rows
-          .map(r => (r.getInt(0), r.getAs[Array[Byte]]("bloom"))).toSeq)
+        // bounded: the distinct index-kind enum (one value per index)
+        val kinds =
+          if (!df.columns.contains("kind")) Seq("long")
+          else df.select("kind").distinct().collect().map(_.getString(0)).toSeq
+        if (kinds.size > 1) None
+        else Some((kinds.headOption.getOrElse("long"),
+          df.select("zfile_id", "bloom").collect() // ≤ numFiles rows
+            .map(r => (r.getInt(0), r.getAs[Array[Byte]]("bloom"))).toSeq))
       }
     }
 
-  /** The z-buckets a batch of point-lookup keys might live in, per the
-    * newest base version's Bloom index: None if that version has no
-    * index for `keyCol` (not built, built for a superseded version and
-    * folded away, or built on the string plane) — the caller must then
-    * scan unpruned.
-    */
-  def indexCandidates(s: SparkSession, root: String, keyCol: String,
-      keys: Seq[Long]): Option[Seq[Int]] = {
-    import org.apache.spark.util.sketch.BloomFilter
-    indexRows(s, root, keyCol, "long").map(_.filter { case (_, bytes) =>
-      val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-      keys.exists(bf.mightContainLong)
-    }.map(_._1).sorted)
+  /** An integral key widened to long (the long key plane and envelope
+    * bounds); None for any other value. */
+  private[graft] def asLong(v: Any): Option[Long] = v match {
+    case i: Int => Some(i.toLong)
+    case l: Long => Some(l)
+    case s: Short => Some(s.toLong)
+    case b: Byte => Some(b.toLong)
+    case _ => None
   }
 
-  /** [[indexCandidates]] through the STRING key plane. */
-  def indexCandidatesString(s: SparkSession, root: String, keyCol: String,
-      keys: Seq[String]): Option[Seq[Int]] = {
+  /** The z-buckets a batch of point-lookup keys might live in, per the
+    * newest base version's Bloom index. Each key is probed on the plane
+    * the index recorded: the long plane takes Byte/Short/Int/Long keys,
+    * the string plane String keys. None if that version has no index
+    * for `keyCol` (not built, or built for a superseded version and
+    * folded away) or any key is one the recorded plane cannot hash —
+    * the caller must then scan unpruned: degrade, never miss a bucket.
+    */
+  def indexCandidates(s: SparkSession, root: String, keyCol: String,
+      keys: Seq[Any]): Option[Seq[Int]] = {
     import org.apache.spark.util.sketch.BloomFilter
-    indexRows(s, root, keyCol, "string").map(_.filter { case (_, bytes) =>
-      val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-      keys.exists(bf.mightContainString)
-    }.map(_._1).sorted)
+    indexRows(s, root, keyCol).flatMap { case (kind, rows) =>
+      val probes: Seq[Option[BloomFilter => Boolean]] = keys.map {
+        case k: String if kind == "string" => Some((bf: BloomFilter) => bf.mightContainString(k))
+        case k if kind == "long" => asLong(k).map(l => (bf: BloomFilter) => bf.mightContainLong(l))
+        case _ => None
+      }
+      if (probes.contains(None)) None
+      else Some(rows.filter { case (_, bytes) =>
+        val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+        probes.exists(_.get(bf))
+      }.map(_._1).sorted)
+    }
   }
 
   /** Point lookup through the Bloom index: the full merge-on-read
@@ -1686,34 +1630,23 @@ object ClusteredTable {
     * evolution), scanning only the index's candidate z-buckets plus the
     * always-scanned delta tail. A Bloom false positive costs a wasted
     * bucket scan, never a wrong row — the key equality filter runs
-    * regardless; with no index this is exactly `read` + filter.
+    * regardless; with no usable index this is exactly `read` + filter.
     */
-  def lookup(s: SparkSession, root: String, keyCol: String, keys: Seq[Long]): DataFrame =
-    lookupPruned(s, root, keyCol, indexCandidates(s, root, keyCol, keys), keys.map(lit))
-
-  /** [[lookup]] for a STRING-typed key column. */
-  def lookupString(s: SparkSession, root: String, keyCol: String,
-      keys: Seq[String]): DataFrame =
-    lookupPruned(s, root, keyCol, indexCandidatesString(s, root, keyCol, keys), keys.map(lit))
-
-  private def lookupPruned(s: SparkSession, root: String, keyCol: String,
-      cand: Option[Seq[Int]], keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
+  def lookup(s: SparkSession, root: String, keyCol: String, keys: Seq[Any]): DataFrame = {
     val t = read(s, root)
-    val pruned = cand match {
+    val pruned = indexCandidates(s, root, keyCol, keys) match {
       case Some(c) => t.where(col("zfile") === -1 || col("zfile").isin(c: _*))
       case None => t
     }
     pruned.where(col(keyCol).isin(keys: _*))
   }
 
-  /** Reclaim storage made redundant by the newest complete base: deltas
-    * its manifest names, and superseded base versions. Safe at any
-    * time — readers only ever consult the newest complete version.
+  /** Reclaim storage made redundant by the newest complete bases:
+    * deltas their manifests name, and superseded base versions. Safe at
+    * any time — readers only ever consult a retained complete version.
     * Returns the number of directories removed.
-    */
-  def vacuum(root: String): Int = vacuum(root, keepVersions = 1)
-
-  /** Retention-window vacuum: keep the newest `keepVersions` complete
+    *
+    * Retention window: keep the newest `keepVersions` complete
     * bases, making the RETENTION CONTRACT real rather than
     * all-or-nothing — within the window, BOTH time travel
     * (`read(asOfVersion)`) and the changefeed (`changes(from, to)`)
@@ -1744,7 +1677,7 @@ object ClusteredTable {
     * therefore airtight, and a crashed fold's orphan delays one
     * version's reclaim by exactly one vacuum pass, never blocks it.
     */
-  def vacuum(root: String, keepVersions: Int): Int = {
+  def vacuum(root: String, keepVersions: Int = 1): Int = {
     require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
     val base = baseRoot(root)
     val fs = fsOf(base)

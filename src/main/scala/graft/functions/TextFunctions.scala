@@ -77,16 +77,6 @@ object TextFunctions {
   def wordShingles(toks: Column, k: Int): Column =
     graft.expressions.TextKernelExpressions.wordShinglesNative(toks, k)
 
-  /** HOF reference formulation of wordShingles (tests compare to native).
-    * The transform lambda is CodegenFallback: one interpreted
-    * array_join(slice) per window per row (r18 — native kernel above).
-    */
-  def wordShinglesHof(toks: Column, k: Int): Column =
-    when(size(toks) < k, array().cast("array<string>")).otherwise(
-      transform(
-        sequence(lit(1), size(toks) - (k - 1)),
-        i => array_join(slice(toks, i, lit(k)), " ")))
-
   /** h32 of every element of a string array — native md5 loop (see
     * ArrayH32). Materialize this as its own projection column before
     * fanning out multiple consumers: Catalyst Columns are trees, not
@@ -105,9 +95,6 @@ object TextFunctions {
   def hashArrayBits(strs: Column, bits: Int): Column =
     graft.expressions.HashExpressions.h32ArrayNative(strs, bits)
 
-  /** HOF reference formulation of hashArray (tests compare to native). */
-  def hashArrayHof(strs: Column): Column = transform(strs, s => h32(s))
-
   /** MinHash signature from pre-hashed shingles (see hashArray): for each
     * of `numHashes` permutations, min over shingles of the universal-hash
     * mix ((seed+1)*h + seed) mod 1e9+7 — exact in int64 since h < 2^32 and
@@ -118,12 +105,6 @@ object TextFunctions {
     */
   def minhashFromHashes(hs: Column, numHashes: Int): Column =
     graft.expressions.HashExpressions.minhashNative(hs, numHashes)
-
-  /** HOF reference formulation (tests compare it to the native kernel). */
-  def minhashFromHashesHof(hs: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(hs, h => ((i + 1).cast(LongType) * h + i) % 1000000007L)))
 
   /** Convenience composition for non-hot-path use (tests): hashes inline,
     * so the md5 pass is duplicated numHashes times — prefer materializing
@@ -144,13 +125,6 @@ object TextFunctions {
         transform(slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)), x => x.cast("string")),
         ",")))
 
-  /** Bit i of non-negative long h, with a Column shift amount (the Scala
-    * `shiftright` only takes Int shifts): floor(h / 2^i) % 2 — exact for
-    * h < 2^53 since powers of two are exact doubles.
-    */
-  private def bitAt(h: Column, i: Column): Column =
-    (h.cast("double") / pow(lit(2.0), i)).cast(LongType) % 2
-
   /** 32-bit SimHash from pre-hashed tokens (see hashArray): bit i of the
     * result is set iff sum over tokens of (+1 if bit i of the token hash
     * else -1) > 0. Native codegen kernel (one pass over the hashes).
@@ -163,19 +137,6 @@ object TextFunctions {
     */
   def simhashFromHashesBits(hs: Column, bits: Int): Column =
     graft.expressions.HashExpressions.simhashNative(hs, bits)
-
-  /** HOF reference formulation (tests compare it to the native kernel). */
-  def simhashFromHashesHof(hs: Column): Column =
-    aggregate(
-      sequence(lit(0), lit(31)),
-      lit(0L),
-      (acc, i) => {
-        val contrib = aggregate(
-          hs,
-          lit(0L),
-          (a, h) => a + when(bitAt(h, i) === 1, 1L).otherwise(-1L))
-        acc + when(contrib > 0, pow(lit(2.0), i).cast(LongType)).otherwise(0L)
-      })
 
   /** Convenience composition (tests): hashes inline — duplicated 32x. */
   def simhash32(toks: Column): Column = simhashFromHashes(hashArray(toks))
@@ -204,10 +165,6 @@ object TextFunctions {
 
   def stopwordHits(toks: Column, words: Seq[String]): Column =
     graft.expressions.TextKernelExpressions.stopwordHitsNative(toks, words)
-
-  /** HOF reference formulation of stopwordHits (tests compare to native). */
-  def stopwordHitsHof(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isInCollection(words)))
 
   /** Per-language stopword hit counts, for staging each count once per
     * row (see langIdFromHits). Order matches [[langIdFromHits]] params.
@@ -315,14 +272,6 @@ object TextFunctions {
   def classifierScoreFromHashes(hs: Column, nFeats: Column): Column =
     graft.expressions.TextKernelExpressions.classifierScoreNative(
       hs, classifierWeights.toArray) / nFeats
-
-  /** HOF reference formulation (tests compare to native; same ascending
-    * left-fold accumulation order, so the doubles are bit-identical). */
-  def classifierScoreFromHashesHof(hs: Column, nFeats: Column): Column =
-    aggregate(
-      transform(hs, h => element_at(typedLit(classifierWeights),
-        pmod(h, lit(ClassifierBuckets.toLong)).cast("int") + 1)),
-      lit(0.0), (a, x) => a + x) / nFeats
 
   /** PII regex classes, in redaction order, shared by the scan and the
     * redaction of TextQueries.textPii. Regex built-ins only — the whole

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * loop instead of the HOF `aggregate(zip_with(...))` tree, which
   * allocates an intermediate array per row-pair. Both run the same
   * left-to-right double summation as the DuckDB oracle, so results agree
-  * bit-for-bit. The HOF forms are kept (suffix `Hof`) as a reference
-  * semantics oracle for tests.
+  * bit-for-bit. The HOF reference forms the specs compare against live
+  * in the test tree (`graft.HofReference`).
   */
 object VectorFunctions {
   import graft.expressions.VectorExpressions
@@ -19,27 +19,12 @@ object VectorFunctions {
   /** Elementwise product sum (native codegen loop). */
   def dot(a: Column, b: Column): Column = VectorExpressions.dotNative(a, b)
 
-  /** HOF reference implementation of dot (tests compare it to native). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a.cast("array<double>"), b.cast("array<double>"), (x, y) => x * y),
-      lit(0.0),
-      (acc, v) => acc + v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity in [-1,1]; NULL when either norm is 0 (native,
     * one pass over both arrays).
     */
   def cosine(a: Column, b: Column): Column = VectorExpressions.cosineNative(a, b)
-
-  /** HOF reference implementation of cosine. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dotHof(a, b)
-    val na = sqrt(dotHof(a, a))
-    val nb = sqrt(dotHof(b, b))
-    when(na === 0 || nb === 0, lit(null).cast("double")).otherwise(d / (na * nb))
-  }
 
   /** Squared L2 distance. */
   def l2sq(a: Column, b: Column): Column =

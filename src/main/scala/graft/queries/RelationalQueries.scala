@@ -429,6 +429,17 @@ object RelationalQueries {
       .orderBy("file_id")
   }
 
+  /** A clustered-table root under java.io.tmpdir named `prefix` + the
+    * dataset directory's name, emptied first: each clustered query runs
+    * a fresh lifecycle per call (idempotent across reruns).
+    */
+  private def freshRoot(prefix: String, dir: String): String = {
+    val root = new java.io.File(
+      sys.props("java.io.tmpdir"), prefix + new java.io.File(dir).getName).getAbsolutePath
+    graft.functions.ClusteredTable.rmTree(new java.io.File(root))
+    root
+  }
+
   /** CLUSTERED INGEST + OPTIMIZE — [[qZorderWrite]]'s day-two closure
     * (graft.functions.ClusteredTable): two ingest batches land as plain
     * deltas, OPTIMIZE folds them into z-ordered base v=0, a third batch
@@ -455,26 +466,23 @@ object RelationalQueries {
     val (lo1, hi1, lo2, hi2) = (3, 5, 2, 4)
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_clustered_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run (idempotent)
+    val root = freshRoot("graft_clustered_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    val ver = graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16)
+    val ver = graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val t = graft.functions.ClusteredTable.read(s, root)
     // the catalog lookup is the fold-time `_envelopes` artifact (r15):
     // a ≤numFiles-row parquet read on the metadata plane — the r14-era
     // recompute (a groupBy over the base's two clustered columns) was
     // the per-scan O(table) bill the catalog exists to retire
-    val env = graft.functions.ClusteredTable.envelopes(s, root, ver, "d1", "d2").get
+    val env = graft.functions.ClusteredTable.envelopes(s, root, ver, Seq("d1", "d2")).get
     val keep = env.collect {
-      case (zf, mn1, mx1, mn2, mx2)
+      case (zf, Seq((mn1, mx1), (mn2, mx2)))
         if mx1 >= lo1 && mn1 <= hi1 && mx2 >= lo2 && mn2 <= hi2 => zf
     }
     t.where(col("zfile") === -1 || col("zfile").isin(keep.toSeq: _*))
@@ -511,10 +519,7 @@ object RelationalQueries {
   def qMergeOnRead(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_mor_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run (idempotent)
+    val root = freshRoot("graft_mor_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -523,7 +528,7 @@ object RelationalQueries {
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "01")
     graft.functions.ClusteredTable.delete(
       src.filter(col("d1") === 7).select("o_orderkey"), root, "02")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16)
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 2), root, "03")
     graft.functions.ClusteredTable.delete(
       src.filter(col("o_orderkey") % 10 === 0).select("o_orderkey"), root, "04")
@@ -557,23 +562,20 @@ object RelationalQueries {
   def qChangefeed(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_cf_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root))
+    val root = freshRoot("graft_cf_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 2 === 0), root, "00")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16) // v=0
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0
     graft.functions.ClusteredTable.append(
       src.filter(col("o_orderkey") % 2 === 1 && col("d2") < 6), root, "01")
     graft.functions.ClusteredTable.delete(
       src.filter(col("o_orderkey") % 7 === 0).select("o_orderkey"), root, "02")
     graft.functions.ClusteredTable.append(
       src.filter(col("o_orderkey") % 2 === 1 && col("d2") >= 6), root, "03")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16) // v=1
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=1
     graft.functions.ClusteredTable.changes(s, root, 0L, 1L)
       .groupBy(col("_change").as("chg"))
       .agg(count(lit(1)).as("n_rows"),
@@ -653,17 +655,14 @@ object RelationalQueries {
   def qBloomSkip(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_bloom_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run (idempotent)
+    val root = freshRoot("graft_bloom_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16)
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     graft.functions.ClusteredTable.buildIndex(s, root, "o_orderkey")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     // bounded: 1-in-5000 key probe sample, never corpus-sized
@@ -705,17 +704,14 @@ object RelationalQueries {
   def qClusterAgg(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_cagg_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_cagg_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16)
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val agg = s.read.format("graft-clustered").option("root", root).load()
       .agg(count(lit(1)).as("n_rows"),
@@ -747,10 +743,7 @@ object RelationalQueries {
     * deterministic across runs and partitionings.
     */
   def qBloomSkipStr(s: SparkSession, dir: String): DataFrame = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_bloomstr_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_bloomstr_", dir)
     val src = Tables.documents(s, dir).select(
       col("doc_id"),
       concat(col("source"), lit("/"), col("doc_id")).as("url"),
@@ -759,7 +752,7 @@ object RelationalQueries {
       (col("n_chars") % 12).cast("int").as("d2"))
     graft.functions.ClusteredTable.append(src.filter(col("doc_id") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("doc_id") % 3 === 1), root, "b1")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16)
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     graft.functions.ClusteredTable.buildIndex(s, root, "url")
     graft.functions.ClusteredTable.append(src.filter(col("doc_id") % 3 === 2), root, "b2")
     // bounded: 1-in-149 key probe sample, never corpus-sized
@@ -768,8 +761,8 @@ object RelationalQueries {
     val occupied = graft.functions.ClusteredTable.read(s, root)
       .filter(col("zfile") >= 0).select("zfile").distinct().count()
     val cand = graft.functions.ClusteredTable
-      .indexCandidatesString(s, root, "url", keys).get
-    graft.functions.ClusteredTable.lookupString(s, root, "url", keys)
+      .indexCandidates(s, root, "url", keys).get
+    graft.functions.ClusteredTable.lookup(s, root, "url", keys)
       .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
       .agg(count(lit(1)).as("n_match"),
         sum(col("n_chars")).cast("long").as("sum_chars"))
@@ -793,22 +786,19 @@ object RelationalQueries {
   def qHistory(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_hist_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_hist_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "00")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=0: manifest {00}
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0: manifest {00}
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "01")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=1: manifest {00,01}
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=1: manifest {00,01}
     CT.delete(src.filter(col("o_orderkey") % 5 === 0).select("o_orderkey"), root, "02")
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "03")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=2: manifest {00,01,02,03}
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=2: manifest {00,01,02,03}
     val h = CT.history(s, root).collect() // metadata-plane, one row per version
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     h.map { case (v, nArt) =>
@@ -841,10 +831,7 @@ object RelationalQueries {
     val (lo1, hi1, lo2, hi2) = (3, 5, 2, 4)
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_chil_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_chil_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -852,12 +839,12 @@ object RelationalQueries {
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    val ver = CT.optimize(s, root, "d1", "d2", 4, 16, curve = "hilbert")
+    val ver = CT.optimize(s, root, Seq("d1", "d2"), 4, 16, curve = "hilbert")
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val t = CT.read(s, root)
-    val env = CT.envelopes(s, root, ver, "d1", "d2").get
+    val env = CT.envelopes(s, root, ver, Seq("d1", "d2")).get
     val keep = env.collect {
-      case (zf, mn1, mx1, mn2, mx2)
+      case (zf, Seq((mn1, mx1), (mn2, mx2)))
         if mx1 >= lo1 && mn1 <= hi1 && mx2 >= lo2 && mn2 <= hi2 => zf
     }
     t.where(col("zfile") === -1 || col("zfile").isin(keep.toSeq: _*))
@@ -871,7 +858,7 @@ object RelationalQueries {
   }
 
   /** N-DIMENSIONAL CLUSTERING — the k=3 Morton fold oracle-gated end to
-    * end: optimizeN interleaves THREE dimensions (price bucket, month,
+    * end: optimize interleaves THREE dimensions (price bucket, month,
     * customer residue — each 4 bits, a 4096-cell z-domain in 16 static
     * buckets), publishes the k-dim envelope catalog (per-bucket per-dim
     * min/max as mn<i>/mx<i>), and a 3-D hyper-box read prunes on all
@@ -896,10 +883,7 @@ object RelationalQueries {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val d3 = (col("o_custkey") % 16).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_c3d_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_c3d_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -907,10 +891,10 @@ object RelationalQueries {
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    val ver = CT.optimizeN(s, root, Seq("d1", "d2", "d3"), 4, 16)
+    val ver = CT.optimize(s, root, Seq("d1", "d2", "d3"), 4, 16)
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val t = CT.read(s, root)
-    val env = CT.envelopesN(s, root, ver, Seq("d1", "d2", "d3")).get
+    val env = CT.envelopes(s, root, ver, Seq("d1", "d2", "d3")).get
     val box = Seq((lo1.toLong, hi1.toLong), (lo2.toLong, hi2.toLong),
       (lo3.toLong, hi3.toLong))
     val keep = env.collect {
@@ -950,10 +934,7 @@ object RelationalQueries {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (year(col("o_orderdate")) - 1992).cast("int")
     val ym = date_format(col("o_orderdate"), "yyyy-MM")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_zms_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_zms_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -961,11 +942,11 @@ object RelationalQueries {
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    val ver = CT.optimizeN(s, root, Seq("d1", "d2"), 4, 16,
+    val ver = CT.optimize(s, root, Seq("d1", "d2"), 4, 16,
       statsCols = Seq("ym"))
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val t = CT.read(s, root)
-    val zm = CT.zoneMapsString(s, root, ver)("ym")
+    val zm = CT.zoneMaps[String](s, root, ver).apply("ym")
     val keep = zm.collect {
       case (zf, mn, mx)
         if mn.isEmpty || mx.isEmpty ||
@@ -1005,10 +986,7 @@ object RelationalQueries {
   def qAutoMaintain(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_am_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root))
+    val root = freshRoot("graft_am_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -1018,11 +996,11 @@ object RelationalQueries {
     (0 until 12).foreach(b => sink(src.filter(col("o_orderkey") % 12 === b), b.toLong))
     val tailParts = CT.tailParts(root).size.toLong // deterministic: 2
     val total = CT.read(s, root).count()
-    val nFiles = CT.autoFileCount(total, 1000L, 4).toLong
-    CT.optimizeAuto(s, root, "d1", "d2", 4, 1000L) // v=0, self-sized
+    val nFiles = CT.autoFileCount(total, 1000L, 4, 2).toLong
+    CT.optimizeAuto(s, root, Seq("d1", "d2"), 4, 1000L) // v=0, self-sized
     CT.delete(src.filter(col("o_orderkey") % 11 === 0)
       .select("o_orderkey"), root, "z12")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=1 applies the delete
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=1 applies the delete
     CT.vacuum(root) // keepVersions = 1: v=0 reclaimed
     CT.read(s, root).agg(
       count(lit(1)).as("n_rows"),
@@ -1045,21 +1023,18 @@ object RelationalQueries {
   def qChangefeedSource(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_cfs_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root))
+    val root = freshRoot("graft_cfs_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 2 === 0), root, "00")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=0
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0
     CT.append(src.filter(col("o_orderkey") % 2 === 1 && col("d2") < 6), root, "01")
     CT.delete(src.filter(col("o_orderkey") % 7 === 0).select("o_orderkey"), root, "02")
     CT.append(src.filter(col("o_orderkey") % 2 === 1 && col("d2") >= 6), root, "03")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=1
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=1
     s.read.format("graft-clustered").option("root", root)
       .option("changesfrom", "0").option("changesto", "1").load()
       .groupBy(col("_change").as("chg"))
@@ -1072,7 +1047,7 @@ object RelationalQueries {
   /** ZONE MAPS — per-bucket min/max for a column that is NOT clustered
     * on, oracle-gated end to end: the fold clusters on (price bucket,
     * order YEAR) and additionally stats-collects the exact order DAY
-    * (optimizeN's statsCols — the Delta/Iceberg file-stats idea at
+    * (optimize's statsCols — the Delta/Iceberg file-stats idea at
     * bucket grain, published inside the same claim as the data). A
     * day-range read then prunes buckets through the zone map even
     * though `day` is no dimension — it merely correlates with the
@@ -1095,10 +1070,7 @@ object RelationalQueries {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (year(col("o_orderdate")) - 1992).cast("int")
     val day = datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_zm_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_zm_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -1106,11 +1078,11 @@ object RelationalQueries {
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    val ver = CT.optimizeN(s, root, Seq("d1", "d2"), 4, 16,
+    val ver = CT.optimize(s, root, Seq("d1", "d2"), 4, 16,
       statsCols = Seq("day"))
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val t = CT.read(s, root)
-    val zm = CT.zoneMaps(s, root, ver)("day")
+    val zm = CT.zoneMaps[Long](s, root, ver).apply("day")
     val keep = zm.collect {
       case (zf, mn, mx)
         if mn.isEmpty || mx.isEmpty ||
@@ -1147,21 +1119,18 @@ object RelationalQueries {
   def qSourceTimetravel(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_tt_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_tt_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 =!= 2), root, "00")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=0: the first two thirds
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0: the first two thirds
     CT.delete(src.filter(col("o_orderkey") % 10 === 0)
       .select("o_orderkey"), root, "01")
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "02")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=1: delete applied, last third in
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=1: delete applied, last third in
     def via(opts: (String, String)*): DataFrame =
       opts.foldLeft(s.read.format("graft-clustered").option("root", root)) {
         case (r, (k, v)) => r.option(k, v)
@@ -1200,10 +1169,7 @@ object RelationalQueries {
   def qCompactTail(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_compact_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_compact_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -1248,19 +1214,16 @@ object RelationalQueries {
     val ZBits = 4
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_auto_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_auto_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     graft.functions.ClusteredTable.append(src, root, "00")
-    graft.functions.ClusteredTable.optimizeAuto(s, root, "d1", "d2", ZBits, Target)
+    graft.functions.ClusteredTable.optimizeAuto(s, root, Seq("d1", "d2"), ZBits, Target)
     val t = graft.functions.ClusteredTable.read(s, root)
     val n = t.count()
-    val files = graft.functions.ClusteredTable.autoFileCount(n, Target, ZBits)
+    val files = graft.functions.ClusteredTable.autoFileCount(n, Target, ZBits, 2)
     val zSpan = (1 << (2 * ZBits)) / files
     t.agg(
       count(lit(1)).as("n_rows"),
@@ -1291,21 +1254,18 @@ object RelationalQueries {
   def qRetention(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_ret_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_ret_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "00")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=0
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "01")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=1
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=1
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "02")
-    CT.optimize(s, root, "d1", "d2", 4, 16) // v=2
+    CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=2
     CT.vacuum(root, keepVersions = 2)
     val horizon = scala.util.Try(CT.read(s, root, Some(0L))).isFailure
     def agg(t: DataFrame, ver: String): DataFrame =
@@ -1340,17 +1300,14 @@ object RelationalQueries {
   def qSourcePruned(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_srcp_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run
+    val root = freshRoot("graft_srcp_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16)
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     s.read.format("graft-clustered")
       .option("root", root).option("d1", "d1").option("d2", "d2").load()
@@ -1385,17 +1342,14 @@ object RelationalQueries {
   def qMergeUpsert(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_upsert_" + new java.io.File(dir).getName).getAbsolutePath
-    graft.functions.ClusteredTable.rmTree(new java.io.File(root)) // fresh lifecycle per run (idempotent)
+    val root = freshRoot("graft_upsert_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
       d1.as("d1"), d2.as("d2"))
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "00")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "01")
-    graft.functions.ClusteredTable.optimize(s, root, "d1", "d2", 4, 16)
+    graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     // the MERGE source: new images for matched keys, fresh rows for the
     // rest — key-unique by construction (k%6=0 ⊂ k%3=0, disjoint from k%3=2)
     val source = src.filter(col("o_orderkey") % 6 === 0)
@@ -1434,11 +1388,8 @@ object RelationalQueries {
   def qCdcApply(s: SparkSession, dir: String): DataFrame = {
     val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (month(col("o_orderdate")) - 1).cast("int")
-    val tmp = sys.props("java.io.tmpdir")
-    val sfx = new java.io.File(dir).getName
-    val pRoot = new java.io.File(tmp, "graft_cdcp_" + sfx).getAbsolutePath
-    val rRoot = new java.io.File(tmp, "graft_cdcr_" + sfx).getAbsolutePath
-    Seq(pRoot, rRoot).foreach(r => graft.functions.ClusteredTable.rmTree(new java.io.File(r)))
+    val pRoot = freshRoot("graft_cdcp_", dir)
+    val rRoot = freshRoot("graft_cdcr_", dir)
     val src = Tables.orders(s, dir).select(
       col("o_orderkey"),
       col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -1446,15 +1397,15 @@ object RelationalQueries {
     val CT = graft.functions.ClusteredTable
     // primary: v=0 holds the evens; the window churns and folds to v=1
     CT.append(src.filter(col("o_orderkey") % 2 === 0), pRoot, "00")
-    CT.optimize(s, pRoot, "d1", "d2", 4, 16) // v=0
+    CT.optimize(s, pRoot, Seq("d1", "d2"), 4, 16) // v=0
     CT.append(src.filter(col("o_orderkey") % 2 === 1 && col("d2") < 6), pRoot, "01")
     CT.delete(src.filter(col("o_orderkey") % 7 === 0).select("o_orderkey"), pRoot, "02")
     CT.append(src.filter(col("o_orderkey") % 2 === 1 && col("d2") >= 6), pRoot, "03")
-    CT.optimize(s, pRoot, "d1", "d2", 4, 16) // v=1
+    CT.optimize(s, pRoot, Seq("d1", "d2"), 4, 16) // v=1
     // replica: seed at the primary's v=0, then replay the feed through
     // applyChanges — tombstones rank before inserts, re-inserts survive
     CT.append(CT.read(s, pRoot, Some(0L)).drop("zkey", "zfile"), rRoot, "00")
-    CT.optimize(s, rRoot, "d1", "d2", 4, 16)
+    CT.optimize(s, rRoot, Seq("d1", "d2"), 4, 16)
     CT.applyChanges(CT.changes(s, pRoot, 0L, 1L), rRoot, "01", Seq("o_orderkey"))
     def sideAgg(t: DataFrame, side: String): DataFrame =
       t.groupBy(lit(side).as("side"), col("d2"))

@@ -16,6 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.functions.ClusteredTable
+import graft.functions.ClusteredTable.asLong
 
 /** THE CLUSTERED TABLE AS A FIRST-CLASS SPARK DATA SOURCE —
   * `spark.read.format("graft-clustered").option("root", …).load()` —
@@ -64,7 +65,7 @@ import graft.functions.ClusteredTable
   * integral-typed — envelope bounds are long, a wider or non-numeric
   * dimension is rejected at relation creation instead of wrapping
   * silently); `indexcol` names a
-  * Bloom-indexed long key (enables point-lookup pruning through
+  * Bloom-indexed key, long or string (enables point-lookup pruning through
   * [[ClusteredTable.indexCandidates]]); `asofversion` TIME-TRAVELS the
   * scan to one retained fold (exactly what that version folded — the
   * Delta `versionAsOf` shape; envelope pruning reads that version's
@@ -627,7 +628,7 @@ class ClusteredRelation(override val sqlContext: SQLContext, root: String,
   private def envelopesOf(snapVersion: Option[Long],
       snap: DataFrame): Seq[(Int, Seq[(Long, Long)])] =
     if (dims.isEmpty) Seq.empty
-    else snapVersion.flatMap(v => ClusteredTable.envelopesN(spark, root, v, dims))
+    else snapVersion.flatMap(v => ClusteredTable.envelopes(spark, root, v, dims))
       .getOrElse {
         // sound but O(table) per scan — make the engaged fallback (stale
         // `dims` config vs the catalog's recorded fold dims, or a
@@ -650,14 +651,6 @@ class ClusteredRelation(override val sqlContext: SQLContext, root: String,
             dims.indices.map(i => (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))): Seq[(Long, Long)]))
           .toSeq
       }
-
-  private def asLong(v: Any): Option[Long] = v match {
-    case i: Int => Some(i.toLong)
-    case l: Long => Some(l)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
 
   /** (lower, upper) bounds a conjunctive filter set implies for `c`. */
   private def bounds(filters: Array[Filter], c: String): (Long, Long) =
@@ -734,19 +727,16 @@ class ClusteredRelation(override val sqlContext: SQLContext, root: String,
     // in-box rows of the OLDER layout — refuse, never miss
     val bloom: Option[Seq[Int]] =
       if (asOfVersion.isDefined) None else indexCol.flatMap { k =>
-      // both key planes: an =/IN on the indexed column probes the plane
-      // its literals live on; the index's recorded `kind` makes a
-      // wrong-plane probe read as "no index" (degrade, never miss)
+      // an =/IN on the indexed column probes the key plane the index
+      // recorded (`kind`); a literal that plane cannot hash reads as
+      // "no index" (degrade, never miss). A NULL literal matches no row.
       val lits = filters.flatMap {
         case EqualTo(`k`, v) => Seq(v)
         case In(`k`, vs) => vs.toSeq
         case _ => Seq.empty
-      }.distinct
-      val longKeys = lits.flatMap(asLong)
-      val strKeys = lits.collect { case s: String => s }
-      if (longKeys.nonEmpty) ClusteredTable.indexCandidates(spark, root, k, longKeys.toSeq)
-      else if (strKeys.nonEmpty) ClusteredTable.indexCandidatesString(spark, root, k, strKeys.toSeq)
-      else None
+      }.filter(_ != null).distinct
+      if (lits.isEmpty) None
+      else ClusteredTable.indexCandidates(spark, root, k, lits.toSeq)
     }
     // ZONE MAPS: any filter-bounded column that is NOT a clustered dim
     // may still prune through the catalog's self-described stats
@@ -765,8 +755,8 @@ class ClusteredRelation(override val sqlContext: SQLContext, root: String,
       }.distinct.filterNot(dims.contains)
       if (candidates.isEmpty) None
       else {
-        val maps = ClusteredTable.zoneMaps(spark, root, v)
-        val strMaps = ClusteredTable.zoneMapsString(spark, root, v)
+        val maps = ClusteredTable.zoneMaps[Long](spark, root, v)
+        val strMaps = ClusteredTable.zoneMaps[String](spark, root, v)
         // binary UTF-8 byte order — identical to Spark's string
         // comparison and DuckDB's default collation, so the pruning
         // decision agrees with both engines

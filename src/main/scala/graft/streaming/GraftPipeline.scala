@@ -148,19 +148,6 @@ object GraftPipeline {
     }
   }
 
-  /** A1 — tumbling processing-time success/error counts (Logger.js:17-21:
-    * print and reset each interval == non-overlapping tumbling windows).
-    * Batch or streaming; on a stream use outputMode("update") so each
-    * window's counts are emitted as they change.
-    */
-  def intervalStats(routed: DataFrame, intervalSecs: Int): DataFrame =
-    routed
-      .groupBy(window(col("arrival_ts"), s"$intervalSecs seconds").as("w"))
-      .agg(
-        sum(when(col("valid"), 1L).otherwise(0L)).as("success"),
-        sum(when(!col("valid"), 1L).otherwise(0L)).as("error"))
-      .select(col("w.start").as("window_start"), col("success"), col("error"))
-
   /** Streaming exact dedup: drop records whose key columns repeat within
     * the watermark horizon — the streaming form of dedup_exact (state
     * bounded by the watermark; at 100 TB the state store holds one entry

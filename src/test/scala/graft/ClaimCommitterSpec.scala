@@ -58,7 +58,7 @@ class ClaimCommitterSpec extends SparkTestBase {
       val root = Files.createTempDirectory("cps_occ").toString
       ClusteredTable.append(mk((1L to 40L).map(i =>
         (i, (i % 16).toInt, (i % 12).toInt))), root, "00")
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
       ClusteredTable.append(mk((41L to 60L).map(i =>
         (i, (i % 16).toInt, (i % 12).toInt))), root, "01")
       import java.util.concurrent.{Executors, TimeUnit}
@@ -67,7 +67,7 @@ class ClaimCommitterSpec extends SparkTestBase {
       (1 to 2).foreach { _ =>
         pool.execute(() =>
           results.add(
-            try Right(ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16))
+            try Right(ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16))
             catch { case e: Throwable => Left(e) }))
       }
       pool.shutdown()
@@ -93,18 +93,18 @@ class ClaimCommitterSpec extends SparkTestBase {
     val root = Files.createTempDirectory("cps_crash").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 9, 2))), root, "00")
     withCommitter(new TornCommitter(crashAfterFirstChild = false)) {
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0, clean
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0, clean
     }
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "01")
     // the crash: the v=1 claim wins its marker, moves one child, dies
     withCommitter(new TornCommitter(crashAfterFirstChild = true)) {
       intercept[Exception] {
-        ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+        ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
       }
     }
     // torn target on disk, marker claimed — but READERS see the old state
     assert(new java.io.File(root, "base/.claim-v=1").isFile)
-    assert(ClusteredTable.latestVersion(root).contains(0L),
+    assert(ClusteredTable.readVersioned(spark, root)._1.contains(0L),
       "a torn version must be invisible (completeness markers never landed)")
     assert(ids(root) == Seq(1L, 2L, 3L),
       "reads stay exact through the torn claim (v=0 + pending delta)")
@@ -112,11 +112,11 @@ class ClaimCommitterSpec extends SparkTestBase {
     // holds it (a live winner must never have its target cleared)…
     withCommitter(new TornCommitter(crashAfterFirstChild = false)) {
       intercept[Exception] {
-        ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16, maxAttempts = 2)
+        ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, maxAttempts = 2)
       }
       // …until the LEASE expires: recover, retry, exact
       assert(ClusteredTable.recoverStaleClaims(root, olderThanMs = 0L) >= 1)
-      assert(ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) == 1L)
+      assert(ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) == 1L)
     }
     assert(ids(root) == Seq(1L, 2L, 3L))
     assert(ClusteredTable.read(spark, root).filter(col("zfile") < 0).count() == 0)
@@ -132,9 +132,9 @@ class ClaimCommitterSpec extends SparkTestBase {
     withCommitter(new TornCommitter(crashAfterFirstChild = false)) {
       val root = Files.createTempDirectory("cps_res").toString
       ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "00")
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
       ClusteredTable.append(mk(Seq((2L, 2, 2))), root, "01")
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
       ClusteredTable.vacuum(root) // reclaims v=0's directory
       assert(!new java.io.File(root, "base/v=0").exists())
       // a late claimer of the retired number (a stale fold's rename under

@@ -22,7 +22,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     val root = Files.createTempDirectory("csrc").toString
     ClusteredTable.append(mk(Seq((1L, 3, 4), (2L, 9, 2), (3L, 15, 11), (4L, 4, 3))), root, "00")
     ClusteredTable.append(mk(Seq((5L, 0, 0), (6L, 12, 7))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk(Seq((7L, 4, 4), (8L, 14, 1))), root, "02") // tail
     ClusteredTable.delete(Seq(Tuple1(2L)).toDF("id"), root, "03") // MoR
     root
@@ -69,7 +69,7 @@ class ClusteredSourceSpec extends SparkTestBase {
       "NULL backfill and box pruning stays exact") {
     val root = Files.createTempDirectory("csrc_evo").toString
     ClusteredTable.append(mk(Seq((1L, 3, 4), (2L, 15, 11))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.append(
       Seq((3L, 4, 3, "fresh")).toDF("id", "d1", "d2", "note"), root, "01")
     val df = src(root)
@@ -104,7 +104,7 @@ class ClusteredSourceSpec extends SparkTestBase {
       val root = Files.createTempDirectory("csrc_cat").toString
       ClusteredTable.append(mk(Seq((1L, 3, 4), (2L, 9, 2), (3L, 15, 11), (4L, 4, 3),
         (5L, 0, 0), (6L, 12, 7))), root, "00")
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
       root
     }
     val box = Array[org.apache.spark.sql.sources.Filter](
@@ -112,14 +112,14 @@ class ClusteredSourceSpec extends SparkTestBase {
       GreaterThanOrEqual("d2", 2), LessThanOrEqual("d2", 5))
     // catalog path (fresh fold always has _envelopes)
     val root = mkRoot()
-    assert(ClusteredTable.envelopes(spark, root, 0L, "d1", "d2").isDefined)
+    assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).isDefined)
     val rel = new ClusteredRelation(spark.sqlContext, root, Some("d1"), Some("d2"), None)
     val decided = rel.plannedBuckets(box).get
     // fallback path on a TWIN table with the catalog removed: the
     // recomputed decision must be identical
     val twin = mkRoot()
     ClusteredTable.rmTree(new java.io.File(twin, "base/v=0/_envelopes"))
-    assert(ClusteredTable.envelopes(spark, twin, 0L, "d1", "d2").isEmpty)
+    assert(ClusteredTable.envelopes(spark, twin, 0L, Seq("d1", "d2")).isEmpty)
     val relTwin = new ClusteredRelation(spark.sqlContext, twin, Some("d1"), Some("d2"), None)
     assert(relTwin.plannedBuckets(box).get == decided,
       "catalog and recomputed decisions must agree")
@@ -143,7 +143,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     // clean lifecycle: base fold + unfolded delta tail, NO deletes
     val root = Files.createTempDirectory("csrc_agg").toString
     ClusteredTable.append(mk(Seq((1L, 3, 4), (2L, 9, 2), (3L, 15, 11))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.append(mk(Seq((4L, 4, 3), (5L, 0, 0))), root, "01") // tail
     val agg = src(root).agg(count(lit(1)).as("n"),
       min("d1").as("mn1"), max("d1").as("mx1"), max("id").as("mxid"))
@@ -167,7 +167,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     val sroot = Files.createTempDirectory("csrc_aggs").toString
     ClusteredTable.append(Seq((1L, 1, 1, "b"), (2L, 2, 2, "a"))
       .toDF("id", "d1", "d2", "note"), sroot, "00")
-    ClusteredTable.optimize(spark, sroot, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, sroot, Seq("d1", "d2"), 4, 16)
     val sAgg = src(sroot).agg(min("note").as("mn"))
     assert(!sAgg.queryExecution.executedPlan.toString.contains("PushedAggregates"))
     assert(sAgg.head.getString(0) == "a")
@@ -200,7 +200,7 @@ class ClusteredSourceSpec extends SparkTestBase {
       q.processAllAvailable()
       assert(seen == Seq(1L, 2L, 3L), "the pushed filter must drop d1=0 in the reader")
       // the full maintenance lifecycle under the live tail
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
       ClusteredTable.vacuum(root)
       ClusteredTable.append(mk(Seq((4L, 4, 4))), root, "02")
       q.processAllAvailable()
@@ -254,7 +254,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     } finally q.stop()
     // maintenance folds the mixed-provenance deltas; the format READ
     // serves the clustered result — the square closes
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     val back = spark.read.format("graft-clustered").option("root", root).load()
     assert(back.where(col("zfile") >= 0).select("id").as[Long].collect().toSeq.sorted
       == Seq(1L, 2L, 3L, 4L))
@@ -278,7 +278,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     assert(got.size() == 1)
     // an append the consumer never saw gets folded AND vacuumed away
     ClusteredTable.append(mk(Seq((2L, 2, 2))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.vacuum(root)
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "02")
     val q2 = start()
@@ -314,7 +314,7 @@ class ClusteredSourceSpec extends SparkTestBase {
       "widened column contribute NULLs (skipped), COUNT(col) counts non-nulls") {
     val root = Files.createTempDirectory("csrc_aggevo").toString
     ClusteredTable.append(mk(Seq((1L, 3, 4), (2L, 9, 2))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // base predates `extra`
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // base predates `extra`
     ClusteredTable.append(
       Seq((3L, 4, 3, 7), (4L, 0, 0, 2)).toDF("id", "d1", "d2", "extra"), root, "01")
     val agg = src(root).agg(count(lit(1)).as("n"), count(col("extra")).as("n_extra"),
@@ -331,7 +331,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     val root = Files.createTempDirectory("csrc_tail2").toString
     val ck = Files.createTempDirectory("csrc_tail2_ck").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // base exists -> schema has zkey/zfile
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // base exists -> schema has zkey/zfile
     ClusteredTable.append(mk(Seq((2L, 2, 2))), root, "01")
     val df = spark.readStream.format("graft-clustered").option("root", root).load()
     assert(df.columns.contains("zfile") && df.columns.contains("zkey"))
@@ -357,7 +357,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     // history: two deltas folded and reclaimed before any consumer existed
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "00")
     ClusteredTable.append(mk(Seq((2L, 2, 2))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.vacuum(root) // reclaims d=00, d=01 (ledger still names them)
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "02") // un-reclaimed tail
     val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -410,7 +410,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     // maintenance mid-lifecycle, then a second backlog laid down while the
     // consumer is offline (so the drain shape is deterministic): the
     // restarted checkpoint drains it under the same admission bound
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.vacuum(root)
     (6 until 11).foreach(i =>
       ClusteredTable.append(mk(Seq((i.toLong, i % 16, i % 16))), root, f"$i%02d"))
@@ -441,7 +441,7 @@ class ClusteredSourceSpec extends SparkTestBase {
       "the view must see appends that land after CREATE VIEW")
     // fold + vacuum reclaim the version the view first read; the view must
     // re-resolve, not fail on missing files (pre-fix: FileNotFound)
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.vacuum(root)
     assert(ids == Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L, 9L),
       "the view must survive maintenance that reclaims its first snapshot")
@@ -472,7 +472,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     ClusteredTable.append(
       (0L until 64L).map(i => (i, s"doc-$i", (i % 16).toInt, (i % 12).toInt))
         .toDF("id", "url", "d1", "d2"), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.buildIndex(spark, root, "url")
     val rel = new ClusteredRelation(spark.sqlContext, root,
       Some("d1"), Some("d2"), Some("url"))
@@ -495,10 +495,10 @@ class ClusteredSourceSpec extends SparkTestBase {
     val root = Files.createTempDirectory("csrc_tt").toString
     ClusteredTable.append(
       mk(Seq((1L, 3, 4), (2L, 9, 2), (3L, 15, 11), (4L, 4, 3))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.delete(Seq(Tuple1(2L)).toDF("id"), root, "01")
     ClusteredTable.append(mk(Seq((5L, 0, 0))), root, "02")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     def at(v: String) = spark.read.format("graft-clustered")
       .option("root", root).option("d1", "d1").option("d2", "d2")
       .option("asofversion", v).load()
@@ -533,7 +533,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     val rows = (1L to 200L).map(i =>
       (i, (i % 16).toInt, (i % 12).toInt, ((i % 12) * 100 + i % 50).toInt))
     ClusteredTable.append(rows.toDF("id", "d1", "d2", "ev"), root, "00")
-    ClusteredTable.optimizeN(spark, root, Seq("d1", "d2"), 4, 16,
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16,
       statsCols = Seq("ev"))
     ClusteredTable.append(
       Seq((201L, 3, 4, 410)).toDF("id", "d1", "d2", "ev"), root, "01") // in-range tail
@@ -560,10 +560,10 @@ class ClusteredSourceSpec extends SparkTestBase {
       "window is rejected loudly") {
     val root = Files.createTempDirectory("csrc_cdf").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "01")
     ClusteredTable.delete(Seq(Tuple1(1L)).toDF("id"), root, "02")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     def cdf = spark.read.format("graft-clustered").option("root", root)
       .option("changesfrom", "0").option("changesto", "1").load()
     val got = cdf.select("id", "_change").as[(Long, String)].collect().toSeq.sorted
@@ -589,11 +589,11 @@ class ClusteredSourceSpec extends SparkTestBase {
     val rows = (1L to 200L).map(i => (i, (i % 16).toInt, (i % 12).toInt,
       f"2024-${(i % 12) + 1}%02d", ((i % 12) * 100 + i % 50).toInt))
     ClusteredTable.append(rows.toDF("id", "d1", "d2", "ym", "ev"), root, "00")
-    val v = ClusteredTable.optimizeN(spark, root, Seq("d1", "d2"), 4, 16,
+    val v = ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16,
       statsCols = Seq("ev", "ym"))
     // each stats column lands on the plane of its own type
-    assert(ClusteredTable.zoneMaps(spark, root, v).keySet == Set("ev"))
-    assert(ClusteredTable.zoneMapsString(spark, root, v).keySet == Set("ym"))
+    assert(ClusteredTable.zoneMaps[Long](spark, root, v).keySet == Set("ev"))
+    assert(ClusteredTable.zoneMaps[String](spark, root, v).keySet == Set("ym"))
     val rel = new ClusteredRelation(spark.sqlContext, root, Seq("d1", "d2"), None)
     val keep = rel.plannedBuckets(Array(
       GreaterThanOrEqual("ym", "2024-05"), LessThanOrEqual("ym", "2024-06"))).get
@@ -622,9 +622,9 @@ class ClusteredSourceSpec extends SparkTestBase {
     ClusteredTable.append(
       (11L to 50L).map(i => (i, (i % 4).toInt, (i % 12).toInt, (i % 100).toInt))
         .toDF("id", "d1", "d2", "ev"), root, "01")
-    val v = ClusteredTable.optimizeN(spark, root, Seq("d1", "d2"), 4, 16,
+    val v = ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16,
       statsCols = Seq("ev"))
-    val zm = ClusteredTable.zoneMaps(spark, root, v)("ev")
+    val zm = ClusteredTable.zoneMaps[Long](spark, root, v).apply("ev")
     val nullBuckets = zm.collect { case (zf, None, None) => zf }
     assert(nullBuckets.nonEmpty, "the pre-evolution bucket must carry NULL bounds")
     val rel = new ClusteredRelation(spark.sqlContext, root, Seq("d1", "d2"), None)
@@ -661,7 +661,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     ClusteredTable.append(
       (1L to 300L).map(i => (i, (i % 16).toInt, (i % 12).toInt, (i % 7).toInt))
         .toDF("id", "d1", "d2", "d3"), root, "00")
-    ClusteredTable.optimizeN(spark, root, Seq("d1", "d2", "d3"), 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2", "d3"), 4, 16)
     ClusteredTable.append(
       Seq((301L, 2, 5, 3)).toDF("id", "d1", "d2", "d3"), root, "01") // in-box tail
     // the DECISION, pinned via the dims-list constructor

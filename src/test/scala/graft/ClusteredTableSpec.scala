@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.functions.{ClusteredTable, ZorderLayout}
 
@@ -22,7 +23,7 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_life").toString
     ClusteredTable.append(mk(Seq((1L, 0, 0), (2L, 3, 4))), root, "b0")
     ClusteredTable.append(mk(Seq((3L, 15, 11))), root, "b1")
-    val v0 = ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    val v0 = ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(v0 == 0L)
     assert(ids(root) == Seq(1L, 2L, 3L))
     // base rows carry their zfile partition; no delta rows yet
@@ -36,23 +37,23 @@ class ClusteredTableSpec extends SparkTestBase {
       .filter(col("zfile") === -1).select("id").as[Long].collect().toSeq == Seq(4L))
 
     // a second optimize folds the tail; nothing to fold after that is a no-op
-    val v1 = ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    val v1 = ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(v1 == 1L)
     assert(ids(root) == Seq(1L, 2L, 3L, 4L))
     assert(ClusteredTable.read(spark, root).filter(col("zfile") < 0).count() == 0)
-    assert(ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) == 1L)
+    assert(ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) == 1L)
   }
 
   test("folded deltas still on disk are never double-counted; vacuum reclaims them") {
     val root = Files.createTempDirectory("ct_dc").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "b0")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     // the folded delta directory is STILL present (no vacuum yet) —
     // the manifest must keep it out of the read
     assert(new java.io.File(root, "delta/d=b0").exists())
     assert(ids(root) == Seq(1L, 2L))
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "b1")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(ids(root) == Seq(1L, 2L, 3L))
     val removed = ClusteredTable.vacuum(root)
     assert(removed == 3, s"2 folded deltas + 1 superseded base, got $removed")
@@ -64,7 +65,7 @@ class ClusteredTableSpec extends SparkTestBase {
   test("optimize is idempotent from the torn-version crash point") {
     val root = Files.createTempDirectory("ct_crash").toString
     ClusteredTable.append(mk(Seq((1L, 4, 4), (2L, 8, 9))), root, "b0")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.append(mk(Seq((3L, 12, 6))), root, "b1")
     // simulate a crash mid-optimize: v=1's parquet landed but the
     // manifest (the visibility point) did not
@@ -77,7 +78,7 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(ClusteredTable.read(spark, root)
       .filter(col("zfile") === -1).count() == 1)
     // re-running optimize overwrites the torn version and completes it
-    val v = ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    val v = ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(v == 1L)
     assert(ids(root) == Seq(1L, 2L, 3L))
     assert(ClusteredTable.read(spark, root).filter(col("zfile") < 0).count() == 0)
@@ -87,7 +88,7 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_replay").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "b0")
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "b0") // at-least-once ingest
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(ids(root) == Seq(1L))
   }
 
@@ -95,9 +96,9 @@ class ClusteredTableSpec extends SparkTestBase {
       "under later ingest; vacuum bounds the horizon") {
     val root = Files.createTempDirectory("ct_tt").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "b0")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0: {1,2}
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0: {1,2}
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "b1")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1: {1,2,3}
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1: {1,2,3}
     ClusteredTable.append(mk(Seq((4L, 4, 4))), root, "b2")  // live tail
     def at(v: Long): Seq[Long] = ClusteredTable.read(spark, root, Some(v))
       .select("id").as[Long].collect().toSeq.sorted
@@ -124,7 +125,7 @@ class ClusteredTableSpec extends SparkTestBase {
     ClusteredTable.append(mk(Seq((2L, 2, 2), (4L, 4, 4))), root, "02")
     assert(ids(root) == Seq(1L, 2L, 3L, 4L))
     // optimize applies the delete physically and retires the DV file
-    val v0 = ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    val v0 = ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(v0 == 0L)
     assert(ids(root) == Seq(1L, 2L, 3L, 4L))
     // the folded base must contain the resurrected 2 exactly once and
@@ -146,26 +147,26 @@ class ClusteredTableSpec extends SparkTestBase {
       "produces a new physical version") {
     val root = Files.createTempDirectory("ct_dvonly").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "00")
-    assert(ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) == 0L)
+    assert(ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) == 0L)
     ClusteredTable.delete(Seq(1L).toDF("id"), root, "01")
-    assert(ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) == 1L)
+    assert(ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) == 1L)
     assert(ids(root) == Seq(2L))
     // time travel still sees the pre-delete snapshot
     assert(ClusteredTable.read(spark, root, Some(0L))
       .select("id").as[Long].collect().toSeq.sorted == Seq(1L, 2L))
     // nothing left pending: optimize is a no-op again
-    assert(ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) == 1L)
+    assert(ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) == 1L)
   }
 
   test("changefeed: net window diff with pre-image deletes; reconstruction " +
       "read(to) == read(from) + inserts - deletes; vacuum bounds the horizon") {
     val root = Files.createTempDirectory("ct_cf").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2), (7L, 7, 7))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk(Seq((3L, 3, 3), (14L, 9, 9))), root, "01")
     ClusteredTable.delete(Seq(7L, 14L, 99L).toDF("id"), root, "02")
     ClusteredTable.append(mk(Seq((14L, 9, 9), (4L, 4, 4))), root, "03") // 14 re-appended
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     val ch = ClusteredTable.changes(spark, root, 0L, 1L).cache()
     // inserts: 3 (b01, survives), 14+4 (b03, delete is older); b01's 14
     // nets out against x=02; 99 never existed -> no delete row
@@ -196,7 +197,7 @@ class ClusteredTableSpec extends SparkTestBase {
     // 64 rows spread over the full 16x12 grid -> 16 occupied z-buckets
     val rows = (0L until 64L).map(i => (i, (i % 16).toInt, (i % 12).toInt))
     ClusteredTable.append(mk(rows), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.buildIndex(spark, root, "id")
     ClusteredTable.append(mk(Seq((100L, 5, 5))), root, "01") // unfolded tail
     val total = ClusteredTable.read(spark, root)
@@ -213,7 +214,7 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(ClusteredTable.lookup(spark, root, "id", Seq(9999L)).count() == 0)
     // optimize folds the tail into v=1 -> the v=0 index does not apply;
     // lookup silently degrades to the unpruned (still correct) scan
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(ClusteredTable.indexCandidates(spark, root, "id", keys).isEmpty)
     assert(ClusteredTable.lookup(spark, root, "id", keys)
       .select("id").as[Long].collect().toSeq.sorted == Seq(7L, 100L))
@@ -233,7 +234,7 @@ class ClusteredTableSpec extends SparkTestBase {
       "permanently, and time travel keeps each version's own schema") {
     val root = Files.createTempDirectory("ct_evo").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0, old schema
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0, old schema
     // the evolved batch carries a NEW column `lang`
     ClusteredTable.append(
       Seq((3L, 3, 3, "en"), (4L, 4, 4, "de")).toDF("id", "d1", "d2", "lang"), root, "01")
@@ -244,7 +245,7 @@ class ClusteredTableSpec extends SparkTestBase {
       == Seq(1L, 2L))
     assert(t.filter(col("lang") === "en").select("id").as[Long].collect().toSeq == Seq(3L))
     // optimize folds the widened schema into base v=1 for good
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     val v1 = ClusteredTable.read(spark, root)
     assert(v1.filter(col("zfile") < 0).count() == 0 && v1.columns.contains("lang"))
     assert(v1.filter(col("lang").isNotNull).count() == 2)
@@ -266,7 +267,7 @@ class ClusteredTableSpec extends SparkTestBase {
     def mkp(rows: Seq[(Long, Int, Int, String)]) = rows.toDF("id", "d1", "d2", "payload")
     ClusteredTable.append(mkp(Seq((1L, 1, 1, "keep-a"), (2L, 2, 2, sentinel))), root, "00")
     ClusteredTable.append(mkp(Seq((3L, 3, 3, sentinel + "-again"), (4L, 4, 4, "keep-b"))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // sentinel now in base v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // sentinel now in base v=0
     ClusteredTable.delete(Seq(Tuple1(2L), Tuple1(3L)).toDF("id"), root, "02")
     // hidden immediately, but bytes persist until fold + vacuum
     assert(ids(root) == Seq(1L, 4L))
@@ -281,7 +282,7 @@ class ClusteredTableSpec extends SparkTestBase {
       }
     }
     assert(bytesContain(sentinel), "pre-purge: bytes must still be on disk (MOR)")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1 rewrites without them
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1 rewrites without them
     ClusteredTable.vacuum(root) // reclaims v=0, folded deltas, the DV
     assert(!bytesContain(sentinel),
       "post-purge: no file under the root may contain the purged payload")
@@ -307,7 +308,7 @@ class ClusteredTableSpec extends SparkTestBase {
       // fold everything into base/ and reclaim the delta files UNDER the
       // live tail: the glob never covers base/, the seen-file log covers
       // the removals — nothing re-surfaces, nothing is lost
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
       ClusteredTable.vacuum(root)
       ClusteredTable.append(mk(Seq((4L, 4, 4))), root, "02")
       q.processAllAvailable()
@@ -325,10 +326,10 @@ class ClusteredTableSpec extends SparkTestBase {
     // the feed alone
     val root = Files.createTempDirectory("ct_ivm").toString
     ClusteredTable.append(mk(Seq((1L, 1, 10), (2L, 1, 20), (3L, 2, 30))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk(Seq((4L, 1, 40), (5L, 3, 50))), root, "01")
     ClusteredTable.delete(Seq(2L, 5L).toDF("id"), root, "02") // one base, one window row
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     def viewAt(v: Long) = ClusteredTable.read(spark, root, Some(v))
       .groupBy("d1").agg(count(lit(1)).as("n"), sum("d2").as("sq"))
     val signed = ClusteredTable.changes(spark, root, 0L, 1L)
@@ -363,7 +364,7 @@ class ClusteredTableSpec extends SparkTestBase {
       // at-least-once replay of batch 1 through the same sink fn
       ingest(mk(Seq((3L, 14, 1))), 1L)
       assert(ids(root) == Seq(1L, 2L, 3L))
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
       assert(ids(root) == Seq(1L, 2L, 3L))
       assert(ClusteredTable.read(spark, root).filter(col("zfile") < 0).count() == 0)
     } finally q.stop()
@@ -375,27 +376,27 @@ class ClusteredTableSpec extends SparkTestBase {
     val rRoot = Files.createTempDirectory("ct_cdc_r").toString
     // primary v=0: rows 1..6
     ClusteredTable.append(mk((1L to 6L).map(i => (i, i.toInt, 0))), pRoot, "00")
-    ClusteredTable.optimize(spark, pRoot, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, pRoot, Seq("d1", "d2"), 4, 16)
     // window 1: delete {2,3}, re-insert 3 AFTER the delete (resurrection),
     // insert 7 — net: -2, 3 replaced, +7
     ClusteredTable.delete(Seq(Tuple1(2L), Tuple1(3L)).toDF("id"), pRoot, "01")
     ClusteredTable.append(mk(Seq((3L, 3, 99), (7L, 7, 0))), pRoot, "02")
-    ClusteredTable.optimize(spark, pRoot, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, pRoot, Seq("d1", "d2"), 4, 16) // v=1
     // window 2: delete window-1's insert {7} and a v=0 survivor {1}
     ClusteredTable.delete(Seq(Tuple1(7L), Tuple1(1L)).toDF("id"), pRoot, "03")
-    ClusteredTable.optimize(spark, pRoot, "d1", "d2", 4, 16) // v=2
+    ClusteredTable.optimize(spark, pRoot, Seq("d1", "d2"), 4, 16) // v=2
     def snap(root: String, v: Option[Long] = None) =
       ClusteredTable.read(spark, root, v).select("id", "d1", "d2")
     // replica: seed at v=0, replay each window in order
     ClusteredTable.append(snap(pRoot, Some(0L)), rRoot, "00")
-    ClusteredTable.optimize(spark, rRoot, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, rRoot, Seq("d1", "d2"), 4, 16)
     ClusteredTable.applyChanges(
       ClusteredTable.changes(spark, pRoot, 0L, 1L), rRoot, "01", Seq("id"))
     assert(snap(rRoot).exceptAll(snap(pRoot, Some(1L))).count() == 0 &&
       snap(pRoot, Some(1L)).exceptAll(snap(rRoot)).count() == 0,
       "replica must equal primary@v1 after window 1 (resurrected row included)")
     // replica folds on its own cadence; convergence must survive it
-    ClusteredTable.optimize(spark, rRoot, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, rRoot, Seq("d1", "d2"), 4, 16)
     ClusteredTable.applyChanges(
       ClusteredTable.changes(spark, pRoot, 1L, 2L), rRoot, "02", Seq("id"))
     assert(snap(rRoot).exceptAll(snap(pRoot, Some(2L))).count() == 0 &&
@@ -413,14 +414,14 @@ class ClusteredTableSpec extends SparkTestBase {
     // 6 rows, target 2/file -> want 3 -> 4 files -> zSpan 64 -> zfile in 0..3
     ClusteredTable.append(mk(Seq((1L, 0, 0), (2L, 3, 4), (3L, 15, 11),
       (4L, 7, 2), (5L, 9, 9), (6L, 12, 5))), root, "00")
-    ClusteredTable.optimizeAuto(spark, root, "d1", "d2", 4, targetRowsPerFile = 2L)
+    ClusteredTable.optimizeAuto(spark, root, Seq("d1", "d2"), 4, targetRowsPerFile = 2L)
     val z1 = ClusteredTable.read(spark, root).select("zfile").as[Int].collect()
     assert(z1.length == 6 && z1.forall(z => z >= 0 && z < 4))
     // grow to 32 rows: want 16 -> 16 files -> zSpan 16; (15,11) has a
     // high Morton key, so buckets beyond the old 0..3 range must appear
     ClusteredTable.append(
       mk((7L to 32L).map(i => (i, (i % 16).toInt, ((i * 7) % 12).toInt))), root, "01")
-    ClusteredTable.optimizeAuto(spark, root, "d1", "d2", 4, targetRowsPerFile = 2L)
+    ClusteredTable.optimizeAuto(spark, root, Seq("d1", "d2"), 4, targetRowsPerFile = 2L)
     val z2 = ClusteredTable.read(spark, root).select("zfile").as[Int].collect()
     assert(z2.length == 32 && z2.forall(z => z >= 0 && z < 16))
     assert(z2.max > 3, "a grown table must spread past the day-one bucket range")
@@ -431,11 +432,11 @@ class ClusteredTableSpec extends SparkTestBase {
       "the kept window; outside it both fail loudly") {
     val root = Files.createTempDirectory("ct_retain").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     ClusteredTable.append(mk(Seq((4L, 4, 4))), root, "02")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=2
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=2
     ClusteredTable.vacuum(root, keepVersions = 2)
     // inside the window: travel to v=1 and v=2, and the v1->v2 feed
     assert(ClusteredTable.read(spark, root, Some(1L)).count() == 3)
@@ -461,7 +462,7 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_upsert").toString
     // d2 doubles as a row "payload version" so replacement is observable
     ClusteredTable.append(mk(Seq((1L, 1, 10), (2L, 2, 10), (3L, 3, 10))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     // MERGE: update id=2 (new payload 20), insert id=4
     ClusteredTable.upsert(mk(Seq((2L, 2, 20), (4L, 4, 20))), root, "01", Seq("id"))
     def payloads() = ClusteredTable.read(spark, root)
@@ -472,7 +473,7 @@ class ClusteredTableSpec extends SparkTestBase {
     ClusteredTable.upsert(mk(Seq((2L, 2, 20), (4L, 4, 20))), root, "01", Seq("id"))
     assert(payloads() == Seq((1L, 10), (2L, 20), (3L, 10), (4L, 20)))
     // the fold applies the pair physically and the merge survives it
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(payloads() == Seq((1L, 10), (2L, 20), (3L, 10), (4L, 20)))
     assert(ClusteredTable.read(spark, root).filter(col("zfile") < 0).count() == 0)
     // a LATER plain append of a merged key outranks the upsert's delete
@@ -486,20 +487,20 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_reindex").toString
     ClusteredTable.append(
       mk((1L to 24L).map(i => (i, (i % 16).toInt, ((i * 5) % 12).toInt))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16, reindex = Seq("id"))
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, reindex = Seq("id"))
     assert(ClusteredTable.indexCandidates(spark, root, "id", Seq(7L)).isDefined,
       "the fold must leave an index on the new version")
     // a second fold absorbs new data; the index must follow to v=1 and
     // cover the newly folded keys
     ClusteredTable.append(mk(Seq((100L, 2, 2))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16, reindex = Seq("id"))
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, reindex = Seq("id"))
     val cand = ClusteredTable.indexCandidates(spark, root, "id", Seq(100L))
     assert(cand.isDefined, "the index must exist on the re-folded version")
     val hit = ClusteredTable.lookup(spark, root, "id", Seq(100L))
       .select("id").as[Long].collect().toSeq
     assert(hit == Seq(100L))
     // a no-op fold with reindex on an unindexed column backfills it
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16, reindex = Seq("d1"))
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, reindex = Seq("d1"))
     assert(ClusteredTable.indexCandidates(spark, root, "d1", Seq(2L)).isDefined,
       "a no-op fold must still backfill a missing index")
   }
@@ -508,7 +509,7 @@ class ClusteredTableSpec extends SparkTestBase {
       "staging for latest+1 survives until a later fold settles its race") {
     val root = Files.createTempDirectory("ct_stage").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     // a fold targeting v=1 crashed mid-staging: its orphan might still
     // be renamed by a live fold, so vacuum must NOT touch it
     val orphan = new java.io.File(root, "base/.staging-v=1-deadbeef")
@@ -517,7 +518,7 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(orphan.exists(), "a possibly-live staging must survive vacuum")
     // once v=1 is claimed by a real fold, the orphan's race is settled
     ClusteredTable.append(mk(Seq((2L, 2, 2))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     ClusteredTable.vacuum(root)
     assert(!orphan.exists(), "a settled-race staging is garbage and must go")
     assert(ids(root) == Seq(1L, 2L))
@@ -527,11 +528,11 @@ class ClusteredTableSpec extends SparkTestBase {
       "tombstone-first means the replayed pair converges, never loses the key") {
     val root = Files.createTempDirectory("ct_upsert_fold").toString
     ClusteredTable.append(mk(Seq((1L, 1, 10), (2L, 2, 10))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     // crash half-way through upsert "01": the tombstone landed, the
     // delta did not — and an out-of-band fold runs before the replay
     ClusteredTable.delete(Seq(Tuple1(2L)).toDF("id"), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // absorbs the tombstone
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // absorbs the tombstone
     // the at-least-once replay completes the pair
     ClusteredTable.upsert(mk(Seq((2L, 2, 20))), root, "01", Seq("id"))
     def payloads() = ClusteredTable.read(spark, root)
@@ -539,7 +540,7 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(payloads() == Seq((1L, 10), (2L, 20)),
       "the matched key must carry exactly its new image after fold + replay")
     // and the merge survives the next fold too
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(payloads() == Seq((1L, 10), (2L, 20)))
   }
 
@@ -548,8 +549,8 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_env").toString
     ClusteredTable.append(
       mk((1L to 40L).map(i => (i, (i % 16).toInt, ((i * 7) % 12).toInt))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
-    val cat = ClusteredTable.envelopes(spark, root, 0L, "d1", "d2")
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
+    val cat = ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2"))
     assert(cat.isDefined, "the fold must land a catalog")
     // the catalog IS the recomputed aggregate (fold-time == read-time here)
     val recomputed = ClusteredTable.read(spark, root).filter(col("zfile") >= 0)
@@ -557,34 +558,99 @@ class ClusteredTableSpec extends SparkTestBase {
         min(col("d1").cast("long")).as("mn1"), max(col("d1").cast("long")).as("mx1"),
         min(col("d2").cast("long")).as("mn2"), max(col("d2").cast("long")).as("mx2"))
       .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .map(r => (r.getInt(0), Seq((r.getLong(1), r.getLong(2)), (r.getLong(3), r.getLong(4)))))
       .toSeq.sortBy(_._1)
     assert(cat.get.sortBy(_._1) == recomputed)
     // dimension mismatch reads as "no catalog", never as wrong bounds
-    assert(ClusteredTable.envelopes(spark, root, 0L, "d2", "d1").isEmpty)
+    assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d2", "d1")).isEmpty)
     // the catalog versions with the table: the next fold gets its own.
     // (0, 0) extends bucket 0's bounds, so the catalogs differ in VALUE —
     // the earlier (15, 11) row fell inside bucket 14's existing bounds
     // and only the aggregate's nondeterministic row order made the old
     // inequality pass; the footer-stats catalog (r18) is order-stable.
     ClusteredTable.append(mk(Seq((100L, 0, 0))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
-    val cat1 = ClusteredTable.envelopes(spark, root, 1L, "d1", "d2")
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
+    val cat1 = ClusteredTable.envelopes(spark, root, 1L, Seq("d1", "d2"))
     assert(cat1.isDefined &&
       cat1.get.sortBy(_._1) != cat.get.sortBy(_._1),
       "v=1 must carry its own catalog")
     // and vacuum of the superseded version reclaims its catalog with it
     ClusteredTable.vacuum(root)
-    assert(ClusteredTable.envelopes(spark, root, 0L, "d1", "d2").isEmpty)
+    assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).isEmpty)
+  }
+
+  /** The WARN-or-worse messages ClusteredTable logs while `f` runs. */
+  private def warnsDuring(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("ct-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = LogManager.getLogger(ClusteredTable.getClass.getName).asInstanceOf[Logger]
+    logger.addAppender(app)
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    try f finally {
+      logger.setLevel(level)
+      logger.removeAppender(app)
+      app.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("envelope catalog: a string zone-map column past parquet's 4 KB " +
+      "footer-statistics limit makes the footer read refuse; the aggregate " +
+      "fallback lands the same bounds and warns once") {
+    val root = Files.createTempDirectory("ct_env_refuse").toString
+    // 3000-char values: every chunk's min + max reach parquet's 4096-byte
+    // MAX_STATS_SIZE, so the writer records no min/max for `big`
+    val rows = (1L to 40L).map(i =>
+      (i, (i % 16).toInt, ((i * 7) % 12).toInt, f"$i%03d" + "x" * 3000))
+    ClusteredTable.append(rows.toDF("id", "d1", "d2", "big"), root, "00")
+    val warns = warnsDuring {
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, statsCols = Seq("big"))
+    }
+    // the refusal's cause is real: the folded footers carry no `big` bounds
+    val parts = Files.walk(Paths.get(root, "base", "v=0")).iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+        p.toString.contains("zfile=")).toSeq
+    assert(parts.nonEmpty)
+    parts.foreach { p =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toUri), spark.sessionState.newHadoopConf())
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == "big")
+        .foreach(c => assert(!c.getStatistics.hasNonNullValue, s"$p kept min/max for big"))
+      finally reader.close()
+    }
+    assert(warns.count(_.contains("footer statistics refused")) == 1, warns)
+    // the fallback catalog equals the per-bucket min/max over the fold
+    val truth = ClusteredTable.read(spark, root).groupBy("zfile").agg(
+        min(col("d1").cast("long")), max(col("d1").cast("long")),
+        min(col("d2").cast("long")), max(col("d2").cast("long")),
+        min("big"), max("big"))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    val env = ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).get
+    assert(env.toMap == truth.map { case (zf, r) =>
+      zf -> Seq((r.getLong(1), r.getLong(2)), (r.getLong(3), r.getLong(4))) })
+    val zm = ClusteredTable.zoneMaps[String](spark, root, 0L).apply("big")
+    assert(zm.map { case (zf, mn, mx) => zf -> (mn, mx) }.toMap == truth.map { case (zf, r) =>
+      zf -> (Some(r.getString(5)), Some(r.getString(6))) })
   }
 
   test("vacuum never reclaims base v=N while a staging targets N (the " +
       "resurrection guard): the version is deferred one pass, then goes") {
     val root = Files.createTempDirectory("ct_resur").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk(Seq((2L, 2, 2))), root, "01")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1 supersedes v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1 supersedes v=0
     // a lost fold's staging still targets v=0 (its race is settled —
     // but while it EXISTS, v=0 must stay, else the staging's rename
     // could resurrect stale content under a retired version number)
@@ -605,16 +671,16 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_bloomstr").toString
     val rows = (0L until 64L).map(i => (i, s"doc-$i", (i % 16).toInt, (i % 12).toInt))
     ClusteredTable.append(rows.toDF("id", "url", "d1", "d2"), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.buildIndex(spark, root, "url")
     val occupied = ClusteredTable.read(spark, root)
       .filter(col("zfile") >= 0).select("zfile").distinct().count()
-    val cand = ClusteredTable.indexCandidatesString(spark, root, "url", Seq("doc-7"))
+    val cand = ClusteredTable.indexCandidates(spark, root, "url", Seq("doc-7"))
     assert(cand.isDefined && cand.get.size < occupied,
       s"string index must skip buckets: $cand of $occupied")
-    assert(ClusteredTable.lookupString(spark, root, "url", Seq("doc-7", "doc-63"))
+    assert(ClusteredTable.lookup(spark, root, "url", Seq("doc-7", "doc-63"))
       .select("id").as[Long].collect().toSeq.sorted == Seq(7L, 63L))
-    assert(ClusteredTable.lookupString(spark, root, "url", Seq("doc-nope")).count() == 0)
+    assert(ClusteredTable.lookup(spark, root, "url", Seq("doc-nope")).count() == 0)
     // the wrong plane reads as NO index (degrade), never a missed bucket
     assert(ClusteredTable.indexCandidates(spark, root, "url", Seq(7L)).isEmpty)
   }
@@ -692,10 +758,10 @@ class ClusteredTableSpec extends SparkTestBase {
       "artifact count; vacuum bounds it exactly like the travel horizon") {
     val root = Files.createTempDirectory("ct_hist").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk(Seq((2L, 2, 2))), root, "01")
     ClusteredTable.delete(Seq(Tuple1(1L)).toDF("id"), root, "02")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     def h = ClusteredTable.history(spark, root)
       .as[(Long, Long)].collect().toSeq.sortBy(_._1)
     assert(h == Seq((0L, 1L), (1L, 3L)),
@@ -709,7 +775,7 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_hilbert").toString
     val rows = (1L to 40L).map(i => (i, (i % 16).toInt, ((i * 7) % 12).toInt))
     ClusteredTable.append(mk(rows), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16, curve = "hilbert")
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, curve = "hilbert")
     val t = ClusteredTable.read(spark, root)
     // every stored zkey equals the recomputed Hilbert index
     assert(t.filter(col("zkey") =!=
@@ -717,7 +783,7 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(ids(root) == (1L to 40L))
     // the envelope catalog, MoR deletes and Bloom lookups key on the
     // bucket, not the curve
-    assert(ClusteredTable.envelopes(spark, root, 0L, "d1", "d2").isDefined)
+    assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).isDefined)
     ClusteredTable.delete(Seq(Tuple1(7L)).toDF("id"), root, "01")
     assert(ids(root) == (1L to 40L).filterNot(_ == 7L))
     ClusteredTable.buildIndex(spark, root, "id")
@@ -725,7 +791,7 @@ class ClusteredTableSpec extends SparkTestBase {
       .select("id").as[Long].collect().toSeq == Seq(9L))
     // an unknown curve is rejected loudly
     intercept[IllegalArgumentException] {
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16, curve = "peano")
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, curve = "peano")
     }
   }
 
@@ -736,7 +802,7 @@ class ClusteredTableSpec extends SparkTestBase {
     // every row lands in z-bucket 0 (d1, d2 in 0..3 -> morton key < 16)
     val rows = (1L to 30L).map(i => (i, (i % 4).toInt, ((i * 3) % 4).toInt))
     ClusteredTable.append(mk(rows), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16, maxRecordsPerFile = 10L)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, maxRecordsPerFile = 10L)
     val vdir = new java.io.File(root, "base/v=0")
     val zdirs = Option(vdir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("zfile="))
@@ -751,7 +817,7 @@ class ClusteredTableSpec extends SparkTestBase {
     }
     // rows and the fold-time catalog are unaffected by the file split
     assert(ids(root) == (1L to 30L))
-    val cat = ClusteredTable.envelopes(spark, root, 0L, "d1", "d2")
+    val cat = ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2"))
     assert(cat.isDefined && cat.get.map(_._1) == Seq(0),
       "the envelope catalog keys on the bucket, not the file count")
   }
@@ -761,7 +827,7 @@ class ClusteredTableSpec extends SparkTestBase {
       "changefeed, vacuum and the artifact ledger all stay exact") {
     val root = Files.createTempDirectory("ct_compact").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0: {1,2}
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0: {1,2}
     ClusteredTable.append(mk(Seq((3L, 3, 3))), root, "01")
     ClusteredTable.append(mk(Seq((4L, 4, 4))), root, "02")
     ClusteredTable.delete(Seq(Tuple1(1L)).toDF("id"), root, "03")
@@ -785,7 +851,7 @@ class ClusteredTableSpec extends SparkTestBase {
     ClusteredTable.vacuum(root)
     assert(new java.io.File(root, "delta/d=01").exists())
     // the fold absorbs the compacted artifact + names its originals
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     assert(ids(root) == before)
     assert(ClusteredTable.read(spark, root).filter(col("zfile") < 0).count() == 0)
     // changefeed across the fold reads the compacted artifact ONCE —
@@ -821,7 +887,7 @@ class ClusteredTableSpec extends SparkTestBase {
       Seq((1L, None), (2L, None), (3L, Some("en"))),
       s"evolution must ride through compaction unchanged: $after")
     // and the fold still lands the widened schema permanently
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     assert(ClusteredTable.read(spark, root).columns.contains("lang"))
     assert(ids(root) == Seq(1L, 2L, 3L))
   }
@@ -843,7 +909,7 @@ class ClusteredTableSpec extends SparkTestBase {
     // (the fold-race shape) must be ignored by reads and reclaimed
     val r2 = Files.createTempDirectory("ct_poison").toString
     ClusteredTable.append(mk(Seq((10L, 1, 1), (20L, 2, 2))), r2, "00")
-    ClusteredTable.optimize(spark, r2, "d1", "d2", 4, 16) // folds d=00
+    ClusteredTable.optimize(spark, r2, Seq("d1", "d2"), 4, 16) // folds d=00
     ClusteredTable.append(mk(Seq((30L, 3, 3))), r2, "01")
     // craft the loser: c=00 claims to absorb the FOLDED d=00 (and d=01),
     // carrying a sentinel row that must never surface
@@ -863,7 +929,7 @@ class ClusteredTableSpec extends SparkTestBase {
       "exactly one v=next each round, the loser rebases, no row lost or doubled") {
     val root = Files.createTempDirectory("ct_occ").toString
     ClusteredTable.append(mk((1L to 40L).map(i => (i, (i % 16).toInt, (i % 12).toInt))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0
     ClusteredTable.append(mk((41L to 60L).map(i => (i, (i % 16).toInt, (i % 12).toInt))), root, "01")
     // two maintainers race the same pending fold
     import java.util.concurrent.{Executors, TimeUnit}
@@ -872,7 +938,7 @@ class ClusteredTableSpec extends SparkTestBase {
     (1 to 2).foreach { _ =>
       pool.execute(() =>
         results.add(
-          try Right(ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16))
+          try Right(ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16))
           catch { case e: Throwable => Left(e) }))
     }
     pool.shutdown()
@@ -923,8 +989,8 @@ class ClusteredTableSpec extends SparkTestBase {
     val root = Files.createTempDirectory("ct_3d").toString
     val rows = (1L to 240L).map(i => (i, (i % 16).toInt, (i % 12).toInt, (i % 7).toInt))
     ClusteredTable.append(rows.toDF("id", "d1", "d2", "d3"), root, "00")
-    val v = ClusteredTable.optimizeN(spark, root, Seq("d1", "d2", "d3"), 4, 16)
-    val env = ClusteredTable.envelopesN(spark, root, v, Seq("d1", "d2", "d3")).get
+    val v = ClusteredTable.optimize(spark, root, Seq("d1", "d2", "d3"), 4, 16)
+    val env = ClusteredTable.envelopes(spark, root, v, Seq("d1", "d2", "d3")).get
     // the catalog must agree with a direct per-bucket recompute
     val t = ClusteredTable.read(spark, root)
     val truth = t.groupBy("zfile")
@@ -950,15 +1016,15 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(boxed(t.where(col("zfile") === -1 || col("zfile").isin(keep: _*))) ==
       boxed(t), "pruning must only skip, never change, a result")
     // a 2-D reader on the 3-dim catalog: the matching PREFIX still serves
-    val pre = ClusteredTable.envelopes(spark, root, v, "d1", "d2")
+    val pre = ClusteredTable.envelopes(spark, root, v, Seq("d1", "d2"))
     assert(pre.isDefined && pre.get.map(_._1).sorted == env.map(_._1).sorted)
     // a dim-name mismatch refuses (the caller falls back / doesn't prune)
-    assert(ClusteredTable.envelopesN(spark, root, v, Seq("d2", "d1")).isEmpty)
+    assert(ClusteredTable.envelopes(spark, root, v, Seq("d2", "d1")).isEmpty)
     // hilbert stays 2-D and rejects loudly
     val r2 = Files.createTempDirectory("ct_3d_hil").toString
     ClusteredTable.append(rows.take(10).toDF("id", "d1", "d2", "d3"), r2, "00")
     intercept[IllegalArgumentException] {
-      ClusteredTable.optimizeN(spark, r2, Seq("d1", "d2", "d3"), 4, 16,
+      ClusteredTable.optimize(spark, r2, Seq("d1", "d2", "d3"), 4, 16,
         curve = "hilbert")
     }
   }
@@ -970,13 +1036,13 @@ class ClusteredTableSpec extends SparkTestBase {
     val rows = (1L to 120L).map(i =>
       (i, (i % 16).toInt, (i % 12).toInt, (i % 7).toInt))
     ClusteredTable.append(rows.take(60).toDF("id", "d1", "d2", "d3"), root, "00")
-    val v0 = ClusteredTable.optimizeN(spark, root, Seq("d1", "d2"), 4, 16)
-    assert(ClusteredTable.envelopesN(spark, root, v0, Seq("d1", "d2")).isDefined)
+    val v0 = ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
+    assert(ClusteredTable.envelopes(spark, root, v0, Seq("d1", "d2")).isDefined)
     ClusteredTable.append(rows.drop(60).toDF("id", "d1", "d2", "d3"), root, "01")
     // the workload changed: re-cluster on (d2, d3)
-    val v1 = ClusteredTable.optimizeN(spark, root, Seq("d2", "d3"), 4, 16)
-    assert(ClusteredTable.envelopesN(spark, root, v1, Seq("d2", "d3")).isDefined)
-    assert(ClusteredTable.envelopesN(spark, root, v1, Seq("d1", "d2")).isEmpty,
+    val v1 = ClusteredTable.optimize(spark, root, Seq("d2", "d3"), 4, 16)
+    assert(ClusteredTable.envelopes(spark, root, v1, Seq("d2", "d3")).isDefined)
+    assert(ClusteredTable.envelopes(spark, root, v1, Seq("d1", "d2")).isEmpty,
       "a dim-name mismatch must refuse, not serve the wrong bounds")
     // a source still configured for the OLD dims falls back to the
     // snapshot recompute — a decision is still made, and it is sound
@@ -1001,7 +1067,7 @@ class ClusteredTableSpec extends SparkTestBase {
       "the first with flattened _ABSORBS; reads, changefeed and vacuum exact") {
     val root = Files.createTempDirectory("ct_tier").toString
     ClusteredTable.append(mk(Seq((1L, 1, 1))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=0: {1}
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=0: {1}
     (2L to 5L).foreach(i => ClusteredTable.append(
       mk(Seq((i, (i % 16).toInt, (i % 12).toInt))), root, f"${i - 1}%02d"))
     assert(ClusteredTable.compactTail(spark, root) == 1)
@@ -1018,7 +1084,7 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(ids(root) == (1L to 9L), "nested compaction must not change rows")
     // the fold retires the whole hierarchy; the changefeed reads the TOP
     // artifact once — nested rows must not double
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16) // v=1
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     val ins = ClusteredTable.changes(spark, root, 0L, 1L)
       .filter(col("_change") === "insert").select("id").as[Long].collect().toSeq.sorted
     assert(ins == (2L to 9L), s"changefeed must read nested rows exactly once: $ins")
@@ -1062,7 +1128,7 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(parts.exists(_.startsWith("c=")), "compaction must have run")
     assert(ids(root) == (0L until 50L).toSeq, "no row lost or doubled")
     // maintenance closes normally over the compacted hierarchy
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.vacuum(root)
     assert(ids(root) == (0L until 50L).toSeq)
     assert(ClusteredTable.tailParts(root).isEmpty)
@@ -1078,22 +1144,22 @@ class ClusteredTableSpec extends SparkTestBase {
     // _envelopes: v=0 re-folded with other bounds, _SUCCESS at the old mtime
     val envOk = "base/v=0/_envelopes/_SUCCESS"
     ClusteredTable.append(mk(Seq((1L, 1, 1), (2L, 2, 2))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
-    assert(ClusteredTable.envelopes(spark, root, 0L, "d1", "d2").isDefined)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
+    assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).isDefined)
     val tEnv = mtime(envOk)
     rebuild()
     ClusteredTable.append(mk(Seq((5L, 7, 9))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     fs.setTimes(path(envOk), tEnv, -1)
     assert(mtime(envOk) == tEnv)
-    assert(ClusteredTable.envelopes(spark, root, 0L, "d1", "d2").get
-      .map(e => (e._2, e._3, e._4, e._5)) == Seq((7L, 7L, 9L, 9L)))
+    assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).get
+      .map(_._2) == Seq(Seq((7L, 7L), (9L, 9L))))
     // _ABSORBS: c=02 absorbs {d=01, d=02} after a fold of d=00, then,
     // rebuilt without the fold, {d=00, d=01, d=02} at the same mtime
     val absorbs = "delta/c=02/_ABSORBS"
     rebuild()
     ClusteredTable.append(mk(Seq((1L, 0, 0))), root, "00")
-    ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+    ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     (1 to 2).foreach(i => ClusteredTable.append(mk(Seq((i + 1L, i, i))), root, f"$i%02d"))
     assert(ClusteredTable.compactTail(spark, root) == 1)
     assert(ClusteredTable.tailParts(root) == Seq("c=02"))

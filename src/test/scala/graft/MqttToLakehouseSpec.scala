@@ -108,7 +108,7 @@ class MqttToLakehouseSpec extends SparkTestBase {
       q2.stop()
 
       // fold the deltas into the z-ordered base and read it back
-      ClusteredTable.optimize(spark, root, "d1", "d2", 4, 16)
+      ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
       val t = ClusteredTable.read(spark, root)
       val rows = t.select("stream_id", "d1", "d2", "v")
         .as[(String, Int, Int, Long)].collect().toSeq.sorted

@@ -207,19 +207,6 @@ class StreamingPipelineSpec extends SparkTestBase {
     assert(routed.select("stream_id").as[String].head() == "the-stream")
   }
 
-  test("interval stats as windowed aggregation (batch analog of A1)") {
-    val rows = Seq(
-      ("/t", """{"on":true,"watts":1.0}""", Timestamp.valueOf("2026-01-01 09:00:10")),
-      ("/t", "bad", Timestamp.valueOf("2026-01-01 09:00:20")),
-      ("/t", """{"on":true,"watts":2.0}""", Timestamp.valueOf("2026-01-01 09:01:10")))
-      .toDF("topic", "payload", "arrival_ts")
-    val cfg = GraftConfig(payloadSchema = schema)
-    val stats = GraftPipeline.intervalStats(GraftPipeline.plan(rows, cfg), 60)
-      .orderBy("window_start")
-      .select("success", "error").as[(Long, Long)].collect().toSeq
-    assert(stats == Seq((1L, 1L), (1L, 0L)))
-  }
-
   test("event-time windows with watermark drop late data (additive vs reference)") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, Timestamp)]

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.HofReference._
 
 class TextFunctionsSpec extends SparkTestBase {
   import spark.implicits._

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.HofReference._
 
 /** Native codegen'd dot/cosine vs the HOF reference formulation: results
   * must be bit-identical (same left-to-right summation), and null
