@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -130,9 +131,7 @@ import org.apache.spark.sql.functions._
   * total — the purge completes once the pre-delete versions fall out of
   * vacuum's retention window (`keepVersions`, default 1: immediate).
   */
-object ClusteredTable {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+object ClusteredTable extends Logging {
 
   /** Ledger I/O configuration: the active session's Hadoop conf (so
     * cluster filesystem settings and credentials apply) or a default
@@ -532,8 +531,9 @@ object ClusteredTable {
         // min/max — the date-string / URL-prefix zone-map case);
         // everything else stores long. Readers dispatch on the
         // catalog column's parquet type. (Schema inference here is a
-        // driver-side footer read — no job.)
-        val isStr = s.read.parquet(staging.toString).schema.fields
+        // driver-side read of one footer — no job; one write staged
+        // every file, so they share the schema.)
+        val isStr = readHiddenDir(s, staging, dataFilesUnder(staging).take(1)).schema.fields
           .map(f => f.name -> (f.dataType == org.apache.spark.sql.types.StringType))
           .toMap.withDefaultValue(false)
         val envPath = new Path(staging, "_envelopes").toString
@@ -564,10 +564,10 @@ object ClusteredTable {
           case None =>
             // refusal fallback: the one-aggregate catalog build (a string
             // stats column past parquet's 4 KB footer-statistics limit)
-            log.warn(s"graft-clustered: footer statistics refused for the " +
+            logWarning(s"graft-clustered: footer statistics refused for the " +
               s"envelope catalog of $staging — building it with an aggregate " +
               "job over the staged fold instead")
-            val staged = s.read.parquet(staging.toString)
+            val staged = readHiddenDir(s, staging, dataFilesUnder(staging))
             val envAggs = dims.zipWithIndex.flatMap { case (c, i) =>
               Seq(min(col(c).cast("long")).as(s"mn${i + 1}"),
                 max(col(c).cast("long")).as(s"mx${i + 1}"))
@@ -1127,7 +1127,7 @@ object ClusteredTable {
       val hit = envelopeCache.get(key)
       if (hit != null && hit._1 == st) (hit._2, hit._3)
       else {
-        val df = s.read.parquet(env.toString)
+        val df = readHiddenDir(s, env, dataFilesUnder(env))
         val rows = df.collect().toSeq // ≤ numFiles rows
         envelopeCache.put(key, (st, df.schema, rows))
         (df.schema, rows)
@@ -1252,6 +1252,14 @@ object ClusteredTable {
     (dirs.flatMap(dataFilesUnder), pendingDv)
   }
 
+  /** The parquet dataset under `dir`, whose hidden name (`.staging-…`,
+    * `_envelopes`) makes a read of the dir itself log Spark's "All paths
+    * were ignored" warning: read through `files` under it instead, with
+    * `dir` as the base path — the same schema and partition columns.
+    */
+  private def readHiddenDir(s: SparkSession, dir: Path, files: Seq[Path]): DataFrame =
+    s.read.option("basePath", dir.toString).parquet(files.map(_.toString): _*)
+
   /** Recursive data-file listing under one artifact dir — parquet part
     * files only, skipping hidden (`_`/`.`) files and subtrees (the same
     * visibility rule Spark's file index applies, so a footer walk over
@@ -1259,10 +1267,13 @@ object ClusteredTable {
     */
   private def dataFilesUnder(d: Path): Seq[Path] = {
     val fs = fsOf(d)
+    // the listing yields qualified paths: stop the walk at `d` qualified
+    // alike, so a hidden name of `d` itself does not hide its files
+    val top = fs.makeQualified(d).toString
     def hidden(p: Path): Boolean = {
       var cur = p.getParent
       var h = false
-      while (cur != null && cur.toString != d.toString && !h) {
+      while (cur != null && cur.toString != top && !h) {
         h = cur.getName.startsWith("_") || cur.getName.startsWith(".")
         cur = cur.getParent
       }

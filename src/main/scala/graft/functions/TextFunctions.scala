@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -13,7 +14,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * are exactly reproducible by the DuckDB oracle (same md5-based 32-bit
   * hash on both engines).
   */
-object TextFunctions {
+object TextFunctions extends Logging {
 
   /** Portable 32-bit hash: first 8 hex chars of md5 as a non-negative
     * long. Identical in DuckDB via CAST('0x'||substr(md5(s),1,8) AS BIGINT).
@@ -248,17 +249,19 @@ object TextFunctions {
     rows.map(_._2)
   }
 
-  lazy val classifierWeights: Seq[Double] = {
-    val p = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_CLASSIFIER_WEIGHTS", "fixtures/classifier_weights.csv"))
+  lazy val classifierWeights: Seq[Double] = classifierWeightsAt(java.nio.file.Paths.get(
+    sys.env.getOrElse("GRAFT_CLASSIFIER_WEIGHTS", "fixtures/classifier_weights.csv")))
+
+  /** The weights file at `p`, or — with a WARN — [[classifierWeightsFormula]]
+    * when `p` is not readable.
+    */
+  private[graft] def classifierWeightsAt(p: java.nio.file.Path): Seq[Double] =
     if (java.nio.file.Files.isReadable(p)) loadClassifierWeights(p)
     else {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"graft: no readable classifier weights at ${p.toAbsolutePath} — " +
-          "using classifierWeightsFormula, the stand-in the fixture was generated from")
+      logWarning(s"graft: no readable classifier weights at ${p.toAbsolutePath} — " +
+        "using classifierWeightsFormula, the stand-in the fixture was generated from")
       classifierWeightsFormula
     }
-  }
 
   /** Mean hashed-feature weight from a pre-hashed feature array (see
     * [[hashArray]]): the linear bag-of-ngrams score. Keep iff >= 0.

@@ -2,6 +2,7 @@ package graft.sources.clustered
 
 import java.util
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.streaming.Sink
@@ -512,9 +513,6 @@ class ClusteredChangesRelation(override val sqlContext: SQLContext, root: String
 }
 
 private[clustered] object ClusteredRelation {
-  private[clustered] val log =
-    org.slf4j.LoggerFactory.getLogger(classOf[ClusteredRelation])
-
   /** Exactly the filter shapes [[ClusteredRelation.toColumn]] applies. */
   def translatable(f: Filter): Boolean = f match {
     case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
@@ -540,7 +538,7 @@ private[clustered] object ClusteredRelation {
 class ClusteredRelation(override val sqlContext: SQLContext, root: String,
     dims: Seq[String], indexCol: Option[String],
     asOfVersion: Option[Long] = None)
-  extends BaseRelation with PrunedFilteredScan {
+  extends BaseRelation with PrunedFilteredScan with Logging {
 
   /** Historical 2-D constructor (the option surface predating `dims`). */
   def this(sqlContext: SQLContext, root: String, d1Col: Option[String],
@@ -634,7 +632,7 @@ class ClusteredRelation(override val sqlContext: SQLContext, root: String,
         // `dims` config vs the catalog's recorded fold dims, or a
         // pre-catalog version) discoverable instead of a silent tax
         // (the r16 ADVICE finding)
-        ClusteredRelation.log.warn(
+        logWarning(
           s"graft-clustered: no envelope catalog for dims=${dims.mkString(",")} " +
             s"at $root v=${snapVersion.getOrElse(-1L)} — recomputing per-scan " +
             "envelopes from the snapshot (check the source's dims option " +

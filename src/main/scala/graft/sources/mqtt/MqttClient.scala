@@ -4,6 +4,7 @@ import java.net.{Socket, URI}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 import scala.util.control.NonFatal
+import org.apache.spark.internal.Logging
 import MqttCodec._
 
 /** Received message envelope (the reference's `message` event payload,
@@ -37,7 +38,7 @@ class MqttClient(
     dataTimeoutMillis: Long = 900000L,
     reconnectBackoffMillis: Long = 200L,
     subscribeQos: Int = 0,
-    autoAck: Boolean = true) extends AutoCloseable {
+    autoAck: Boolean = true) extends AutoCloseable with Logging {
 
   private val queue = new ConcurrentLinkedQueue[MqttMessage]()
   private val running = new AtomicBoolean(true)
@@ -117,7 +118,7 @@ class MqttClient(
         case NonFatal(e) =>
           lastCause.set(e)
           val n = reconnects.incrementAndGet()
-          MqttClient.log.warn(s"mqtt $url: connection lost (${e.getClass.getName}: " +
+          logWarning(s"mqtt $url: connection lost (${e.getClass.getName}: " +
             s"${e.getMessage}); reconnect #$n in $reconnectBackoffMillis ms")
           Thread.sleep(reconnectBackoffMillis)
       }
@@ -153,8 +154,4 @@ class MqttClient(
     try if (socket != null) { send(socket.getOutputStream, Disconnect); socket.close() }
     catch { case NonFatal(_) => () }
   }
-}
-
-object MqttClient {
-  private[mqtt] val log = org.slf4j.LoggerFactory.getLogger(classOf[MqttClient])
 }

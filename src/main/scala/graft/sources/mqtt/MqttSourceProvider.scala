@@ -1,6 +1,7 @@
 package graft.sources.mqtt
 
 import java.util
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -97,7 +98,8 @@ case class MqttOffset(count: Long) extends Offset {
 
 case class MqttInputPartition(rows: Array[(String, Array[Byte], Long)]) extends InputPartition
 
-class MqttMicroBatchStream(options: Map[String, String]) extends MicroBatchStream {
+class MqttMicroBatchStream(options: Map[String, String]) extends MicroBatchStream
+    with Logging {
   private val url = options.getOrElse("url",
     throw new IllegalArgumentException("mqtt source requires option 'url'"))
   private val topics = options.getOrElse("topics", "#").split(",").map(_.trim).toSeq
@@ -155,7 +157,7 @@ class MqttMicroBatchStream(options: Map[String, String]) extends MicroBatchStrea
       if (!client.awaitConnected()) {
         val cause = Option(client.lastCause.get())
           .map(e => s"${e.getClass.getName}: ${e.getMessage}").getOrElse("none recorded")
-        MqttClient.log.warn(s"mqtt source: no connection to $url yet " +
+        logWarning(s"mqtt source: no connection to $url yet " +
           s"(last cause: $cause); still retrying")
       }
     }

@@ -5,6 +5,7 @@ import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermissions}
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.internal.Logging
 
 /** Hadoop's checksummed `file:` filesystem (same `.crc` side files, same
   * mode bits) whose permissions are set in-process. Without `libhadoop`,
@@ -15,7 +16,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
-private[streaming] class NioRawLocalFileSystem extends RawLocalFileSystem {
+private[streaming] class NioRawLocalFileSystem extends RawLocalFileSystem with Logging {
   import NioRawLocalFileSystem._
 
   /** The same `rwxrwxrwx` bits through one `chmod(2)`. The sticky bit
@@ -31,7 +32,7 @@ private[streaming] class NioRawLocalFileSystem extends RawLocalFileSystem {
           permission.getOtherAction.SYMBOL))
     } else {
       if (warned.compareAndSet(false, true))
-        log.warn(s"setPermission($permission) on $p is not a plain POSIX mode " +
+        logWarning(s"setPermission($permission) on $p is not a plain POSIX mode " +
           "change; deferring to Hadoop's RawLocalFileSystem (may fork chmod)")
       super.setPermission(p, permission)
     }
@@ -40,5 +41,4 @@ private[streaming] class NioRawLocalFileSystem extends RawLocalFileSystem {
 
 private object NioRawLocalFileSystem {
   private val warned = new AtomicBoolean(false)
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[NioRawLocalFileSystem])
 }

@@ -1,10 +1,15 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Destination control-plane: get-or-create a named output stream and
   * optionally grant public read. The reference calls
@@ -73,10 +78,16 @@ trait StreamPublisher extends Serializable {
   * overwrite exactly its own partitions — idempotent under foreachBatch's
   * at-least-once replay, without touching other batches' output.
   *
-  * Small-files control (SURVEY §7.4#2): without `coalescePerStream`, a
-  * batch writes up to tasks × |stream ids| files; repartitioning on
-  * stream_id first costs one bounded-by-batch shuffle and writes ONE file
-  * per (stream, batch) — the right trade once id cardinality is real.
+  * Small-files control (SURVEY §7.4#2): a partitioned write sorts each
+  * task's rows by the partition columns, so a task writes one file per
+  * (stream, batch) it holds. A frame planned as ONE partition (every
+  * MQTT trigger under 2,000 rows) therefore already writes one file per
+  * (stream, batch) and is written as it is: one job, no shuffle. A
+  * frame spread over more partitions (or one whose plan runs its own
+  * stages, so its partition count is not known before it runs) is
+  * first repartitioned on stream_id — one bounded-by-batch shuffle —
+  * so a stream's rows land in one task; without `coalescePerStream` it
+  * would write up to tasks × |stream ids| files.
   * `maxRecordsPerFile` re-splits any hot stream's file so a skewed id
   * can't produce an unboundedly large file.
   *
@@ -99,7 +110,9 @@ class FsStreamPublisher(
     coalescePerStream: Boolean = true,
     maxRecordsPerFile: Long = 5000000L) extends StreamPublisher {
   override def publish(routed: DataFrame, batchId: Long): Unit = {
-    val laidOut = if (coalescePerStream) routed.repartition(col("stream_id")) else routed
+    val laidOut =
+      if (coalescePerStream && !onePartition(routed)) routed.repartition(col("stream_id"))
+      else routed
     laidOut
       .withColumn("batch_id", lit(batchId.toString))
       .write
@@ -111,6 +124,16 @@ class FsStreamPublisher(
       .mode("overwrite")
       .parquet(outDir)
   }
+
+  /** Whether `df` is planned to run as one partition. An adaptive plan
+    * counts as more: its partition count is only known once its stages
+    * have run.
+    */
+  private def onePartition(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan match {
+      case _: AdaptiveSparkPlanExec => false
+      case _ => df.queryExecution.toRdd.getNumPartitions == 1
+    }
 }
 
 /** K1/K2/K3/K4 — the routing sink. Per micro-batch (or per batch run):
@@ -124,9 +147,17 @@ class FsStreamPublisher(
   *   3. hand all records to the [[StreamPublisher]] (default: partitioned
   *      parquet fan-out, idempotent per batch).
   *
-  * Scale notes: the ensure step moves |distinct new ids| strings to the
-  * driver per batch — bounded by the id space, not the record count; the
-  * data path never collects.
+  * Job plan: two Spark jobs per batch of one partition (every MQTT
+  * trigger under 2,000 rows). The first is one narrow pass over the
+  * persisted batch that fills the cache and returns at most cap+1 stream
+  * ids ([[RoutingSink.sampleIds]]); the second is the publisher's write,
+  * which reads the cache. A batch of more partitions adds the
+  * publisher's repartition shuffle as a third job.
+  *
+  * Scale notes: each task sends at most cap+1 id strings to the driver,
+  * which holds at most 2 × (cap+1) while it merges them — bounded by the
+  * cap, not by the id space or the record count; the data path never
+  * collects.
   */
 class RoutingSink(
     registry: StreamRegistry,
@@ -158,8 +189,8 @@ class RoutingSink(
   def ensureCalls: Long = ensureCount.get()
 
   def processBatch(batch: Dataset[Row], batchId: Long): Unit = {
-    // Two actions consume this batch (distinct-ids collect, then the
-    // partitioned write). Persist so the source isn't re-executed — which
+    // Two jobs read this batch (the id sample, then the publisher's
+    // write). Persist so the source isn't re-executed — which
     // would both redo the parse/transform work AND double-count the
     // pipeline's observe() metrics (CollectMetrics accumulates per
     // execution, not per batch).
@@ -175,18 +206,15 @@ class RoutingSink(
     }
     if (!cfg.dryRun) {
       val cap = cfg.maxStreamIdsPerBatch
-      // sort+limit compiles to TakeOrderedAndProject — bounded driver
-      // memory (cap+1 rows) whatever the id cardinality; the +1 row is
-      // the overflow probe. The sort key is a batch-salted hash, NOT the
-      // id itself: under sustained over-cap cardinality a fixed order
-      // would starve the same tail ids of ensure() every batch (their
-      // records still publish but never get _owner/_public markers);
-      // salting with batchId rotates which ids make the window, so every
-      // id is eventually ensured. Replay stays deterministic — the same
+      // at most cap+1 ids, ordered by a batch-salted hash; the +1 id is
+      // the overflow probe. The sort key is NOT the id itself: under
+      // sustained over-cap cardinality a fixed order would starve the
+      // same tail ids of ensure() every batch (their records still
+      // publish but never get _owner/_public markers); salting with
+      // batchId rotates which ids make the window, so every id is
+      // eventually ensured. Replay stays deterministic — the same
       // batchId yields the same sampled set.
-      val ids = routed.select("stream_id").distinct()
-        .orderBy(md5(concat_ws("\u0000", col("stream_id"), lit(batchId))))
-        .limit(cap + 1).collect().map(_.getString(0))
+      val ids = RoutingSink.sampleIds(routed, cap, batchId)
       if (ids.length > cap) cfg.streamIdOverflow match {
         case "sample" =>
           System.err.println(s"[graft][$batchId] distinct stream ids exceed " +
@@ -220,4 +248,57 @@ class RoutingSink(
   /** Attach as a foreachBatch streaming sink. */
   def attach(writer: DataStreamWriter[Row]): DataStreamWriter[Row] =
     writer.foreachBatch((df: Dataset[Row], id: Long) => processBatch(df, id))
+}
+
+object RoutingSink {
+  /** The distinct `stream_id`s of `routed` with the cap+1 smallest keys,
+    * in key order. The key is the lower-case md5 hex of
+    * `stream_id ␀ batchId`; a NULL id keys on the md5 of `batchId` alone,
+    * as `md5(concat_ws(␀, stream_id, batchId))` does (concat_ws skips
+    * NULLs).
+    *
+    * One narrow job: each task keeps only its own cap+1 smallest distinct
+    * ids, and the driver merges the task results pairwise as they
+    * arrive, so it holds at most 2 × (cap+1) ids at once — the bound of
+    * `orderBy(key).limit(cap + 1)`, which needs an aggregate shuffle for
+    * the `distinct` and a second job for the ordered take.
+    */
+  private[graft] def sampleIds(routed: DataFrame, cap: Int, batchId: Long): Array[String] = {
+    val n = cap + 1
+    val salt = batchId.toString
+    routed.select("stream_id").queryExecution.toRdd
+      .mapPartitions(rows => Iterator(smallestKeys(rows, n, salt)))
+      .fold(Array.empty[(String, String)])(mergeSmallest(n))
+      .map(_._2)
+  }
+
+  /** One task's (key, id) pairs: its n smallest-keyed distinct ids. */
+  private def smallestKeys(rows: Iterator[InternalRow], n: Int,
+      salt: String): Array[(String, String)] = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    val saltBytes = salt.getBytes(UTF_8)
+    val hex = java.util.HexFormat.of()
+    val byKey = new java.util.TreeMap[String, UTF8String]()
+    val keyOf = new java.util.HashMap[UTF8String, String]()
+    rows.foreach { r =>
+      val id = if (r.isNullAt(0)) null else r.getUTF8String(0)
+      // an id already kept is not hashed again
+      if (!keyOf.containsKey(id)) {
+        if (id != null) { md5.update(id.getBytes); md5.update(0: Byte) }
+        val key = hex.formatHex(md5.digest(saltBytes))
+        if (byKey.size < n || key < byKey.lastKey) {
+          val kept = if (id == null) null else id.clone() // rows are reused
+          byKey.put(key, kept)
+          keyOf.put(kept, key)
+          if (byKey.size > n) keyOf.remove(byKey.pollLastEntry().getValue)
+        }
+      }
+    }
+    byKey.entrySet.asScala.iterator
+      .map(e => (e.getKey, Option(e.getValue).map(_.toString).orNull)).toArray
+  }
+
+  private def mergeSmallest(n: Int)(a: Array[(String, String)],
+      b: Array[(String, String)]): Array[(String, String)] =
+    (a ++ b).distinct.sortBy(_._1).take(n)
 }

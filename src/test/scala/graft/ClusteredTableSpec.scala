@@ -579,30 +579,6 @@ class ClusteredTableSpec extends SparkTestBase {
     assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).isEmpty)
   }
 
-  /** The WARN-or-worse messages ClusteredTable logs while `f` runs. */
-  private def warnsDuring(f: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("ct-warns", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN)) seen.add(e.getMessage.getFormattedMessage)
-    }
-    app.start()
-    val logger = LogManager.getLogger(ClusteredTable.getClass.getName).asInstanceOf[Logger]
-    logger.addAppender(app)
-    val level = logger.getLevel
-    logger.setLevel(Level.WARN)
-    try f finally {
-      logger.setLevel(level)
-      logger.removeAppender(app)
-      app.stop()
-    }
-    seen.asScala.toSeq
-  }
-
   test("envelope catalog: a string zone-map column past parquet's 4 KB " +
       "footer-statistics limit makes the footer read refuse; the aggregate " +
       "fallback lands the same bounds and warns once") {
@@ -612,7 +588,7 @@ class ClusteredTableSpec extends SparkTestBase {
     val rows = (1L to 40L).map(i =>
       (i, (i % 16).toInt, ((i * 7) % 12).toInt, f"$i%03d" + "x" * 3000))
     ClusteredTable.append(rows.toDF("id", "d1", "d2", "big"), root, "00")
-    val warns = warnsDuring {
+    val warns = warnsDuring(ClusteredTable) {
       ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16, statsCols = Seq("big"))
     }
     // the refusal's cause is real: the folded footers carry no `big` bounds

@@ -26,6 +26,34 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The WARN-or-worse messages `owner` logs while `f` runs, under the
+    * logger name Spark's `Logging` gives it (its class name without `$`).
+    */
+  def warnsDuring(owner: AnyRef)(f: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = LogManager.getLogger(owner.getClass.getName.stripSuffix("$"))
+      .asInstanceOf[Logger]
+    logger.addAppender(app)
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    try f finally {
+      logger.setLevel(level)
+      logger.removeAppender(app)
+      app.stop()
+    }
+    seen.asScala.toSeq
+  }
+
   /** Single-column helper: evaluate a Column over one-row input. */
   def evalRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)

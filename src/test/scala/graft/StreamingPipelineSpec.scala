@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -197,6 +198,126 @@ class StreamingPipelineSpec extends SparkTestBase {
     val s1b7 = new java.io.File(outDir, "stream_id=s1/batch_id=7")
       .listFiles().filter(_.getName.endsWith(".parquet"))
     assert(s1b7.length == 1, s"expected 1 file per (stream, batch), got ${s1b7.length}")
+  }
+
+  private val routedSchema = StructType(Seq(
+    StructField("topic", StringType), StructField("arrival_ts", TimestampType),
+    StructField("valid", BooleanType), StructField("value", StringType),
+    StructField("stream_id", StringType)))
+
+  /** A sink input of `rows` records over `routes` stream ids, planned as
+    * exactly `partitions` partitions with no stage of its own (as a
+    * micro-batch of the MQTT source is).
+    */
+  private def routedBatch(rows: Int, routes: Int, partitions: Int) = {
+    val t = Timestamp.valueOf("2026-01-01 10:00:00")
+    val data = (0 until rows).map(i =>
+      org.apache.spark.sql.Row("t", t, i % 10 != 9, s"""{"i":$i}""", s"route-${i % routes}"))
+    spark.createDataFrame(spark.sparkContext.parallelize(data, partitions), routedSchema)
+  }
+
+  /** Spark jobs started by `f` on this thread: tagged with a job group
+    * and counted by a listener; a fence job in a second group marks the
+    * point where the listener bus has delivered every earlier job start.
+    */
+  private def jobsRunBy(f: => Unit): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val fence = s"fence-$group"
+    val starts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => starts.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!starts.containsKey(fence) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.containsKey(fence), "listener bus never delivered the fence job")
+      Option(starts.get(group)).map(_.intValue).getOrElse(0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** One warm-up and one counted `processBatch` of `rows` records over 16
+    * routes in `partitions` partitions: the counted batch's Spark jobs and
+    * its parquet files per (stream, batch) directory.
+    */
+  private def countedBatch(rows: Int, partitions: Int): (Int, Map[String, Int]) = {
+    val outDir = Files.createTempDirectory("graft_jobs_out").toString
+    val sink = new RoutingSink(
+      new FsStreamRegistry(Files.createTempDirectory("graft_jobs_reg").toString),
+      new FsStreamPublisher(outDir), GraftConfig(payloadSchema = schema))
+    sink.processBatch(routedBatch(rows, 16, partitions), 0) // first-use planning and codegen
+    val batch = routedBatch(rows, 16, partitions)
+    assert(batch.queryExecution.toRdd.getNumPartitions == partitions)
+    val jobs = jobsRunBy(sink.processBatch(batch, 1))
+    assert(spark.read.parquet(outDir).filter(col("batch_id") === 1).count() == rows - rows / 10)
+    val files = new java.io.File(outDir).listFiles().filter(_.getName.startsWith("stream_id=")).map { d =>
+      d.getName -> new java.io.File(d, "batch_id=1").listFiles().count(_.getName.endsWith(".parquet"))
+    }.toMap
+    (jobs, files)
+  }
+
+  test("sink job plan: a one-partition batch of 16 routes runs exactly 2 Spark jobs") {
+    val (jobs, files) = countedBatch(90, 1)
+    // the id sample (which fills the cache) and the write; no shuffle
+    assert(jobs == 2)
+    assert(files.size == 16 && files.values.forall(_ == 1),
+      s"expected one file per (stream, batch), got $files")
+  }
+
+  test("sink job plan: a batch of several partitions runs at most 3 jobs, one file per (stream, batch)") {
+    val (jobs, files) = countedBatch(200, 3)
+    // the id sample, then the repartition shuffle and the write
+    assert(jobs <= 3, s"expected at most 3 jobs, got $jobs")
+    assert(files.size == 16 && files.values.forall(_ == 1),
+      s"expected one file per (stream, batch), got $files")
+  }
+
+  test("id sample equals the salted-md5 ordered take of the distinct ids, NULL id included") {
+    val rnd = new scala.util.Random(20261019L)
+    val pool = Vector("a", "b", "route-7", "", "é", "日本/家", "x\u0000y") ++
+      (0 until 40).map(i => s"org/home/room$i/stream")
+    (0 until 24).foreach { trial =>
+      val cap = 1 + rnd.nextInt(12)
+      val batchId = if (trial % 5 == 0) -rnd.nextInt(1000).toLong else rnd.nextInt(1 << 20).toLong
+      val width = 1 + rnd.nextInt(pool.size)
+      val rows = rnd.nextInt(60)
+      val withNull = trial % 3 == 0
+      val ids = (0 until rows).map { _ =>
+        if (withNull && rnd.nextInt(8) == 0) null else pool(rnd.nextInt(width))
+      }
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(ids.map(org.apache.spark.sql.Row(_)), 1 + rnd.nextInt(4)),
+        StructType(Seq(StructField("stream_id", StringType))))
+      val expected = df.select("stream_id").distinct()
+        .orderBy(md5(concat_ws("\u0000", col("stream_id"), lit(batchId))))
+        .limit(cap + 1).collect().map(_.getString(0)).toSeq
+      val got = RoutingSink.sampleIds(df, cap, batchId).toSeq
+      assert(got == expected, s"trial $trial: cap $cap, batch $batchId")
+    }
+  }
+
+  test("ensure runs for every sampled id before the publish starts") {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val registry = new StreamRegistry {
+      override def ensure(streamId: String, publicRead: Boolean): Unit =
+        events.add(s"ensure:$streamId")
+    }
+    val publisher = new StreamPublisher {
+      override def publish(routed: DataFrame, batchId: Long): Unit =
+        events.add(s"publish:$batchId:${routed.count()}")
+    }
+    val sink = new RoutingSink(registry, publisher, GraftConfig(payloadSchema = schema))
+    sink.processBatch(routedBatch(40, 4, 2), 5)
+    val seen = events.toArray(Array.empty[String]).toSeq
+    assert(seen.last == "publish:5:36", seen)
+    assert(seen.init.sorted == (0 until 4).map(i => s"ensure:route-$i"), seen)
   }
 
   test("fixed stream id short-circuits templating (single-stream mode)") {

@@ -264,4 +264,25 @@ class TextFunctionsSpec extends SparkTestBase {
       intercept[IllegalArgumentException](loadClassifierWeights(tmp))
     } finally java.nio.file.Files.delete(tmp)
   }
+
+  test("classifier weights: a missing file falls back to the formula with a WARN; a readable one is loaded") {
+    val dir = java.nio.file.Files.createTempDirectory("weights_dir")
+    var weights: Seq[Double] = Nil
+    val warns = warnsDuring(graft.functions.TextFunctions) {
+      weights = classifierWeightsAt(dir.resolve("missing.csv"))
+    }
+    assert(weights == classifierWeightsFormula)
+    assert(warns.size == 1 && warns.head.contains("no readable classifier weights"), warns)
+
+    // a file whose weights differ from the formula's: the loader's values win
+    val csv = dir.resolve("flat.csv")
+    java.nio.file.Files.writeString(csv, "bucket,weight\n" +
+      (0 until ClassifierBuckets).map(b => s"$b,0.25").mkString("\n") + "\n")
+    val fixture = java.nio.file.Paths.get("fixtures/classifier_weights.csv")
+    val quiet = warnsDuring(graft.functions.TextFunctions) {
+      assert(classifierWeightsAt(csv) == Seq.fill(ClassifierBuckets)(0.25))
+      assert(classifierWeightsAt(fixture) == loadClassifierWeights(fixture))
+    }
+    assert(quiet.isEmpty, quiet)
+  }
 }
