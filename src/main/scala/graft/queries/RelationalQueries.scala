@@ -611,7 +611,7 @@ object RelationalQueries {
     try {
       s.conf.set("spark.sql.sources.useV1SourceList", "")
       s.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Tables.load(s, dir, "lineitem")
         .agg(
           count(lit(1)).as("n_rows"),
           min("l_orderkey").as("min_okey"), max("l_orderkey").as("max_okey"),

@@ -54,6 +54,33 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     seen.asScala.toSeq
   }
 
+  /** Spark jobs started by `f` on this thread: tagged with a job group
+    * and counted by a listener; a fence job in a second group marks the
+    * point where the listener bus has delivered every earlier job start.
+    */
+  def jobsRunBy(f: => Unit): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val fence = s"fence-$group"
+    val starts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => starts.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!starts.containsKey(fence) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.containsKey(fence), "listener bus never delivered the fence job")
+      Option(starts.get(group)).map(_.intValue).getOrElse(0)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Single-column helper: evaluate a Column over one-row input. */
   def evalRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
