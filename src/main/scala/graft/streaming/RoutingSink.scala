@@ -1,14 +1,23 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** Destination control-plane: get-or-create a named output stream and
@@ -78,18 +87,37 @@ trait StreamPublisher extends Serializable {
   * overwrite exactly its own partitions — idempotent under foreachBatch's
   * at-least-once replay, without touching other batches' output.
   *
-  * Small-files control (SURVEY §7.4#2): a partitioned write sorts each
-  * task's rows by the partition columns, so a task writes one file per
-  * (stream, batch) it holds. A frame planned as ONE partition (every
-  * MQTT trigger under 2,000 rows) therefore already writes one file per
-  * (stream, batch) and is written as it is: one job, no shuffle. A
-  * frame spread over more partitions (or one whose plan runs its own
-  * stages, so its partition count is not known before it runs) is
-  * first repartitioned on stream_id — one bounded-by-batch shuffle —
-  * so a stream's rows land in one task; without `coalescePerStream` it
-  * would write up to tasks × |stream ids| files.
-  * `maxRecordsPerFile` re-splits any hot stream's file so a skewed id
-  * can't produce an unboundedly large file.
+  * Job plan: the routed frame, `batch_id` included, is planned once, and
+  * that physical plan both decides the layout and is written: one Spark
+  * job, the write. A partitioned write sorts each task's rows by the
+  * partition columns, so a task writes one file per (stream, batch) it
+  * holds, and a frame planned as ONE partition (every MQTT trigger under
+  * 2,000 rows) is written as it is, with no shuffle. A frame spread over
+  * more partitions (or one whose plan runs its own stages, so its
+  * partition count is not known before it runs) is first repartitioned
+  * on stream_id — one bounded-by-batch shuffle, a second job — so a
+  * stream's rows land in one task (SURVEY §7.4#2, small-files control);
+  * without `coalescePerStream` it would write up to tasks × |stream ids|
+  * files. `maxRecordsPerFile` re-splits any hot stream's file so a
+  * skewed id can't produce an unboundedly large file.
+  *
+  * The plan goes straight to Spark's file writer, as
+  * `InsertIntoHadoopFsRelationCommand` runs a path-based dynamic
+  * overwrite (same commit protocol, staging directory, parquet writer and
+  * write statistics; the tree, modes, `.crc` files and footers equal a
+  * `DataFrameWriter` write's), without planning a write command around
+  * it.
+  *
+  * The task ships a lean Hadoop conf (`FsStreamPublisher.writeConf`):
+  * the session's conf with the write's options, minus every entry whose
+  * only source is a Hadoop `*-default.xml`. A task rebuilds its conf from
+  * the shipped entries alone, without loading defaults, so a dropped
+  * entry reads as the code default the default file repeats (but a kept
+  * value that names a dropped entry in `${…}` would not expand); what a
+  * site file, `spark.hadoop.*`, the SQL conf, the options or the parquet
+  * writer set is kept. The task carries the conf twice (job conf and
+  * write-statistics tracker), so the full conf — about 1,100 entries —
+  * made deserializing it most of the task's launch cost.
   *
   * The write resolves `file:` to [[NioLocalFileSystem]] through its own
   * options, which Spark copies into the job's Hadoop conf: the task
@@ -110,30 +138,78 @@ class FsStreamPublisher(
     coalescePerStream: Boolean = true,
     maxRecordsPerFile: Long = 5000000L) extends StreamPublisher {
   override def publish(routed: DataFrame, batchId: Long): Unit = {
-    val laidOut =
-      if (coalescePerStream && !onePartition(routed)) routed.repartition(col("stream_id"))
-      else routed
-    laidOut
-      .withColumn("batch_id", lit(batchId.toString))
-      .write
-      .partitionBy("stream_id", "batch_id")
-      .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
-      .option("fs.file.impl.disable.cache", "true")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite")
-      .parquet(outDir)
+    val batch = routed.withColumn("batch_id", lit(batchId.toString))
+    val planned = batch.queryExecution
+    val written =
+      if (coalescePerStream && !onePartition(planned.executedPlan))
+        batch.repartition(col("stream_id")).queryExecution
+      else planned
+    write(written)
   }
 
-  /** Whether `df` is planned to run as one partition. An adaptive plan
-    * counts as more: its partition count is only known once its stages
-    * have run.
-    */
-  private def onePartition(df: DataFrame): Boolean =
-    df.queryExecution.executedPlan match {
-      case _: AdaptiveSparkPlanExec => false
-      case _ => df.queryExecution.toRdd.getNumPartitions == 1
+  private def write(qe: QueryExecution): Unit = {
+    val session = qe.sparkSession
+    val options = Map(
+      "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true",
+      "maxRecordsPerFile" -> maxRecordsPerFile.toString)
+    val conf = FsStreamPublisher.writeConf(session, options)
+    val path = new Path(outDir)
+    val fs = path.getFileSystem(conf)
+    val qualified = path.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    val jobId = UUID.randomUUID().toString
+    val committer = FileCommitProtocol.instantiate(
+      session.sessionState.conf.fileCommitProtocolClass, jobId, qualified.toString,
+      dynamicPartitionOverwrite = true)
+    // dynamic overwrite: tasks write under a staging directory that the
+    // job commit renames over exactly the partitions it wrote
+    val staging = FileCommitProtocol.getStagingDir(qualified.toString, jobId)
+      .makeQualified(fs.getUri, fs.getWorkingDirectory)
+    val plan = qe.executedPlan
+    val partitionColumns = Seq("stream_id", "batch_id").map(n => plan.output.find(_.name == n).get)
+    SQLExecution.withNewExecutionId(qe) {
+      FileFormatWriter.write(
+        sparkSession = session,
+        plan = plan,
+        fileFormat = new ParquetFileFormat,
+        committer = committer,
+        outputSpec = FileFormatWriter.OutputSpec(staging.toString, Map.empty, plan.output),
+        hadoopConf = conf,
+        partitionColumns = partitionColumns,
+        bucketSpec = None,
+        statsTrackers = Seq(new BasicWriteJobStatsTracker(
+          new SerializableConfiguration(conf), BasicWriteJobStatsTracker.metrics)),
+        options = options)
     }
+    session.sharedState.cacheManager.recacheByPath(session, qualified, fs)
+  }
+
+  /** Whether `plan` runs as one partition. An adaptive plan counts as
+    * more: its partition count is only known once its stages have run.
+    */
+  private def onePartition(plan: SparkPlan): Boolean = plan match {
+    case _: AdaptiveSparkPlanExec => false
+    case _ => plan.execute().getNumPartitions == 1
+  }
+}
+
+object FsStreamPublisher {
+  /** The Hadoop conf a write ships to its tasks:
+    * `newHadoopConfWithOptions(options)` without the entries whose only
+    * source is a Hadoop `*-default.xml`, in a conf that loads no
+    * defaults (so a later `reloadConfiguration` cannot bring them back).
+    * Kept entries keep their source.
+    */
+  private def writeConf(session: SparkSession, options: Map[String, String]): Configuration = {
+    val full = session.sessionState.newHadoopConfWithOptions(options)
+    val lean = new Configuration(false)
+    full.iterator().asScala.foreach { e =>
+      val sources = Option(full.getPropertySources(e.getKey)).getOrElse(Array.empty[String])
+      val defaultOnly = sources.length == 1 && sources(0).endsWith("-default.xml")
+      if (!defaultOnly) lean.set(e.getKey, e.getValue, sources.headOption.orNull)
+    }
+    lean
+  }
 }
 
 /** K1/K2/K3/K4 — the routing sink. Per micro-batch (or per batch run):

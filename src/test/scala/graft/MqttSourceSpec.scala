@@ -106,6 +106,82 @@ class MqttSourceSpec extends SparkTestBase {
     } finally client.close()
   }
 
+  private def awaitSubscriber(broker: MqttTestBroker): Unit = {
+    var tries = 0
+    while (broker.subscriberCount == 0 && tries < 250) { Thread.sleep(20); tries += 1 }
+    assert(broker.subscriberCount > 0, "the broker never registered the SUBSCRIBE")
+  }
+
+  test("a keepalive-enforcing broker drops a client silent for 1.5 × its keepalive") {
+    val broker = new MqttTestBroker(enforceKeepAlive = true)
+    try {
+      val s = new java.net.Socket("127.0.0.1", broker.port)
+      try {
+        MqttCodec.write(s.getOutputStream, MqttCodec.Connect("silent", 1))
+        assert(MqttCodec.read(s.getInputStream) == MqttCodec.ConnAck(0))
+        val t0 = System.nanoTime()
+        s.setSoTimeout(10000)
+        assert(s.getInputStream.read() == -1, "the broker must close the connection")
+        val waitedMs = (System.nanoTime() - t0) / 1000000
+        assert(waitedMs >= 1400 && waitedMs < 5000, s"dropped after $waitedMs ms")
+      } finally s.close()
+    } finally broker.close()
+  }
+
+  test("a subscriber advertising a 3 s keepalive stays connected through 10 s of silence") {
+    val broker = new MqttTestBroker(enforceKeepAlive = true)
+    try {
+      val client = new MqttClient(broker.url, Seq("#"), keepAliveSecs = 3).start()
+      try {
+        assert(client.awaitConnected())
+        awaitSubscriber(broker)
+        Thread.sleep(10000) // no data either way: only the client's PINGREQs
+        assert(client.reconnects.get() == 0, s"cause: ${client.lastCause.get()}")
+        assert(broker.subscriberCount == 1)
+        broker.publish("t", "still here")
+        var got = Seq.empty[String]
+        var tries = 0
+        while (got.isEmpty && tries < 100) {
+          got = client.poll().map(m => new String(m.payload, "UTF-8")); Thread.sleep(20); tries += 1
+        }
+        assert(got == Seq("still here"))
+      } finally client.close()
+    } finally broker.close()
+  }
+
+  test("reconnect backoff doubles per failure, caps at 5 s and resets on CONNACK") {
+    val port = { val b = new MqttTestBroker(); try b.port finally b.close() }
+    val client = new MqttClient(s"tcp://127.0.0.1:$port", Seq("#"), reconnectBackoffMillis = 100)
+    /** The delay of each reconnect after the `from`-th, until `n` were seen. */
+    def delays(from: Long, n: Int): Seq[Long] = {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      var count = from
+      val deadline = System.nanoTime() + 20000000000L
+      while (seen.length < n && System.nanoTime() < deadline) {
+        // the client records the delay before it moves the count
+        if (client.reconnects.get() > count) { seen += client.lastBackoffMillis.get(); count += 1 }
+        else Thread.sleep(2)
+      }
+      seen.toSeq
+    }
+    val warns = warnsDuring(client) {
+      client.start()
+      try {
+        // nothing listens: every attempt is refused
+        assert(delays(0, 7) == Seq(100L, 200L, 400L, 800L, 1600L, 3200L, 5000L))
+        val broker = new MqttTestBroker(port)
+        val before = try {
+          assert(client.awaitConnected(15000)) // after the 5 s wait
+          awaitSubscriber(broker)
+          client.reconnects.get()
+        } finally broker.close()
+        assert(delays(before, 1) == Seq(100L), "a CONNACK resets the backoff")
+      } finally client.close()
+    }
+    assert(warns.exists(w => w.contains("java.net.ConnectException") && w.contains("in 5000 ms")),
+      warns.mkString("\n"))
+  }
+
   test("idle watchdog reconnects the client after data timeout") {
     val broker = new MqttTestBroker()
     try {

@@ -14,8 +14,12 @@ import graft.sources.mqtt.MqttCodec._
   * them unacked-until-PUBACK, and `redeliverUnacked()` re-sends with the
   * DUP flag — the redelivery a real broker performs after a session
   * resumes, triggerable deterministically for specs.
+  *
+  * With `enforceKeepAlive` the broker drops a connection from which
+  * nothing arrives for 1.5 × the keepalive its CONNECT advertised (MQTT
+  * 3.1.1 §3.1.2.10); off by default.
   */
-class MqttTestBroker(port0: Int = 0) extends AutoCloseable {
+class MqttTestBroker(port0: Int = 0, enforceKeepAlive: Boolean = false) extends AutoCloseable {
   private val server = new ServerSocket(port0)
   val port: Int = server.getLocalPort
   val url = s"tcp://127.0.0.1:$port"
@@ -45,7 +49,10 @@ class MqttTestBroker(port0: Int = 0) extends AutoCloseable {
       var connected = true
       while (connected && running.get()) {
         MqttCodec.read(s.getInputStream) match {
-          case Connect(_, _) => MqttCodec.write(s.getOutputStream, ConnAck(0))
+          case Connect(_, keepAliveSecs) =>
+            // a read that waits longer throws, which drops the connection
+            if (enforceKeepAlive && keepAliveSecs > 0) s.setSoTimeout(keepAliveSecs * 1500)
+            MqttCodec.write(s.getOutputStream, ConnAck(0))
           case Subscribe(pid, topics, qos) =>
             subs.add(new Sub(s, topics, qos))
             MqttCodec.write(s.getOutputStream, SubAck(pid, topics.map(_ => qos)))
