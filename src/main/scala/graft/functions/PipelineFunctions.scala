@@ -104,13 +104,6 @@ object PipelineFunctions {
   def parsedPayload(parsed: Column, schema: StructType): Column =
     struct(schema.map(f => parsed.getField(f.name).as(f.name)): _*)
 
-  /** Legacy convenience — parsed struct, NULL when malformed. NB: costs a
-    * try_parse_json pass PLUS a from_json pass, and inlines per reference
-    * downstream; hot paths must use [[withParsedJson]] instead.
-    */
-  def safeParseJson(payload: Column, schema: StructType): Column =
-    when(jsonIsValid(payload), from_json(payload, schema, Map("mode" -> "PERMISSIVE")))
-
   /** True iff the payload is well-formed JSON (any root: object, array,
     * scalar — JSON.parse semantics, bin/mqtt-streamr.js:151). One variant
     * parse; right for routing-only validity where no fields are read.

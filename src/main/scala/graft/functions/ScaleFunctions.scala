@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation building blocks for 100 TB plans. AQE's skew-join
@@ -96,35 +96,19 @@ object ScaleFunctions {
     saltedFact.join(saltedBuild, Seq(key, "_salt")).drop("_salt")
   }
 
-  /** Connected components by iterated min-label propagation with pointer
-    * jumping — the transitive-closure primitive behind principled dedup
-    * (a duplicate CLUSTER keeps exactly one representative, however long
-    * the chain a->b->c that links it).
+  /** Connected components of the edge-incident nodes, by iterated
+    * min-label propagation with pointer jumping ([[ccLoop]]) — the
+    * transitive-closure primitive behind principled dedup (a duplicate
+    * CLUSTER keeps exactly one representative, however long the chain
+    * a->b->c that links it).
     *
-    * Scale shape: each iteration is two key-partitioned shuffles over
-    * |V|+|E| rows (neighbor-min groupBy, then a self-join that rewrites
-    * every label to its label's label). Neighbor-min alone needs
-    * O(diameter) rounds; the pointer-jump halves chain depth each round,
-    * giving O(log d) total. The driver loop is control-plane: one count
-    * per iteration for convergence, and `localCheckpoint` truncates the
-    * lineage so iteration N's plan does not replay iterations 1..N-1
-    * (a real cluster job would use a reliable checkpoint dir instead —
-    * localCheckpoint trades executor-loss recovery for speed).
-    *
-    * `edges` is directed (src, dst) and symmetrized internally; every
-    * node labels itself first, so isolated nodes keep their own id.
-    * Labels are the component's minimum node id — deterministic.
-    */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIters: Int = 25): DataFrame = {
-    val sym = symmetrize(edges)
-    ccLoop(sym, seedLabels(sym, nodes.select(col("id"))), maxIters)
-  }
-
-  /** Components restricted to edge-incident nodes — the dedup case, where
-    * nodes not in any pair are singletons the loop must never carry. The
-    * incident node set is derived from the PERSISTED symmetric edge set
-    * (distinct src covers both endpoints), so an expensive edge lineage —
-    * e.g. the LSH candidate chain — is materialized exactly once.
+    * `edges` is directed (src, dst) and symmetrized internally. Only
+    * nodes in some edge are labelled — the dedup case, where nodes not in
+    * any pair are singletons the loop must never carry. The incident node
+    * set is derived from the PERSISTED symmetric edge set (distinct src
+    * covers both endpoints), so an expensive edge lineage — e.g. the LSH
+    * candidate chain — is materialized exactly once. Labels are the
+    * component's minimum node id — deterministic.
     */
   def connectedComponentsIncident(edges: DataFrame, maxIters: Int = 25): DataFrame = {
     val sym = symmetrize(edges)
@@ -173,6 +157,17 @@ object ScaleFunctions {
       .select(col("a.id").as("id"), col("plbl").as("lbl"), col("a.prev").as("prev"))
   }
 
+  /** The CC iteration loop. Scale shape: each iteration is two
+    * key-partitioned shuffles over |V|+|E| rows (neighbor-min groupBy,
+    * then a self-join that rewrites every label to its label's label).
+    * Neighbor-min alone needs O(diameter) rounds; the pointer-jump halves
+    * chain depth each round, giving O(log d) total. The loop is
+    * control-plane: one count per iteration for convergence, and
+    * `localCheckpoint` truncates the lineage so iteration N's plan does
+    * not replay iterations 1..N-1 (a real cluster job would use a
+    * reliable checkpoint dir instead — localCheckpoint trades
+    * executor-loss recovery for speed).
+    */
   private def ccLoop(sym: DataFrame, labels0: DataFrame, maxIters: Int): DataFrame = {
     // LAZY checkpoints throughout the loop (r18): the per-iteration
     // convergence count is the materializing action, so each round runs
@@ -219,23 +214,10 @@ object ScaleFunctions {
       } finally pool.shutdown()
     }
 
-  /** Two-phase aggregation for a skewed group key: partial aggregate on
-    * (key, salt), then final aggregate on key. Spark's hash aggregate
-    * already does map-side partials; the explicit form matters when the
-    * partial itself needs to spread (e.g. collect-like or distinct-heavy
-    * aggregates on a hot key).
-    */
-  def saltedSum(df: DataFrame, key: String, value: String, salts: Int): DataFrame =
-    df.withColumn("_salt", pmod(hash(monotonically_increasing_id()), lit(salts)))
-      .groupBy(col(key), col("_salt"))
-      .agg(sum(value).as("_partial"))
-      .groupBy(col(key))
-      .agg(sum("_partial").as(s"sum_$value"))
-
   /** Fixed-iteration damped PageRank over a directed edge set (src, dst)
     * — the other canonical iterative graph pass next to
-    * [[connectedComponents]], with the same cost model: per iteration,
-    * the |V|-row rank relation (pre-divided by out-degree, so the
+    * [[connectedComponentsIncident]], with the same cost model: per
+    * iteration, the |V|-row rank relation (pre-divided by out-degree, so the
     * per-edge division is never re-evaluated |E| times) joins the
     * persisted edge set BROADCAST while |V| fits the broadcast budget —
     * the edge set then never shuffles and the only exchange is the

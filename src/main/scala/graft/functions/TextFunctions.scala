@@ -107,13 +107,6 @@ object TextFunctions extends Logging {
   def minhashFromHashes(hs: Column, numHashes: Int): Column =
     graft.expressions.HashExpressions.minhashNative(hs, numHashes)
 
-  /** Convenience composition for non-hot-path use (tests): hashes inline,
-    * so the md5 pass is duplicated numHashes times — prefer materializing
-    * hashArray for real pipelines.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    minhashFromHashes(hashArray(shingles), numHashes)
-
   /** LSH band buckets from a minhash signature: hash each band of `rowsPerBand`
     * signature entries into a bucket id. Result: array<long> of length
     * numHashes/rowsPerBand; candidate pairs share (band_index, bucket).
@@ -138,13 +131,6 @@ object TextFunctions extends Logging {
     */
   def simhashFromHashesBits(hs: Column, bits: Int): Column =
     graft.expressions.HashExpressions.simhashNative(hs, bits)
-
-  /** Convenience composition (tests): hashes inline — duplicated 32x. */
-  def simhash32(toks: Column): Column = simhashFromHashes(hashArray(toks))
-
-  /** Hamming distance between two 32-bit simhashes. */
-  def hamming32(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** Order-sensitive document fingerprint: sum of h32(token)*(position+1)
     * mod 1e9+7. Exact integer arithmetic => bit-identical across engines
@@ -176,8 +162,11 @@ object TextFunctions extends Logging {
     "hits_fr" -> stopwordHits(toks, StopwordsFr),
     "hits_es" -> stopwordHits(toks, StopwordsEs))
 
-  /** Language-ID decision over already-materialized hit counts — cheap
-    * attribute comparisons, safe to inline anywhere.
+  /** Language-ID heuristic over already-materialized hit counts (see
+    * [[langHits]]): argmax of per-language stopword hits; 'und'
+    * (undetermined) when no stopword matches at all. Deterministic
+    * tie-break by fixed language order en>de>fr>es. Cheap attribute
+    * comparisons, safe to inline anywhere.
     */
   def langIdFromHits(en: Column, de: Column, fr: Column, es: Column): Column = {
     val m = greatest(en, de, fr, es)
@@ -186,20 +175,6 @@ object TextFunctions extends Logging {
       .when(de === m, lit("de"))
       .when(fr === m, lit("fr"))
       .otherwise(lit("es"))
-  }
-
-  /** Language-ID heuristic: argmax of per-language stopword hit counts;
-    * 'und' (undetermined) when no stopword matches at all. Deterministic
-    * tie-break by fixed language order en>de>fr>es.
-    *
-    * NB: this single-Column form duplicates each hit count ~6x in the
-    * expression tree (Columns are trees); hot paths should stage
-    * [[langHits]] behind a barrier and call [[langIdFromHits]] —
-    * TextQueries.textLangid does.
-    */
-  def langId(toks: Column): Column = {
-    val Seq(en, de, fr, es) = langHits(toks).map(_._2)
-    langIdFromHits(en, de, fr, es)
   }
 
   /** Fasttext-style classifier surface, shared by the queries that score
@@ -317,8 +292,10 @@ object TextFunctions extends Logging {
       symbolRatio <= 0.1 &&
       stopHits >= 2L
 
-  /** Quality score from already-materialized parts — cheap arithmetic,
-    * safe to inline. Parts: char count, alpha-char count, token count,
+  /** Quality score in [0,1] from already-materialized parts: blend of
+    * length band, alpha ratio, stopword ratio — the standard cheap
+    * pre-filter for LLM training corpora. Cheap arithmetic, safe to
+    * inline. Parts: char count, alpha-char count, token count,
     * English-stopword hit count.
     */
   def qualityScoreFromParts(nChars: Column, alphaLen: Column,
@@ -329,14 +306,4 @@ object TextFunctions extends Logging {
       .when(nChars >= 30, 0.5).otherwise(0.0)
     round((lengthScore + least(alphaRatio, lit(1.0)) + least(stopRatio * 5, lit(1.0))) / 3, 6)
   }
-
-  /** Quality score in [0,1]: blend of length band, alpha ratio, stopword
-    * ratio — the standard cheap pre-filter for LLM training corpora.
-    * NB: single-Column form re-derives text/toks per reference; hot paths
-    * stage the parts behind a barrier and call [[qualityScoreFromParts]].
-    */
-  def qualityScore(text: Column, toks: Column): Column =
-    qualityScoreFromParts(length(text),
-      length(regexp_replace(text, "[^A-Za-z ]", "")),
-      size(toks), stopwordHits(toks, StopwordsEn))
 }

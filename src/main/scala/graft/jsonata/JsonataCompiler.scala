@@ -134,10 +134,6 @@ object JsonataCompiler {
     }
   }
 
-  /** Convenience: compiled transform over a raw JSON string column. */
-  def transformJson(src: String, payload: Column, schema: StructType): Column =
-    compile(src, from_json(payload, schema), schema)
-
   // ---- node compilation -------------------------------------------------
 
   private def compileNode(node: JNode, ctx: Typed, env: Env): Typed = node match {

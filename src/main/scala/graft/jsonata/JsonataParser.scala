@@ -164,7 +164,7 @@ object JsonataParser {
 
     /** postfix: primary followed by `.step`, `[index]`, `[predicate]`. */
     private def postfix(): JNode = {
-      var base = primary()
+      val base = primary()
       var steps = base match {
         case JPath(s) => s
         case _ => Nil

@@ -62,46 +62,6 @@ object Multimodal {
     }
   }
 
-  /** REAL codec behind the seam: javax.imageio, the JDK's image reader
-    * (PNG/BMP/JPEG/GIF), decoding to a dim-strip mean-luminance vector
-    * (vertical strips left→right; luminance = (r+g+b)/3 in [0, 255]).
-    * This is a genuine library boundary with both real-codec failure
-    * shapes the seam contract handles: `ImageIO.read` returns NULL for
-    * an unrecognized container (mapped to None here) and THROWS
-    * (IIOException, EOF, index errors) on truncated or corrupt streams
-    * (caught by the seam, not here — the decoder stays honest about
-    * what the library does). MultimodalSpec drives it over synthetic
-    * PNG/BMP bytes plus truncated and garbage streams.
-    */
-  class ImageIoDecoder(dim: Int) extends Decoder {
-    override def decode(kind: String, bytes: Array[Byte]): Option[Array[Double]] = {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null || img.getWidth == 0 || img.getHeight == 0) None
-      else {
-        val w = img.getWidth
-        val h = img.getHeight
-        Some(Array.tabulate(dim) { i =>
-          val x0 = i * w / dim
-          val x1 = math.max(x0 + 1, (i + 1) * w / dim)
-          var sum = 0L
-          var n = 0
-          var x = x0
-          while (x < x1 && x < w) {
-            var y = 0
-            while (y < h) {
-              val rgb = img.getRGB(x, y)
-              sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-              n += 3
-              y += 1
-            }
-            x += 1
-          }
-          if (n == 0) 0.0 else sum.toDouble / n
-        })
-      }
-    }
-  }
-
   /** Average-hash grid decoder — the aHash front half (downscale to a
     * fixed grid, one mean per cell), with byte blocks standing in for
     * pixel blocks: feature(i) = mean unsigned value of the i-th of `dim`

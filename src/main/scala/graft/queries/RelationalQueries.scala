@@ -1920,12 +1920,13 @@ object RelationalQueries {
   /** Two-level salted aggregation on a 3-value (maximally skewed) group
     * key, oracle-gated to equal the plain GROUP BY: partial sums on
     * (key, salt) spread each hot key over `Salts` reducers, the final
-    * combine touches keys × Salts rows. This is the skew pattern
-    * ScaleFunctions.saltedSum documents, as a checked query — safe here
-    * because the combined aggregates (integer-valued quantity sums,
-    * counts) are exact in double, so the result is salt- and
-    * order-independent. The salt is a deterministic hash of the row key,
-    * not a random, so replays agree.
+    * combine touches keys × Salts rows. This is the explicit form of the
+    * partial aggregation Spark's hash aggregate does map-side, for when
+    * the partial itself must spread over a hot key — safe here because
+    * the combined aggregates (integer-valued quantity sums, counts) are
+    * exact in double, so the result is salt- and order-independent. The
+    * salt is a deterministic hash of the row key, not a random, so
+    * replays agree.
     */
   def qSkewAgg(s: SparkSession, dir: String): DataFrame = {
     val Salts = 32
@@ -1942,7 +1943,7 @@ object RelationalQueries {
 
   /** Salted equi-join as a checked query — [[qSkewAgg]]'s counterpart
     * for the JOIN side of skew handling, making ScaleFunctions.saltedJoin
-    * oracle-gated the way q_skew_agg gates saltedSum: the fact side
+    * oracle-gated the way q_skew_agg gates salted aggregation: the fact side
     * (lineitem) takes a uniform salt, the build side (orders — small-ish
     * but not broadcastable at 100 TB) replicates once per salt, so every
     * (key, salt) pair co-locates and one hot order key can no longer

@@ -828,8 +828,8 @@ object TextQueries {
   /** Stopword-based language-ID heuristic vs the labeled lang. */
   def textLangid(s: SparkSession, dir: String): DataFrame = {
     // two barriers: tokenize once, then count each language's hits once —
-    // the single-Column langId form would re-split and re-filter per
-    // reference in the argmax tree (~23 evaluations/row)
+    // inlined, each hit count would re-split and re-filter per reference
+    // in the argmax tree (~23 evaluations/row)
     val base = Tables.documents(s, dir)
     val toks = stageBarrier(base, Seq(col("doc_id"), col("lang")),
       "toks" -> tokens(lower(col("text"))))
@@ -1426,8 +1426,8 @@ object TextQueries {
   def textQuality(s: SparkSession, dir: String): DataFrame = {
     val t = col("text")
     // tokenize + scan the text once each; ratios and the blended score
-    // read the staged counts (the single-Column qualityScore form would
-    // re-split and re-regex per reference)
+    // read the staged counts (inlined parts would re-split and re-regex
+    // per reference)
     val toks = stageBarrier(Tables.documents(s, dir), Seq(col("doc_id"), t),
       "toks" -> tokens(t))
     val parts = stageBarrier(toks, Seq(col("doc_id")),
@@ -2087,8 +2087,8 @@ object TextQueries {
     * larger id of some pair); this is the transitive-closure ground truth
     * it approximates — a chain a~b, b~c with no a~c pair still collapses
     * to one survivor here. Components come from
-    * ScaleFunctions.connectedComponents (min-label + pointer jumping,
-    * O(log d) iterations, lineage-truncated); the pair graph is the same
+    * ScaleFunctions.connectedComponentsIncident (min-label + pointer
+    * jumping, O(log d) iterations, lineage-truncated); the pair graph is the same
     * banded LSH join as dedup_minhash_pairs, so nothing here is all-pairs.
     */
   def dedupCC(s: SparkSession, dir: String): DataFrame = {
@@ -2210,13 +2210,18 @@ object TextQueries {
   def textCms(s: SparkSession, dir: String): DataFrame = {
     // ONE tokenize pass (r18): counters and the top-50 side both derived
     // from the token stream, so the corpus explode ran twice. Aggregate
-    // to the vocabulary-sized (tok, tf) table once (checkpointed); the
-    // counters become sum(tf) over the same (r, b) cells — integer sums,
-    // bit-identical to counting the raw rows — and top-50 reads off it.
+    // to the vocabulary-sized (tok, tf) table once; the counters become
+    // sum(tf) over the same (r, b) cells — integer sums, bit-identical to
+    // counting the raw rows — and top-50 reads off it. The checkpoint is
+    // eager, so the table is materialised here, before the final plan's
+    // two concurrent map-stage jobs (counters and top-50) read it: a lazy
+    // one is materialised by whichever job finishes first, which drops the
+    // lineage the other job's task metrics point at (the scheduler then
+    // logs "Failed to update accumulator").
     val tf = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val hashed = tf
       .select(col("tok"), col("tf"), explode(sequence(lit(0), lit(CmsDepth - 1))).as("r"))
       .select(col("tf"), col("r"), pmod(h32(col("tok"), col("r")), lit(CmsWidth)).as("b"))
@@ -3240,7 +3245,7 @@ object TextQueries {
     "[array_to_string(list_slice(toks, i, i + 2), ' ') for i in range(1, len(toks) - 1)]"
 
   // one md5 per shingle (hs), then universal-hash mixes per seed — must
-  // mirror TextFunctions.minhashSignature exactly
+  // mirror TextFunctions.hashArray + minhashFromHashes exactly
   private val hsSql = s"[${hx("s")} for s in shingles]"
 
   private val sigSql =

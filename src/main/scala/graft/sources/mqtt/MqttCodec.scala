@@ -1,6 +1,6 @@
 package graft.sources.mqtt
 
-import java.io.{DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{DataInputStream, EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal MQTT 3.1.1 wire codec (public spec: OASIS mqtt-v3.1.1) — just
@@ -25,20 +25,6 @@ object MqttCodec {
   case object PingReq extends Packet
   case object PingResp extends Packet
   case object Disconnect extends Packet
-
-  /** MQTT topic-filter match incl. `+` (one level) and `#` (rest). Same
-    * semantics the reference gets from its broker (README.md:23-26).
-    */
-  def topicMatches(filter: String, topic: String): Boolean = {
-    def go(f: List[String], t: List[String]): Boolean = (f, t) match {
-      case (Nil, Nil) => true
-      case ("#" :: _, _) => true
-      case ("+" :: fr, _ :: tr) => go(fr, tr)
-      case (fh :: fr, th :: tr) if fh == th => go(fr, tr)
-      case _ => false
-    }
-    go(filter.split("/", -1).toList, topic.split("/", -1).toList)
-  }
 
   // ---- encoding ---------------------------------------------------------
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.sources.mqtt.MqttPublishConnection
@@ -16,11 +17,12 @@ import graft.sources.mqtt.MqttPublishConnection
   * driver. Success/error totals flow back through Spark accumulators; a
   * partition that cannot connect counts all its records as errors instead
   * of failing the batch (a dead broker must not wedge a 1000-executor job;
-  * the interval stats surface the loss).
+  * the interval stats surface the loss). A batch with any failed publish
+  * logs one WARN with its failed and total counts.
   */
 class MqttStreamPublisher(url: String, @transient spark: SparkSession,
     timeoutMs: Int = 10000)
-    extends StreamPublisher {
+    extends StreamPublisher with Logging {
 
   private val successAcc = spark.sparkContext.longAccumulator("mqtt_publish_success")
   private val errorAcc = spark.sparkContext.longAccumulator("mqtt_publish_error")
@@ -35,6 +37,7 @@ class MqttStreamPublisher(url: String, @transient spark: SparkSession,
     val tmo = timeoutMs
     val sAcc = successAcc
     val eAcc = errorAcc
+    val (ok0, err0) = (successCount, errorCount)
     routed.select(col("stream_id"), col("value_json"))
       .foreachPartition { (it: Iterator[Row]) =>
         if (it.hasNext) {
@@ -54,5 +57,9 @@ class MqttStreamPublisher(url: String, @transient spark: SparkSession,
           } finally if (conn != null) conn.close()
         }
       }
+    val failed = errorCount - err0
+    if (failed > 0)
+      logWarning(s"mqtt publish to $url: $failed of ${failed + successCount - ok0} " +
+        s"records of batch $batchId failed")
   }
 }

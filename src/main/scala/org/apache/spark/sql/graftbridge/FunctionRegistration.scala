@@ -46,7 +46,7 @@ object FunctionRegistration {
   def register(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    functions.foreach { case (name, usage, builder) =>
+    functions.foreach { case (name, _, builder) =>
       registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }

@@ -24,9 +24,13 @@ class JsonataSpec extends SparkTestBase {
   private val nestedJson =
     """{"id": 42, "readings": [{"t": 21.5}, {"t": 22.1}], "meta": {"fw": "1.2"}}"""
 
+  /** `expr` over one payload, composed the way GraftPipeline.plan runs a
+    * transform: one parse behind the barrier, the compiled transform over
+    * the parsed struct, NULL unless the parse succeeded. */
   private def evalOn(json: String, schema: StructType, expr: String): Any = {
-    val df = Seq(json).toDF("p")
-      .select(JsonataCompiler.transformJson(expr, col("p"), schema).as("r"))
+    import graft.functions.PipelineFunctions.{parseOk, withParsedJson}
+    val df = withParsedJson(Seq(json).toDF("payload"), col("payload"), schema, "p")
+      .select(when(parseOk(col("p")), JsonataCompiler.compile(expr, col("p"), schema)).as("r"))
     df.collect()(0).get(0)
   }
 
@@ -542,7 +546,7 @@ class JsonataSpec extends SparkTestBase {
     val schema = sensorSchema
     val df = Seq("not json {").toDF("p")
       .select(JsonataCompiler.compile("watts * 2",
-        graft.functions.PipelineFunctions.safeParseJson(col("p"), schema), schema).as("r"))
+        graft.functions.PipelineFunctions.parseJsonLenient(col("p"), schema), schema).as("r"))
     assert(df.collect()(0).isNullAt(0))
   }
 

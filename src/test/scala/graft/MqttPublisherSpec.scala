@@ -72,8 +72,12 @@ class MqttPublisherSpec extends SparkTestBase {
     val registryDir = Files.createTempDirectory("mqtt_pub_reg2").toString
     val pub = new MqttStreamPublisher(s"tcp://127.0.0.1:$port", spark)
     val sink = new RoutingSink(new FsStreamRegistry(registryDir), pub, GraftConfig())
-    sink.processBatch(routedBatch(4), batchId = 0L) // must not throw
+    val warns = warnsDuring(pub) {
+      sink.processBatch(routedBatch(4), batchId = 0L) // must not throw
+    }
     assert(pub.errorCount == 4 && pub.successCount == 0)
+    assert(warns.exists(w => w.contains("4 of 4 records of batch 0 failed") &&
+      w.contains(s"tcp://127.0.0.1:$port")), warns.mkString("\n"))
   }
 
   test("end-to-end: MQTT in, pipeline, MQTT publish out") {

@@ -34,7 +34,7 @@ class MqttSourceSpec extends SparkTestBase {
   }
 
   test("topic wildcard matching follows the MQTT spec") {
-    import MqttCodec.topicMatches
+    import MqttTestBroker.topicMatches
     assert(topicMatches("a/b/c", "a/b/c"))
     assert(topicMatches("a/+/c", "a/x/c"))
     assert(!topicMatches("a/+/c", "a/x/y"))

@@ -82,7 +82,7 @@ class MqttTestBroker(port0: Int = 0, enforceKeepAlive: Boolean = false) extends 
 
   private def fanout(topic: String, payload: Array[Byte]): Unit =
     subs.forEach { sub =>
-      if (sub.filters.exists(MqttCodec.topicMatches(_, topic)))
+      if (sub.filters.exists(MqttTestBroker.topicMatches(_, topic)))
         try {
           if (sub.qos > 0) {
             val pid = sub.nextPid.getAndIncrement() & 0xffff
@@ -120,5 +120,23 @@ class MqttTestBroker(port0: Int = 0, enforceKeepAlive: Boolean = false) extends 
     running.set(false)
     try server.close() catch { case NonFatal(_) => () }
     conns.forEach(c => try c.close() catch { case NonFatal(_) => () })
+  }
+}
+
+object MqttTestBroker {
+
+  /** MQTT topic-filter match incl. `+` (one level) and `#` (rest). Same
+    * semantics the reference gets from its broker (README.md:23-26); the
+    * bridge itself only subscribes, so matching lives with the broker.
+    */
+  def topicMatches(filter: String, topic: String): Boolean = {
+    def go(f: List[String], t: List[String]): Boolean = (f, t) match {
+      case (Nil, Nil) => true
+      case ("#" :: _, _) => true
+      case ("+" :: fr, _ :: tr) => go(fr, tr)
+      case (fh :: fr, th :: tr) if fh == th => go(fr, tr)
+      case _ => false
+    }
+    go(filter.split("/", -1).toList, topic.split("/", -1).toList)
   }
 }

@@ -80,7 +80,7 @@ class MultimodalSpec extends SparkTestBase {
       MediaRecord(4L, "image", whitePng.take(40), 0, 0, 0), // truncated PNG: ImageIO throws
       MediaRecord(5L, "image", Array.fill[Byte](64)(0x5a), 0, 0, 0) // no container: read() == null
     ).toDS().repartition(2)
-    val out = Multimodal.extractFeatures(ds, new Multimodal.ImageIoDecoder(4),
+    val out = Multimodal.extractFeatures(ds, new ImageIoDecoder(4),
       expectDim = Some(4)).collect().sortBy(_.media_id)
     assert(out.map(_.media_id).toSeq == Seq(1L, 2L, 3L, 4L, 5L))
     assert(out.filter(!_.decode_ok).map(_.media_id).toSeq == Seq(4L, 5L),
@@ -123,5 +123,46 @@ private[graft] class FlakyNativeCodec(dim: Int) extends Multimodal.Decoder {
     if (s.contains("CORRUPT")) throw new RuntimeException(s"native decode error: $s")
     if (s.contains("RAGGED")) Some(Array(0.5)) // wrong dim
     else inner.decode(kind, bytes)
+  }
+}
+
+/** A REAL codec behind the seam: javax.imageio, the JDK's image reader
+  * (PNG/BMP/JPEG/GIF), decoding to a dim-strip mean-luminance vector
+  * (vertical strips left→right; luminance = (r+g+b)/3 in [0, 255]).
+  * This is a genuine library boundary with both real-codec failure
+  * shapes the seam contract handles: `ImageIO.read` returns NULL for
+  * an unrecognized container (mapped to None here) and THROWS
+  * (IIOException, EOF, index errors) on truncated or corrupt streams
+  * (caught by the seam, not here — the decoder stays honest about
+  * what the library does). No query decodes with it; the spec above
+  * drives it over synthetic PNG/BMP bytes plus truncated and garbage
+  * streams.
+  */
+private[graft] class ImageIoDecoder(dim: Int) extends Multimodal.Decoder {
+  override def decode(kind: String, bytes: Array[Byte]): Option[Array[Double]] = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    if (img == null || img.getWidth == 0 || img.getHeight == 0) None
+    else {
+      val w = img.getWidth
+      val h = img.getHeight
+      Some(Array.tabulate(dim) { i =>
+        val x0 = i * w / dim
+        val x1 = math.max(x0 + 1, (i + 1) * w / dim)
+        var sum = 0L
+        var n = 0
+        var x = x0
+        while (x < x1 && x < w) {
+          var y = 0
+          while (y < h) {
+            val rgb = img.getRGB(x, y)
+            sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+            n += 3
+            y += 1
+          }
+          x += 1
+        }
+        if (n == 0) 0.0 else sum.toDouble / n
+      })
+    }
   }
 }

@@ -72,32 +72,22 @@ class ScaleFunctionsSpec extends SparkTestBase {
     assert(salted == plain)
   }
 
-  test("saltedSum equals direct aggregation") {
-    val direct = skewed.groupBy("k").agg(sum("v").as("sum_v"))
-      .orderBy("k").as[(String, Double)].collect().toSeq
-    val salted = ScaleFunctions.saltedSum(skewed, "k", "v", salts = 8)
-      .orderBy("k").as[(String, Double)].collect().toSeq
-    assert(salted == direct)
-  }
-
   test("connectedComponents collapses a chain the pairwise rule cannot") {
     // path 0-1-2-...-9: only adjacent pairs are edges, yet all ten nodes
     // are one component — the transitive case dedup_keep approximates
-    val nodes = (0L to 10L).toDF("id") // 10 is isolated
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = ScaleFunctions.connectedComponents(nodes, edges)
+    val got = ScaleFunctions.connectedComponentsIncident(edges)
       .as[(Long, Long)].collect().toMap
     assert((0L to 9L).forall(got(_) == 0L))
-    assert(got(10L) == 10L)
+    assert(got.size == 10) // one label per chain node, nothing else
   }
 
   test("connectedComponents labels multiple components with their minima") {
-    val nodes = Seq(1L, 2L, 3L, 7L, 8L, 9L, 5L).toDF("id")
-    // two triangles joined internally + isolated 5; edge direction mixed
+    // two triangles joined internally; edge direction mixed
     val edges = Seq((2L, 1L), (2L, 3L), (9L, 7L), (8L, 9L)).toDF("src", "dst")
-    val got = ScaleFunctions.connectedComponents(nodes, edges)
+    val got = ScaleFunctions.connectedComponentsIncident(edges)
       .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L, 5L -> 5L))
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L))
   }
 
   test("pageRank matches a driver-side reference on a small symmetric graph") {

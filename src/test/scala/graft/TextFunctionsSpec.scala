@@ -31,7 +31,7 @@ class TextFunctionsSpec extends SparkTestBase {
 
   test("minhashSignature is deterministic, has numHashes entries, and is") {
     val df = Seq("the quick brown fox jumps over the lazy dog").toDF("t")
-      .select(minhashSignature(wordShingles(tokens(col("t")), 3), 16).as("sig"))
+      .select(minhashFromHashes(hashArray(wordShingles(tokens(col("t")), 3)), 16).as("sig"))
     val sig1 = df.as[Seq[Long]].head()
     val sig2 = df.as[Seq[Long]].head()
     assert(sig1.length == 16)
@@ -42,8 +42,8 @@ class TextFunctionsSpec extends SparkTestBase {
   test("identical shingle sets give identical signatures; supersets give <= minima") {
     val df = Seq(("a b c d e", "a b c d e"), ("a b c d e", "a b c d e f")).toDF("t1", "t2")
       .select(
-        minhashSignature(wordShingles(tokens(col("t1")), 3), 16).as("s1"),
-        minhashSignature(wordShingles(tokens(col("t2")), 3), 16).as("s2"))
+        minhashFromHashes(hashArray(wordShingles(tokens(col("t1")), 3)), 16).as("s1"),
+        minhashFromHashes(hashArray(wordShingles(tokens(col("t2")), 3)), 16).as("s2"))
     val rows = df.as[(Seq[Long], Seq[Long])].collect()
     assert(rows(0)._1 == rows(0)._2)
     // t2's shingles are a superset -> each min can only stay or decrease
@@ -53,13 +53,14 @@ class TextFunctionsSpec extends SparkTestBase {
   test("lshBandBuckets: signature of 16 with 4 rows/band -> 4 buckets") {
     val df = Seq("w x y z a b c").toDF("t")
       .select(lshBandBuckets(
-        minhashSignature(wordShingles(tokens(col("t")), 3), 16), 4).as("b"))
+        minhashFromHashes(hashArray(wordShingles(tokens(col("t")), 3)), 16), 4).as("b"))
     assert(df.as[Seq[Long]].head().length == 4)
   }
 
   test("simhash32 is a 32-bit value, deterministic, equal for equal input") {
     val df = Seq(("hello world foo bar", "hello world foo bar")).toDF("t1", "t2")
-      .select(simhash32(tokens(col("t1"))).as("h1"), simhash32(tokens(col("t2"))).as("h2"))
+      .select(simhashFromHashes(hashArray(tokens(col("t1")))).as("h1"),
+        simhashFromHashes(hashArray(tokens(col("t2")))).as("h2"))
     val (h1, h2) = df.as[(Long, Long)].head()
     assert(h1 == h2)
     assert(h1 >= 0 && h1 < (1L << 32))
@@ -172,9 +173,10 @@ class TextFunctionsSpec extends SparkTestBase {
       "the quick brown fox jumps over the lazy dog again and again tonight",
       "completely different words entirely unrelated to anything else here"
     )).toDF("a", "b", "c")
+      .select(Seq("a", "b", "c").map(t => simhashFromHashes(hashArray(tokens(col(t)))).as(t)): _*)
       .select(
-        hamming32(simhash32(tokens(col("a"))), simhash32(tokens(col("b")))).as("near"),
-        hamming32(simhash32(tokens(col("a"))), simhash32(tokens(col("c")))).as("far"))
+        bit_count(col("a").bitwiseXOR(col("b"))).as("near"),
+        bit_count(col("a").bitwiseXOR(col("c"))).as("far"))
     val r = df.collect()(0)
     assert(r.getInt(0) < r.getInt(1))
   }
@@ -223,15 +225,20 @@ class TextFunctionsSpec extends SparkTestBase {
       "der hund ist nicht mit der katze auf das sofa",
       "le chat est dans la maison et les oiseaux pour",
       "xyzzy plugh qwerty").toDF("t")
-      .select(langId(tokens(lower(col("t")))).as("l"))
-    assert(df.as[String].collect().toSeq == Seq("en", "de", "fr", "und"))
+      .select(tokens(lower(col("t"))).as("toks"))
+    val hits = graft.functions.PipelineFunctions.stageBarrier(df, Seq.empty, langHits(col("toks")): _*)
+    val langs = hits.select(
+      langIdFromHits(col("hits_en"), col("hits_de"), col("hits_fr"), col("hits_es")).as("l"))
+    assert(langs.as[String].collect().toSeq == Seq("en", "de", "fr", "und"))
   }
 
   test("qualityScore in [0,1]") {
     val df = Seq(
       "the quick brown fox jumps over the lazy dog and runs far away into the woods today with great speed and agility for a while",
       "x!", "").toDF("t")
-      .select(qualityScore(col("t"), tokens(col("t"))).as("q"))
+      .select(qualityScoreFromParts(length(col("t")),
+        length(regexp_replace(col("t"), "[^A-Za-z ]", "")),
+        size(tokens(col("t"))), stopwordHits(tokens(col("t")), StopwordsEn)).as("q"))
     df.as[Double].collect().foreach(q => assert(q >= 0.0 && q <= 1.0))
   }
 
