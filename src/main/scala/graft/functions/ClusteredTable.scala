@@ -389,7 +389,7 @@ object ClusteredTable extends Logging {
 
   /** Fold newest base + all un-folded deltas into the next z-ordered
     * base version, clustered on the integer dimensions `dims` (k ≥ 1,
-    * via [[ZorderLayout.writeN]]; Morton generalizes to any k, hilbert
+    * via [[ZorderLayout.write]]; Morton generalizes to any k, hilbert
     * stays 2-D and rejects loudly otherwise). Returns the new version id
     * (or the current one if there was nothing to fold). Idempotent from
     * any crash point.
@@ -515,7 +515,7 @@ object ClusteredTable extends Logging {
       val staging = new Path(baseRoot(root),
         s".staging-v=$next-${java.util.UUID.randomUUID().toString.take(8)}")
       val wrote = try {
-        ZorderLayout.writeN(all, dims, bits, numFiles, staging.toString,
+        ZorderLayout.write(all, dims, bits, numFiles, staging.toString,
           maxRecordsPerFile, curve)
         // the ENVELOPE CATALOG: one ≤numFiles-row aggregate over the
         // staged parquet (column-pruned to zfile + the clustered
@@ -655,7 +655,7 @@ object ClusteredTable extends Logging {
     * SQL): the smallest power of two ≥ rows/targetRowsPerFile, clamped
     * to the k-dim z-domain [1, 2^(k·bits)] — powers of two always divide
     * the z-key domain, so the static-bucket invariant
-    * [[ZorderLayout.writeN]] requires holds at every size.
+    * [[ZorderLayout.write]] requires holds at every size.
     */
   def autoFileCount(rows: Long, targetRowsPerFile: Long, bits: Int, k: Int): Int = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile must be positive")

@@ -66,32 +66,26 @@ object PipelineFunctions {
     from_json(payload, schema.add(CorruptField, StringType),
       Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptField))
 
-  /** Generic optimizer barrier: output = `keep` columns plus each staged
+  /** Optimizer barrier: output = `keep` columns plus each staged
     * (name, expr) materialized ONCE per row behind a Generate node.
     * Use when a non-trivial expression is referenced more than once
-    * downstream — Columns are trees, not DAGs, and CollapseProject /
-    * PushDownPredicates re-inline plain projections per reference (see
-    * [[withParsedJson]] for the full mechanics).
-    */
-  def stageBarrier(df: DataFrame, keep: Seq[Column], staged: (String, Column)*): DataFrame =
-    df.select(keep :+ inline(array(struct(staged.map { case (n, c) => c.as(n) }: _*))): _*)
-
-  /** Stage `df` through a single-parse barrier: output = `keep` columns
-    * plus `alias` = the [[parseJsonLenient]] struct.
+    * downstream — Columns are trees, not DAGs. The single-parse stage
+    * of a JSON payload is `stageBarrier(df, keep, "p" ->
+    * parseJsonLenient(payload, schema))`.
     *
     * The `inline(array(struct(...)))` generator is deliberate: a Generate
     * node is an optimizer barrier. A plain Project stage survives
-    * CollapseProject (from_json is not "cheap"), but PushDownPredicates
-    * inlines any downstream filter's expression THROUGH a Project
-    * regardless of cost — a `filter(parsed.isNotNull)` re-derives the
-    * whole parse inside the Filter (and again per field at the consumer).
-    * Neither rule crosses a Generate, so every downstream reference —
-    * filters included — sees `alias` as a plain attribute: exactly one
-    * parse per row, verified in PLANS.md.
+    * CollapseProject when its expression is not "cheap" (from_json is
+    * not), but PushDownPredicates inlines any downstream filter's
+    * expression THROUGH a Project regardless of cost — a
+    * `filter(parsed.isNotNull)` re-derives the whole parse inside the
+    * Filter (and again per field at the consumer). Neither rule crosses
+    * a Generate, so every downstream reference — filters included —
+    * sees each staged name as a plain attribute: exactly one evaluation
+    * per row, verified in PLANS.md.
     */
-  def withParsedJson(df: DataFrame, payload: Column, schema: StructType,
-      alias: String, keep: Column*): DataFrame =
-    df.select(keep :+ inline(array(struct(parseJsonLenient(payload, schema).as(alias)))): _*)
+  def stageBarrier(df: DataFrame, keep: Seq[Column], staged: (String, Column)*): DataFrame =
+    df.select(keep :+ inline(array(struct(staged.map { case (n, c) => c.as(n) }: _*))): _*)
 
   /** Validity predicate over a [[parseJsonLenient]] struct. */
   def parseOk(parsed: Column): Column =
@@ -99,7 +93,7 @@ object PipelineFunctions {
 
   /** Project the corrupt-record sidecar away: the parsed struct with
     * exactly the user schema's fields (cheap ExtractValues when `parsed`
-    * is already an attribute behind the [[withParsedJson]] barrier).
+    * is already an attribute behind a [[stageBarrier]]).
     */
   def parsedPayload(parsed: Column, schema: StructType): Column =
     struct(schema.map(f => parsed.getField(f.name).as(f.name)): _*)

@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
   * Morton-interleaved layout would cut read amplification, this writes
   * the layout, so a filtered scan can actually skip files.
   *
-  * Layout strategy: STATIC z-bucketing. Each row's two filter
+  * Layout strategy: STATIC z-bucketing. Each row's k filter
   * dimensions (small integer domains, `bits` bits each) interleave into
-  * a Morton key; the key space `[0, 4^bits)` splits into `numFiles`
+  * a Morton key; the key space `[0, 2^(k*bits))` splits into `numFiles`
   * contiguous ranges; each range becomes one directory partition
   * (`zfile=K/`), and rows inside every partition are sorted by the full
-  * z-key so parquet row-group min/max footers stay tight on BOTH
-  * dimensions. A box predicate on either dimension then prunes twice:
+  * z-key so parquet row-group min/max footers stay tight on EVERY
+  * dimension. A box predicate on any dimension then prunes twice:
   * directory partitions via the catalog (`PartitionFilters`), row
   * groups inside surviving files via footer stats (`PushedFilters`).
   *
@@ -33,26 +33,20 @@ import org.apache.spark.sql.functions._
   */
 object ZorderLayout {
 
-  /** Bit-interleave two `bits`-bit non-negative ints: d1 takes the odd
-    * bit positions (more significant), d2 the even. Integer shifts and
-    * adds only — exact and engine-portable.
-    */
-  def mortonKey(d1: Column, d2: Column, bits: Int): Column =
-    mortonKeyN(Seq(d1, d2), bits)
-
-  /** The k-dimensional Morton interleave [[mortonKey]] is the k=2 case
-    * of: bit `i` of dimension `j` (0-based, FIRST dim most significant
-    * within each bit group) lands at key position `i*k + (k-1-j)`.
-    * Still pure integer shift/multiply/add — exact, engine-portable
+  /** The k-dimensional Morton interleave of `bits`-bit non-negative
+    * ints: bit `i` of dimension `j` (0-based, FIRST dim most significant
+    * within each bit group) lands at key position `i*k + (k-1-j)` — for
+    * k=2, d1 takes the odd bit positions and d2 the even.
+    * Pure integer shift/multiply/add — exact, engine-portable
     * (the q_cluster_3d oracle re-derives it in DuckDB SQL), and fully
     * inside whole-stage codegen. The key domain is `2^(k*bits)`, capped
     * at 31 bits so the key (and the zfile division downstream) stays in
     * exact Int range — production N-dim z-ordering trades per-dim
     * resolution for dimension count at a fixed key width, same as here.
     */
-  def mortonKeyN(dims: Seq[Column], bits: Int): Column = {
+  def mortonKey(dims: Seq[Column], bits: Int): Column = {
     val k = dims.length
-    require(k >= 1, "mortonKeyN needs at least one dimension")
+    require(k >= 1, "mortonKey needs at least one dimension")
     require(k * bits <= 31,
       s"k*bits = ${k * bits} exceeds the 31-bit exact-Int key domain " +
         s"(lower bits or cluster fewer dimensions)")
@@ -91,42 +85,33 @@ object ZorderLayout {
     d
   }
 
-  /** Write `df` z-clustered on the integer dimension columns `d1Col`,
-    * `d2Col` (each in `[0, 2^bits)`) into `numFiles` static z-range
-    * directory partitions at `path`, z-sorted within each partition.
-    * `numFiles` must divide `4^bits`.
+  /** Write `df` z-clustered on the integer dimension columns `dimCols`
+    * (each in `[0, 2^bits)`) into `numFiles` static z-range directory
+    * partitions at `path`, z-sorted within each partition. The z-key
+    * domain is `2^(k*bits)` for k dimensions and `numFiles` must divide
+    * it. All downstream machinery (zfile ranges, envelope catalogs,
+    * pruning) keys on the bucket directory + per-dim min/max, whatever
+    * k is. The Hilbert curve stays 2-D — its rotate/reflect transform
+    * does not factor per-dimension the way Morton's interleave does,
+    * and a wrong silent fallback would change layouts under the caller
+    * — so k≠2 hilbert rejects loudly.
     *
     * SKEW: `maxRecordsPerFile > 0` is the hot-bucket valve — a z-range
     * that attracts disproportionate mass (static bucketing's priced-in
     * cost, see the object scaladoc) splits into ceil(n/max) parquet
     * files INSIDE its `zfile=K/` directory. The split is applied to
     * the already-sorted partition stream, so every piece is still
-    * internally z-sorted with tight row-group footers on both
-    * dimensions, and envelope/Bloom pruning are unaffected (both key
+    * internally z-sorted with tight row-group footers on every
+    * dimension, and envelope/Bloom pruning are unaffected (both key
     * on the zfile directory, not the file count). At 100 TB this is
     * what keeps one hot bucket from becoming a single unsplittable
     * multi-TB file with no scan parallelism.
     */
-  def write(df: DataFrame, d1Col: String, d2Col: String, bits: Int,
-            numFiles: Int, path: String, maxRecordsPerFile: Long = 0L,
-            curve: String = "morton"): Unit =
-    writeN(df, Seq(d1Col, d2Col), bits, numFiles, path, maxRecordsPerFile, curve)
-
-  /** The k-dimensional generalization of [[write]]: cluster on any
-    * number of integer dimensions (each in `[0, 2^bits)`); the z-key
-    * domain becomes `2^(k*bits)` and `numFiles` must divide it. All
-    * downstream machinery (zfile ranges, envelope catalogs, pruning)
-    * keys on the bucket directory + per-dim min/max and generalizes
-    * with no further change. The Hilbert curve stays 2-D — its
-    * rotate/reflect transform does not factor per-dimension the way
-    * Morton's interleave does, and a wrong silent fallback would
-    * change layouts under the caller — so k≠2 hilbert rejects loudly.
-    */
-  def writeN(df: DataFrame, dimCols: Seq[String], bits: Int,
+  def write(df: DataFrame, dimCols: Seq[String], bits: Int,
             numFiles: Int, path: String, maxRecordsPerFile: Long = 0L,
             curve: String = "morton"): Unit = {
     val k = dimCols.length
-    require(k >= 1, "writeN needs at least one clustered dimension")
+    require(k >= 1, "write needs at least one clustered dimension")
     require(k * bits <= 31,
       s"k*bits = ${k * bits} exceeds the 31-bit exact-Int key domain")
     val domain = 1 << (k * bits)
@@ -141,7 +126,7 @@ object ZorderLayout {
     // bucket directory and per-bucket min/max, so the curve is a pure
     // layout decision local to each written version.
     val key = curve match {
-      case "morton" => mortonKeyN(dimCols.map(col), bits)
+      case "morton" => mortonKey(dimCols.map(col), bits)
       case "hilbert" =>
         require(k == 2,
           s"the hilbert curve is 2-D only (got $k clustered dimensions); " +

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
@@ -17,6 +17,31 @@ import graft.functions.PipelineFunctions._
 object PipelineQueries {
 
   private val propsSchema = StructType(Seq(StructField("k", IntegerType)))
+
+  /** `keep` plus `p`, the events' `props` JSON parsed once behind a
+    * [[stageBarrier]]: every field or validity reference downstream is a
+    * cheap ExtractValue of that one parse. */
+  private def parsedProps(ev: DataFrame, keep: Column*): DataFrame =
+    stageBarrier(ev, keep, "p" -> parseJsonLenient(col("props"), propsSchema))
+
+  /** The schema of the synthesized nested-JSON payload: `k`, `sub.k`,
+    * `sub.deep.k`. */
+  private val nestedSchema = StructType(Seq(
+    StructField("k", LongType),
+    StructField("sub", StructType(Seq(
+      StructField("k", LongType),
+      StructField("deep", StructType(Seq(StructField("k", LongType)))))))))
+
+  /** `event_id` plus `p`, one nested-JSON document per event (as an MQTT
+    * device would send it) parsed once behind a [[stageBarrier]]. */
+  private def nestedPayloads(s: SparkSession, dir: String): DataFrame = {
+    val payload = concat(
+      lit("""{"k": """), (col("user_id") % 100).cast("string"),
+      lit(""", "sub": {"k": """), (col("event_id") % 10).cast("string"),
+      lit(""", "deep": {"k": 7}}}"""))
+    stageBarrier(Tables.events(s, dir).withColumn("payload", payload), Seq(col("event_id")),
+      "p" -> parseJsonLenient(col("payload"), nestedSchema))
+  }
 
   /** F1+T2+T3: synthesize a 4-level topic, truncate to 2 levels, expand the
     * stream-id template, aggregate routed traffic per stream.
@@ -40,9 +65,7 @@ object PipelineQueries {
     */
   def pipeParseStats(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    // single-parse barrier: `p` is an attribute downstream, every field /
-    // validity reference is a cheap ExtractValue (see withParsedJson doc)
-    withParsedJson(ev, col("props"), propsSchema, "p", col("ts"), col("event_type"))
+    parsedProps(ev, col("ts"), col("event_type"))
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .groupBy("day", "event_type")
       .agg(
@@ -59,7 +82,7 @@ object PipelineQueries {
     */
   def pipeTransform(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    withParsedJson(ev, col("props"), propsSchema, "p", col("event_id"), col("value"))
+    parsedProps(ev, col("event_id"), col("value"))
       .filter(parseOk(col("p")))  // F1 drop-on-malformed — same parse, no variant pass
       .select(
         col("event_id"),
@@ -76,7 +99,7 @@ object PipelineQueries {
     */
   def pipeJsonata(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    val staged = withParsedJson(ev, col("props"), propsSchema, "p", col("event_id"))
+    val staged = parsedProps(ev, col("event_id"))
     // compile against the already-parsed attribute: the transform tree is
     // cheap field math over `p`, so per-output-field inlining costs nothing
     val transformed = graft.jsonata.JsonataCompiler.compile(
@@ -97,18 +120,7 @@ object PipelineQueries {
     * from the schema at compile time, zero runtime interpretation.
     */
   def pipeJsonataT2(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val nestedSchema = StructType(Seq(
-      StructField("k", LongType),
-      StructField("sub", StructType(Seq(
-        StructField("k", LongType),
-        StructField("deep", StructType(Seq(StructField("k", LongType)))))))))
-    val payload = concat(
-      lit("""{"k": """), (col("user_id") % 100).cast("string"),
-      lit(""", "sub": {"k": """), (col("event_id") % 10).cast("string"),
-      lit(""", "deep": {"k": 7}}}"""))
-    val staged = withParsedJson(ev.withColumn("payload", payload),
-      col("payload"), nestedSchema, "p", col("event_id"))
+    val staged = nestedPayloads(s, dir)
     val out = graft.jsonata.JsonataCompiler.compile(
       """($t := $sum(**.k); {"total": $t, "twice": $t * 2,
         |  "deepk": $sum(sub.**.k), "subdeep": $sum(sub.deep.*)})""".stripMargin,
@@ -127,18 +139,7 @@ object PipelineQueries {
     * rows so the result stays oracle-comparable as plain columns.
     */
   def pipeJsonataT3(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val nestedSchema = StructType(Seq(
-      StructField("k", LongType),
-      StructField("sub", StructType(Seq(
-        StructField("k", LongType),
-        StructField("deep", StructType(Seq(StructField("k", LongType)))))))))
-    val payload = concat(
-      lit("""{"k": """), (col("user_id") % 100).cast("string"),
-      lit(""", "sub": {"k": """), (col("event_id") % 10).cast("string"),
-      lit(""", "deep": {"k": 7}}}"""))
-    val staged = withParsedJson(ev.withColumn("payload", payload),
-      col("payload"), nestedSchema, "p", col("event_id"))
+    val staged = nestedPayloads(s, dir)
     val out = graft.jsonata.JsonataCompiler.compile(
       """{"k" & $string(k): $sum(**), "fixed": k}""", col("p"), nestedSchema)
     staged.select(col("event_id"), explode(out).as(Seq("mkey", "mval")))
@@ -156,7 +157,7 @@ object PipelineQueries {
     */
   def pipeJsonataT4(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    val staged = withParsedJson(ev, col("props"), propsSchema, "p", col("event_id"))
+    val staged = parsedProps(ev, col("event_id"))
     val out = graft.jsonata.JsonataCompiler.compile(
       """($n := k % 100;
         | {"ord": $formatInteger(k, '1;o'),

@@ -340,14 +340,12 @@ object RelationalQueries {
   def qZorder(s: SparkSession, dir: String): DataFrame = {
     val ZBits = 4
     val ZFiles = 16
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int") // 0..11, fits 4 bits
     val z = (0 until ZBits).map { i =>
       (shiftright(col("d1"), i) % 2) * lit(1 << (2 * i + 1)) +
         (shiftright(col("d2"), i) % 2) * lit(1 << (2 * i))
     }.reduce(_ + _)
     val files = Tables.orders(s, dir)
-      .select(d1.as("d1"), d2.as("d2"))
+      .select(priceBucket.as("d1"), orderMonth.as("d2"))
       .withColumn("z", z)
       .withColumn("file_id", floor(col("z") / ((1 << (2 * ZBits)) / ZFiles)).cast("long"))
       .groupBy("file_id")
@@ -396,17 +394,11 @@ object RelationalQueries {
     val ZBits = 4
     val ZFiles = 16
     val (lo1, hi1, lo2, hi2) = (3, 5, 2, 4) // price buckets × Mar–May
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val path = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_zorder_" + new java.io.File(dir).getName).getAbsolutePath
     graft.functions.ZorderLayout.write(
-      Tables.orders(s, dir).select(
-        col("o_orderkey"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"),
-        d1.as("d1"), d2.as("d2")),
-      "d1", "d2", ZBits, ZFiles, path)
+      clusteredOrders(s, dir), Seq("d1", "d2"), ZBits, ZFiles, path)
     val clustered = s.read.parquet(path)
     // The catalog lookup: per-file envelopes. Recomputed here (the layout
     // is fresh); at scale these are footer/metastore stats. ≤ZFiles rows.
@@ -417,16 +409,10 @@ object RelationalQueries {
     val keep = env.filter { r =>
       r.getAs[Int]("mx1") >= lo1 && r.getAs[Int]("mn1") <= hi1 &&
         r.getAs[Int]("mx2") >= lo2 && r.getAs[Int]("mn2") <= hi2
-    }.map(_.getAs[Int]("zfile"))
-    clustered
-      .where(col("zfile").isin(keep.toSeq: _*))
-      .where(col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2))
-      .groupBy(col("zfile").cast("long").as("file_id"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
-      .withColumn("files_total", lit(env.length.toLong))
-      .withColumn("files_read", lit(keep.length.toLong))
-      .orderBy("file_id")
+    }.map(_.getAs[Int]("zfile")).toSeq
+    prunedReport(clustered, col("zfile").isin(keep: _*),
+      col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2),
+      col("zfile").cast("long").as("file_id"), keep, env.length)
   }
 
   /** A clustered-table root under java.io.tmpdir named `prefix` + the
@@ -438,6 +424,59 @@ object RelationalQueries {
       sys.props("java.io.tmpdir"), prefix + new java.io.File(dir).getName).getAbsolutePath
     graft.functions.ClusteredTable.rmTree(new java.io.File(root))
     root
+  }
+
+  /** Price bucket 0..15 of an order: the clustered fixtures' `d1`. */
+  private def priceBucket: Column =
+    least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
+
+  /** Order month 0..11 (fits 4 bits): the clustered fixtures' `d2`. */
+  private def orderMonth: Column = (month(col("o_orderdate")) - 1).cast("int")
+
+  /** The clustered-orders fixture: the key, the exact DECIMAL price and
+    * the layout dimensions `d1` (price bucket) and `d2` (month unless
+    * given), then `extra`. */
+  private def clusteredOrders(s: SparkSession, dir: String, d2: Column = orderMonth,
+      extra: Seq[Column] = Nil): DataFrame =
+    Tables.orders(s, dir).select(Seq(
+      col("o_orderkey"),
+      col("o_totalprice").cast("decimal(18,2)").as("price"),
+      priceBucket.as("d1"), d2.as("d2")) ++ extra: _*)
+
+  /** Exact DECIMAL revenue on the string plane (see q_decimal_sum). */
+  private def exactRevenue: Column =
+    sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue")
+
+  /** The LSM layer a clustered-table row is read from: a folded base
+    * bucket, or the unfolded delta tail (zfile -1). */
+  private def lsmLayer: Column =
+    when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer")
+
+  /** The buckets whose per-dimension envelope intersects `box`. */
+  private def boxKeep(env: Seq[(Int, Seq[(Long, Long)])], box: Seq[(Int, Int)]): Seq[Int] =
+    env.collect {
+      case (zf, e) if e.zip(box).forall {
+          case ((mn, mx), (lo, hi)) => mx >= lo && mn <= hi } => zf
+    }
+
+  /** The files an LSM snapshot read scans: the delta tail (zfile -1)
+    * and the base buckets the catalog kept. */
+  private def lsmFiles(keep: Seq[Int]): Column =
+    col("zfile") === -1 || col("zfile").isin(keep: _*)
+
+  /** The pruned-read report of a clustered box read: the rows of `t` in
+    * the scanned `files` that satisfy `box`, grouped and sorted by `key`,
+    * with the match count, the exact revenue and the catalog's
+    * files_total / files_read (the `keep` buckets). */
+  private def prunedReport(t: DataFrame, files: Column, box: Column, key: Column,
+      keep: Seq[Int], filesTotal: Int): DataFrame = {
+    val report = t.where(files)
+      .where(box)
+      .groupBy(key)
+      .agg(count(lit(1)).as("n_match"), exactRevenue)
+      .withColumn("files_total", lit(filesTotal.toLong))
+      .withColumn("files_read", lit(keep.length.toLong))
+    report.orderBy(report.columns.head)
   }
 
   /** CLUSTERED INGEST + OPTIMIZE — [[qZorderWrite]]'s day-two closure
@@ -464,13 +503,8 @@ object RelationalQueries {
     */
   def qClusterIngest(s: SparkSession, dir: String): DataFrame = {
     val (lo1, hi1, lo2, hi2) = (3, 5, 2, 4)
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_clustered_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
     val ver = graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
@@ -481,18 +515,9 @@ object RelationalQueries {
     // recompute (a groupBy over the base's two clustered columns) was
     // the per-scan O(table) bill the catalog exists to retire
     val env = graft.functions.ClusteredTable.envelopes(s, root, ver, Seq("d1", "d2")).get
-    val keep = env.collect {
-      case (zf, Seq((mn1, mx1), (mn2, mx2)))
-        if mx1 >= lo1 && mn1 <= hi1 && mx2 >= lo2 && mn2 <= hi2 => zf
-    }
-    t.where(col("zfile") === -1 || col("zfile").isin(keep.toSeq: _*))
-      .where(col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2))
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
-      .withColumn("files_total", lit(env.length.toLong))
-      .withColumn("files_read", lit(keep.length.toLong))
-      .orderBy("layer")
+    val keep = boxKeep(env, Seq((lo1, hi1), (lo2, hi2)))
+    prunedReport(t, lsmFiles(keep), col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2),
+      lsmLayer, keep, env.length)
   }
 
   /** MERGE-ON-READ EQUALITY DELETES — the clustered table's DELETE
@@ -517,13 +542,8 @@ object RelationalQueries {
     * so the anti-join bill never accumulates.
     */
   def qMergeOnRead(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_mor_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "00")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "01")
     graft.functions.ClusteredTable.delete(
@@ -533,10 +553,9 @@ object RelationalQueries {
     graft.functions.ClusteredTable.delete(
       src.filter(col("o_orderkey") % 10 === 0).select("o_orderkey"), root, "04")
     graft.functions.ClusteredTable.read(s, root)
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
+      .groupBy(lsmLayer)
       .agg(count(lit(1)).as("n_vis"),
-        sum(when(col("d1") === 7, 1L).otherwise(0L)).as("n_resurrected"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+        sum(when(col("d1") === 7, 1L).otherwise(0L)).as("n_resurrected"), exactRevenue)
       .orderBy("layer")
   }
 
@@ -560,13 +579,8 @@ object RelationalQueries {
     * window's churn, not the table; the DV key set broadcasts.
     */
   def qChangefeed(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_cf_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 2 === 0), root, "00")
     graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0
     graft.functions.ClusteredTable.append(
@@ -579,8 +593,7 @@ object RelationalQueries {
     graft.functions.ClusteredTable.changes(s, root, 0L, 1L)
       .groupBy(col("_change").as("chg"))
       .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("o_orderkey") % 7 === 0, 1L).otherwise(0L)).as("n_k7"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+        sum(when(col("o_orderkey") % 7 === 0, 1L).otherwise(0L)).as("n_k7"), exactRevenue)
       .orderBy("chg")
   }
 
@@ -653,13 +666,8 @@ object RelationalQueries {
     * workload, not operator state.
     */
   def qBloomSkip(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_bloom_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
     graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
@@ -673,9 +681,8 @@ object RelationalQueries {
     val cand = graft.functions.ClusteredTable
       .indexCandidates(s, root, "o_orderkey", keys).get
     graft.functions.ClusteredTable.lookup(s, root, "o_orderkey", keys)
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+      .groupBy(lsmLayer)
+      .agg(count(lit(1)).as("n_match"), exactRevenue)
       .withColumn("pruned", lit(cand.size < occupied))
       .orderBy("layer")
   }
@@ -702,13 +709,8 @@ object RelationalQueries {
     * ingest lifecycle.
     */
   def qClusterAgg(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_cagg_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
     graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
@@ -763,7 +765,7 @@ object RelationalQueries {
     val cand = graft.functions.ClusteredTable
       .indexCandidates(s, root, "url", keys).get
     graft.functions.ClusteredTable.lookup(s, root, "url", keys)
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
+      .groupBy(lsmLayer)
       .agg(count(lit(1)).as("n_match"),
         sum(col("n_chars")).cast("long").as("sum_chars"))
       .withColumn("pruned", lit(cand.size < occupied))
@@ -784,13 +786,8 @@ object RelationalQueries {
     * data).
     */
   def qHistory(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_hist_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "00")
     CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0: manifest {00}
@@ -803,8 +800,7 @@ object RelationalQueries {
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     h.map { case (v, nArt) =>
       CT.read(s, root, Some(v)).agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+        count(lit(1)).as("n_rows"), exactRevenue)
         .select(lit(v).as("version"), lit(nArt).as("n_artifacts"),
           col("n_rows"), col("revenue"))
     }.reduce(_ unionByName _).orderBy("version")
@@ -829,13 +825,8 @@ object RelationalQueries {
     */
   def qClusterHilbert(s: SparkSession, dir: String): DataFrame = {
     val (lo1, hi1, lo2, hi2) = (3, 5, 2, 4)
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_chil_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
@@ -843,18 +834,9 @@ object RelationalQueries {
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val t = CT.read(s, root)
     val env = CT.envelopes(s, root, ver, Seq("d1", "d2")).get
-    val keep = env.collect {
-      case (zf, Seq((mn1, mx1), (mn2, mx2)))
-        if mx1 >= lo1 && mn1 <= hi1 && mx2 >= lo2 && mn2 <= hi2 => zf
-    }
-    t.where(col("zfile") === -1 || col("zfile").isin(keep.toSeq: _*))
-      .where(col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2))
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
-      .withColumn("files_total", lit(env.length.toLong))
-      .withColumn("files_read", lit(keep.length.toLong))
-      .orderBy("layer")
+    val keep = boxKeep(env, Seq((lo1, hi1), (lo2, hi2)))
+    prunedReport(t, lsmFiles(keep), col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2),
+      lsmLayer, keep, env.length)
   }
 
   /** N-DIMENSIONAL CLUSTERING — the k=3 Morton fold oracle-gated end to
@@ -880,14 +862,9 @@ object RelationalQueries {
     */
   def qCluster3d(s: SparkSession, dir: String): DataFrame = {
     val (lo1, hi1, lo2, hi2, lo3, hi3) = (3, 5, 2, 4, 4, 11)
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val d3 = (col("o_custkey") % 16).cast("int")
     val root = freshRoot("graft_c3d_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"), d3.as("d3"))
+    val src = clusteredOrders(s, dir, extra = Seq(d3.as("d3")))
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
@@ -895,21 +872,9 @@ object RelationalQueries {
     CT.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     val t = CT.read(s, root)
     val env = CT.envelopes(s, root, ver, Seq("d1", "d2", "d3")).get
-    val box = Seq((lo1.toLong, hi1.toLong), (lo2.toLong, hi2.toLong),
-      (lo3.toLong, hi3.toLong))
-    val keep = env.collect {
-      case (zf, e) if e.zip(box).forall {
-          case ((mn, mx), (lo, hi)) => mx >= lo && mn <= hi } => zf
-    }
-    t.where(col("zfile") === -1 || col("zfile").isin(keep.toSeq: _*))
-      .where(col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2) &&
-        col("d3").between(lo3, hi3))
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
-      .withColumn("files_total", lit(env.length.toLong))
-      .withColumn("files_read", lit(keep.length.toLong))
-      .orderBy("layer")
+    val keep = boxKeep(env, Seq((lo1, hi1), (lo2, hi2), (lo3, hi3)))
+    prunedReport(t, lsmFiles(keep), col("d1").between(lo1, hi1) && col("d2").between(lo2, hi2) &&
+      col("d3").between(lo3, hi3), lsmLayer, keep, env.length)
   }
 
   /** STRING ZONE MAPS — the date-string plane of [[qZonemap]],
@@ -931,14 +896,10 @@ object RelationalQueries {
     */
   def qZonemapStr(s: SparkSession, dir: String): DataFrame = {
     val (loYm, hiYm) = ("1994-01", "1995-12")
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (year(col("o_orderdate")) - 1992).cast("int")
     val ym = date_format(col("o_orderdate"), "yyyy-MM")
     val root = freshRoot("graft_zms_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"), ym.as("ym"))
+    val src = clusteredOrders(s, dir, d2, Seq(ym.as("ym")))
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
@@ -952,14 +913,7 @@ object RelationalQueries {
         if mn.isEmpty || mx.isEmpty ||
           (mx.get >= loYm && mn.get <= hiYm) => zf // ASCII: binary == lexicographic
     }
-    t.where(col("zfile") === -1 || col("zfile").isin(keep.toSeq: _*))
-      .where(col("ym").between(loYm, hiYm))
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
-      .withColumn("files_total", lit(zm.length.toLong))
-      .withColumn("files_read", lit(keep.length.toLong))
-      .orderBy("layer")
+    prunedReport(t, lsmFiles(keep), col("ym").between(loYm, hiYm), lsmLayer, keep, zm.length)
   }
 
   /** DAY-2 AUTO-MAINTENANCE, end to end in one oracle-gated unit: a
@@ -984,13 +938,8 @@ object RelationalQueries {
     * compose.
     */
   def qAutoMaintain(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_am_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     val sink = CT.sink(root, compactAtParts = 4, sortDims = Seq("d1", "d2"))
     (0 until 12).foreach(b => sink(src.filter(col("o_orderkey") % 12 === b), b.toLong))
@@ -1003,8 +952,7 @@ object RelationalQueries {
     CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=1 applies the delete
     CT.vacuum(root) // keepVersions = 1: v=0 reclaimed
     CT.read(s, root).agg(
-      count(lit(1)).as("n_rows"),
-      sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+      count(lit(1)).as("n_rows"), exactRevenue)
       .withColumn("tail_parts", lit(tailParts))
       .withColumn("n_files", lit(nFiles))
   }
@@ -1021,13 +969,8 @@ object RelationalQueries {
     * for CDF reads — refusal, never a wrong answer.
     */
   def qChangefeedSource(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_cfs_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 2 === 0), root, "00")
     CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0
@@ -1039,8 +982,7 @@ object RelationalQueries {
       .option("changesfrom", "0").option("changesto", "1").load()
       .groupBy(col("_change").as("chg"))
       .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("o_orderkey") % 7 === 0, 1L).otherwise(0L)).as("n_k7"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+        sum(when(col("o_orderkey") % 7 === 0, 1L).otherwise(0L)).as("n_k7"), exactRevenue)
       .orderBy("chg")
   }
 
@@ -1067,14 +1009,10 @@ object RelationalQueries {
     */
   def qZonemap(s: SparkSession, dir: String): DataFrame = {
     val (loDay, hiDay) = (730, 1460) // ~1994-1995 inside the 1992-1998 span
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
     val d2 = (year(col("o_orderdate")) - 1992).cast("int")
     val day = datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("int")
     val root = freshRoot("graft_zm_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"), day.as("day"))
+    val src = clusteredOrders(s, dir, d2, Seq(day.as("day")))
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     CT.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
@@ -1088,14 +1026,7 @@ object RelationalQueries {
         if mn.isEmpty || mx.isEmpty ||
           (mx.get >= loDay && mn.get <= hiDay) => zf
     }
-    t.where(col("zfile") === -1 || col("zfile").isin(keep.toSeq: _*))
-      .where(col("day").between(loDay, hiDay))
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
-      .withColumn("files_total", lit(zm.length.toLong))
-      .withColumn("files_read", lit(keep.length.toLong))
-      .orderBy("layer")
+    prunedReport(t, lsmFiles(keep), col("day").between(loDay, hiDay), lsmLayer, keep, zm.length)
   }
 
   /** TIME TRAVEL THROUGH THE SOURCE — the `asofversion` option
@@ -1117,13 +1048,8 @@ object RelationalQueries {
     * the pinned version's own catalog.
     */
   def qSourceTimetravel(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_tt_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 =!= 2), root, "00")
     CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0: the first two thirds
@@ -1136,8 +1062,7 @@ object RelationalQueries {
         case (r, (k, v)) => r.option(k, v)
       }.load()
     def summ(df: DataFrame, ver: String): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+      df.agg(count(lit(1)).as("n_rows"), exactRevenue)
         .withColumn("ver", lit(ver)).select("ver", "n_rows", "revenue")
     summ(via("asofversion" -> "0"), "v0")
       .unionByName(summ(via("asofversion" -> "1"), "v1"))
@@ -1167,13 +1092,8 @@ object RelationalQueries {
     * atomic claim rename.
     */
   def qCompactTail(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_compact_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 4 === 0), root, "00")
     CT.append(src.filter(col("o_orderkey") % 4 === 1), root, "01")
@@ -1184,8 +1104,7 @@ object RelationalQueries {
     val parts = CT.tailParts(root)
     CT.read(s, root).agg(
       count(lit(1)).as("n_rows"),
-      sum(when(col("o_orderkey") % 10 === 0, 1L).otherwise(0L)).as("n_k10"),
-      sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+      sum(when(col("o_orderkey") % 10 === 0, 1L).otherwise(0L)).as("n_k10"), exactRevenue)
       .withColumn("n_compactions", lit(nCompactions.toLong))
       .withColumn("n_parts", lit(parts.size.toLong))
   }
@@ -1212,13 +1131,8 @@ object RelationalQueries {
   def qOptimizeAuto(s: SparkSession, dir: String): DataFrame = {
     val Target = 1000L
     val ZBits = 4
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_auto_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src, root, "00")
     graft.functions.ClusteredTable.optimizeAuto(s, root, Seq("d1", "d2"), ZBits, Target)
     val t = graft.functions.ClusteredTable.read(s, root)
@@ -1229,8 +1143,7 @@ object RelationalQueries {
       count(lit(1)).as("n_rows"),
       countDistinct(col("zfile")).cast("long").as("n_buckets"),
       sum(when(col("zfile") =!= floor(col("zkey") / zSpan).cast("int"), 1L)
-        .otherwise(0L)).as("n_bad"),
-      sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+        .otherwise(0L)).as("n_bad"), exactRevenue)
       .withColumn("n_files", lit(files.toLong))
   }
 
@@ -1252,13 +1165,8 @@ object RelationalQueries {
     * both the time-travel horizon and the storage bill of history.
     */
   def qRetention(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_ret_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     CT.append(src.filter(col("o_orderkey") % 3 === 0), root, "00")
     CT.optimize(s, root, Seq("d1", "d2"), 4, 16) // v=0
@@ -1269,8 +1177,7 @@ object RelationalQueries {
     CT.vacuum(root, keepVersions = 2)
     val horizon = scala.util.Try(CT.read(s, root, Some(0L))).isFailure
     def agg(t: DataFrame, ver: String): DataFrame =
-      t.agg(count(lit(1)).as("n_rows"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+      t.agg(count(lit(1)).as("n_rows"), exactRevenue)
         .select(lit(ver).as("ver"), col("n_rows"), col("revenue"))
     agg(CT.read(s, root, Some(1L)), "v1")
       .unionByName(agg(CT.read(s, root, Some(2L)), "v2"))
@@ -1298,23 +1205,17 @@ object RelationalQueries {
     * inner parquet scan.
     */
   def qSourcePruned(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_srcp_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "b0")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "b1")
     graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 2), root, "b2")
     s.read.format("graft-clustered")
-      .option("root", root).option("d1", "d1").option("d2", "d2").load()
+      .option("root", root).option("dims", "d1,d2").load()
       .where(col("d1").between(3, 5) && col("d2").between(2, 4))
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
-      .agg(count(lit(1)).as("n_match"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+      .groupBy(lsmLayer)
+      .agg(count(lit(1)).as("n_match"), exactRevenue)
       .orderBy("layer")
   }
 
@@ -1340,13 +1241,8 @@ object RelationalQueries {
     * bounded by the fold cadence as ever.
     */
   def qMergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val root = freshRoot("graft_upsert_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 0), root, "00")
     graft.functions.ClusteredTable.append(src.filter(col("o_orderkey") % 3 === 1), root, "01")
     graft.functions.ClusteredTable.optimize(s, root, Seq("d1", "d2"), 4, 16)
@@ -1357,10 +1253,9 @@ object RelationalQueries {
       .unionByName(src.filter(col("o_orderkey") % 3 === 2))
     graft.functions.ClusteredTable.upsert(source, root, "02", Seq("o_orderkey"))
     graft.functions.ClusteredTable.read(s, root)
-      .groupBy(when(col("zfile") >= 0, lit("base")).otherwise(lit("delta")).as("layer"))
+      .groupBy(lsmLayer)
       .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("o_orderkey") % 6 === 0, 1L).otherwise(0L)).as("n_updated"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+        sum(when(col("o_orderkey") % 6 === 0, 1L).otherwise(0L)).as("n_updated"), exactRevenue)
       .orderBy("layer")
   }
 
@@ -1386,14 +1281,9 @@ object RelationalQueries {
     * sync actually runs, and every read-side join in it broadcasts.
     */
   def qCdcApply(s: SparkSession, dir: String): DataFrame = {
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val pRoot = freshRoot("graft_cdcp_", dir)
     val rRoot = freshRoot("graft_cdcr_", dir)
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("price"),
-      d1.as("d1"), d2.as("d2"))
+    val src = clusteredOrders(s, dir)
     val CT = graft.functions.ClusteredTable
     // primary: v=0 holds the evens; the window churns and folds to v=1
     CT.append(src.filter(col("o_orderkey") % 2 === 0), pRoot, "00")
@@ -1410,8 +1300,7 @@ object RelationalQueries {
     def sideAgg(t: DataFrame, side: String): DataFrame =
       t.groupBy(lit(side).as("side"), col("d2"))
         .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_orderkey").cast("long")).as("key_sum"),
-          sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+          sum(col("o_orderkey").cast("long")).as("key_sum"), exactRevenue)
     sideAgg(CT.read(s, pRoot), "primary")
       .unionByName(sideAgg(CT.read(s, rRoot), "replica"))
       .orderBy("side", "d2")
@@ -1444,11 +1333,9 @@ object RelationalQueries {
   def qHilbert(s: SparkSession, dir: String): DataFrame = {
     val ZBits = 4
     val ZFiles = 32
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val src = Tables.orders(s, dir)
-      .select(d1.as("d1"), d2.as("d2"))
-      .withColumn("z", graft.functions.ZorderLayout.mortonKey(col("d1"), col("d2"), ZBits))
+      .select(priceBucket.as("d1"), orderMonth.as("d2"))
+      .withColumn("z", graft.functions.ZorderLayout.mortonKey(Seq(col("d1"), col("d2")), ZBits))
       .withColumn("h", graft.functions.ZorderLayout.hilbertKey(col("d1"), col("d2"), ZBits))
     val span = (1 << (2 * ZBits)) / ZFiles
     // ONE orders scan for all three layouts (r18): the former per-layout
@@ -1510,17 +1397,11 @@ object RelationalQueries {
   def qDpp(s: SparkSession, dir: String): DataFrame = {
     val ZBits = 4
     val ZFiles = 16
-    val d1 = least(floor(col("o_totalprice") / 37500.0), lit(15)).cast("int")
-    val d2 = (month(col("o_orderdate")) - 1).cast("int")
     val path = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_dpp_" + new java.io.File(dir).getName).getAbsolutePath
     graft.functions.ZorderLayout.write(
-      Tables.orders(s, dir).select(
-        col("o_orderkey"),
-        col("o_totalprice").cast("decimal(18,2)").as("price"),
-        d1.as("d1"), d2.as("d2")),
-      "d1", "d2", ZBits, ZFiles, path)
+      clusteredOrders(s, dir), Seq("d1", "d2"), ZBits, ZFiles, path)
     val fact = s.read.parquet(path)
     // the dim is itself a query result — unknowable at plan time, which
     // is exactly what forces the DYNAMIC pruning path
@@ -1528,8 +1409,7 @@ object RelationalQueries {
       .select(col("zfile").as("hot_zfile")).distinct()
     fact.join(broadcast(hotFiles), col("zfile") === col("hot_zfile"))
       .groupBy(col("zfile").cast("long").as("file_id"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("price")).cast("decimal(28,2)").cast("string").as("revenue"))
+      .agg(count(lit(1)).as("n_rows"), exactRevenue)
       .orderBy("file_id")
   }
 

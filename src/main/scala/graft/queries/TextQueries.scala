@@ -25,6 +25,31 @@ object TextQueries {
   private val ShingleK = 3
   private val SourceCapK = 10
 
+  /** The four parts [[qualityScoreFromParts]] reads, from text `t` and
+    * its staged `toks`: one stageBarrier's staged columns. */
+  private def qualityParts(t: Column): Seq[(String, Column)] = Seq(
+    "n_chars" -> length(t),
+    "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")),
+    "n_toks" -> size(col("toks")),
+    "stop_hits" -> stopwordHits(col("toks"), StopwordsEn))
+
+  /** The Gopher word statistics of text `t` and its staged `toks`, as
+    * BIGINT staged columns. */
+  private def wordStats(t: Column): Seq[(String, Column)] = Seq(
+    "n_words" -> size(col("toks")).cast("long"),
+    "word_chars" -> aggregate(transform(col("toks"), w => length(w).cast("long")),
+      lit(0L), (a, x) => a + x),
+    "n_chars" -> length(t).cast("long"),
+    "sym_chars" -> length(regexp_replace(t, "[A-Za-z0-9 .,]", "")).cast("long"),
+    "stop_hits" -> stopwordHits(col("toks"), StopwordsEn).cast("long"))
+
+  /** [[wordStats]] with alpha_len staged before stop_hits. */
+  private def wordAlphaStats(t: Column): Seq[(String, Column)] = {
+    val stats = wordStats(t)
+    stats.init ++ Seq(
+      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")).cast("long"), stats.last)
+  }
+
   /** Exact dedup on content hash: first doc_id in each md5 cluster wins. */
   def dedupExact(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("fp").orderBy("doc_id")
@@ -966,11 +991,7 @@ object TextQueries {
     val t = col("text")
     val toks = stageBarrier(Tables.documents(s, dir),
       Seq(col("doc_id"), col("source"), t), "toks" -> tokens(t))
-    val parts = stageBarrier(toks, Seq(col("doc_id"), col("source")),
-      "n_chars" -> length(t),
-      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")),
-      "n_toks" -> size(col("toks")),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn))
+    val parts = stageBarrier(toks, Seq(col("doc_id"), col("source")), qualityParts(t): _*)
     val byQuality = Window.partitionBy("source")
       .orderBy(col("quality").desc, col("doc_id"))
     parts.select(col("doc_id"), col("source"),
@@ -1011,11 +1032,7 @@ object TextQueries {
     val t = col("text")
     val toks = stageBarrier(Tables.documents(s, dir),
       Seq(col("doc_id"), col("source"), t), "toks" -> tokens(t))
-    val parts = stageBarrier(toks, Seq(col("doc_id"), col("source")),
-      "n_chars" -> length(t),
-      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")),
-      "n_toks" -> size(col("toks")),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn))
+    val parts = stageBarrier(toks, Seq(col("doc_id"), col("source")), qualityParts(t): _*)
     val scored = parts.select(col("doc_id"), col("source"),
       qualityScoreFromParts(col("n_chars"), col("alpha_len"),
         col("n_toks"), col("stop_hits")).as("quality"))
@@ -1430,11 +1447,7 @@ object TextQueries {
     // per reference)
     val toks = stageBarrier(Tables.documents(s, dir), Seq(col("doc_id"), t),
       "toks" -> tokens(t))
-    val parts = stageBarrier(toks, Seq(col("doc_id")),
-      "n_chars" -> length(t),
-      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")),
-      "n_toks" -> size(col("toks")),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn))
+    val parts = stageBarrier(toks, Seq(col("doc_id")), qualityParts(t): _*)
     parts.select(col("doc_id"),
         round(col("alpha_len").cast("double") /
           greatest(col("n_chars"), lit(1)).cast("double"), 6).as("alpha_ratio"),
@@ -1459,13 +1472,7 @@ object TextQueries {
     val t = col("text")
     val staged = stageBarrier(Tables.documents(s, dir), Seq(col("doc_id"), t),
       "toks" -> tokens(t))
-    val parts = stageBarrier(staged, Seq(col("doc_id")),
-      "n_words" -> size(col("toks")).cast("long"),
-      "word_chars" -> aggregate(transform(col("toks"), w => length(w).cast("long")),
-        lit(0L), (a, x) => a + x),
-      "n_chars" -> length(t).cast("long"),
-      "sym_chars" -> length(regexp_replace(t, "[A-Za-z0-9 .,]", "")).cast("long"),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn).cast("long"))
+    val parts = stageBarrier(staged, Seq(col("doc_id")), wordStats(t): _*)
     parts.select(col("doc_id"), col("n_words"),
         (col("word_chars").cast("double") /
           greatest(col("n_words"), lit(1L)).cast("double")).as("mean_word_len"),
@@ -1633,12 +1640,7 @@ object TextQueries {
     val parts = stageBarrier(hashed,
       Seq(col("doc_id"),
         classifierScoreFromHashes(col("hs"), col("n_feats")).as("score")),
-      "n_words" -> size(col("toks")).cast("long"),
-      "word_chars" -> aggregate(transform(col("toks"), w => length(w).cast("long")),
-        lit(0L), (a, x) => a + x),
-      "n_chars" -> length(t).cast("long"),
-      "sym_chars" -> length(regexp_replace(t, "[A-Za-z0-9 .,]", "")).cast("long"),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn).cast("long"))
+      wordStats(t): _*)
     val perDoc = parts.select(
       round(lit(1.0) / (lit(1.0) + exp(-lit(ClfScale) * col("score"))), 6)
         .as("keep_prob"),
@@ -1709,14 +1711,7 @@ object TextQueries {
       Seq(col("doc_id"), col("source"), col("lang"), t),
       "toks" -> tokens(t))
     val parts = stageBarrier(staged, Seq(col("source"), col("lang")),
-      "n_words" -> size(col("toks")).cast("long"),
-      "word_chars" -> aggregate(
-        transform(col("toks"), w => length(w).cast("long")),
-        lit(0L), (a, x) => a + x),
-      "n_chars" -> length(t).cast("long"),
-      "sym_chars" -> length(regexp_replace(t, "[A-Za-z0-9 .,]", "")).cast("long"),
-      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")).cast("long"),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn).cast("long"))
+      wordAlphaStats(t): _*)
     parts
       .select(col("source"), col("lang"), col("n_words"),
         qualityScoreFromParts(col("n_chars"), col("alpha_len"),
@@ -1869,11 +1864,7 @@ object TextQueries {
     val t = col("text")
     val toks = stageBarrier(Tables.documents(s, dir),
       Seq(col("doc_id"), col("lang"), t), "toks" -> tokens(t))
-    val q = stageBarrier(toks, Seq(col("doc_id"), col("lang")),
-      "n_chars" -> length(t),
-      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")),
-      "n_toks" -> size(col("toks")),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn))
+    val q = stageBarrier(toks, Seq(col("doc_id"), col("lang")), qualityParts(t): _*)
       .select(col("doc_id"), col("lang"),
         qualityScoreFromParts(col("n_chars"), col("alpha_len"),
           col("n_toks"), col("stop_hits")).as("wq"))
@@ -1916,14 +1907,7 @@ object TextQueries {
       Seq(col("doc_id"), t, col("toks"), size(col("feats")).as("n_feats")),
       "hs" -> hashArray(col("feats")))
     val parts = stageBarrier(hashed, Seq(col("doc_id"), col("hs"), col("n_feats")),
-      "n_words" -> size(col("toks")).cast("long"),
-      "word_chars" -> aggregate(
-        transform(col("toks"), w => length(w).cast("long")),
-        lit(0L), (a, x) => a + x),
-      "n_chars" -> length(t).cast("long"),
-      "sym_chars" -> length(regexp_replace(t, "[A-Za-z0-9 .,]", "")).cast("long"),
-      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")).cast("long"),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn).cast("long"))
+      wordAlphaStats(t): _*)
     parts.select(col("doc_id"),
       gopherKeepFromParts(col("n_words"),
         col("word_chars").cast("double") /
@@ -2060,11 +2044,7 @@ object TextQueries {
       "toks" -> tokens(t),
       "ltoks" -> tokens(lower(t)))
     val parts = stageBarrier(staged, Seq(col("doc_id"), col("lang")),
-      Seq("n_chars" -> length(t),
-        "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")),
-        "n_toks" -> size(col("toks")),
-        "stop_hits" -> stopwordHits(col("toks"), StopwordsEn)) ++
-        langHits(col("ltoks")): _*)
+      qualityParts(t) ++ langHits(col("ltoks")): _*)
     val feat = parts.select(col("doc_id"), col("lang"),
       qualityScoreFromParts(col("n_chars"), col("alpha_len"),
         col("n_toks"), col("stop_hits")).as("quality"),
@@ -3019,11 +2999,7 @@ object TextQueries {
     val t = col("text")
     val toks = stageBarrier(Tables.documents(s, dir), Seq(col("doc_id"), t),
       "toks" -> tokens(t))
-    val q = stageBarrier(toks, Seq(col("doc_id")),
-      "n_chars" -> length(t),
-      "alpha_len" -> length(regexp_replace(t, "[^A-Za-z ]", "")),
-      "n_toks" -> size(col("toks")),
-      "stop_hits" -> stopwordHits(col("toks"), StopwordsEn))
+    val q = stageBarrier(toks, Seq(col("doc_id")), qualityParts(t): _*)
       .select(col("doc_id"),
         qualityScoreFromParts(col("n_chars"), col("alpha_len"),
           col("n_toks"), col("stop_hits")).as("quality"))

@@ -20,12 +20,39 @@ object VectorQueries {
   private val K = 10
   private val NumQueries = 5
 
-  private def emb(s: SparkSession, dir: String): DataFrame =
+  private[graft] def emb(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
 
-  /** Test access to the corpus projection (plan-regression specs). */
-  private[graft] def embProjection(s: SparkSession, dir: String): DataFrame = emb(s, dir)
+  /** The query ids: the first NumQueries vectors of corpus `e`. */
+  private def queryIds(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NumQueries).select(col("vec_id").as("query_id"))
+
+  /** Recall@K per query: the share of each query's exact top-K
+    * (`brute`: query_id, neighbor_id) that the approximate search
+    * `approx` (qi, ni) also returned — the overlap is a left-semi join,
+    * and a query with no hit keeps its zero through the `queries` list
+    * (query_id). */
+  private def recallAtK(brute: DataFrame, approx: DataFrame, queries: DataFrame): DataFrame = {
+    val overlap = brute
+      .join(approx, col("query_id") === col("qi") && col("neighbor_id") === col("ni"),
+        "left_semi")
+      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
+    queries
+      .join(overlap, Seq("query_id"), "left_outer")
+      .select(col("query_id"),
+        round(coalesce(col("n_hit"), lit(0L)).cast("double") / K, 6).as("recall"))
+      .orderBy("query_id")
+  }
+
+  /** A bounded result `out` (callers pass ≤ NumQueries rows per curve
+    * point or a few dial rows) collected while the caches it reads are
+    * live, as a local relation: the caller can then release them
+    * deterministically instead of leaking them into the session. */
+  private def detached(s: SparkSession, out: DataFrame): DataFrame = {
+    val rows = out.collect()
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+  }
 
   /** Per-label mean centroid relation (label, cv) — the label coarse
     * quantizer shared by the centroid-dist/silhouette/IVF/filtered
@@ -712,20 +739,9 @@ object VectorQueries {
       val brute = knnBruteFrom(e).select(col("query_id"), col("neighbor_id"))
       val ivf = knnIvfFrom(e)
         .select(col("query_id").as("qi"), col("neighbor_id").as("ni"))
-      val overlap = brute
-        .join(ivf, col("query_id") === col("qi") && col("neighbor_id") === col("ni"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val out = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"))
-        .join(overlap, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") / K, 6).as("recall"))
-        .orderBy("query_id")
       // the result is provably <= NumQueries rows: materialize it eagerly
-      // (while the shared corpus cache is live) so the persist can be
-      // released deterministically instead of leaking into the session
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      // while the shared corpus cache is live
+      detached(s, recallAtK(brute, ivf, queryIds(e)))
     } finally e.unpersist(false)
   }
 
@@ -743,17 +759,7 @@ object VectorQueries {
       val brute = knnBruteFrom(e).select(col("query_id"), col("neighbor_id"))
       val pq = knnIvfPqFrom(e)
         .select(col("query_id").as("qi"), col("neighbor_id").as("ni"))
-      val overlap = brute
-        .join(pq, col("query_id") === col("qi") && col("neighbor_id") === col("ni"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val out = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"))
-        .join(overlap, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") / K, 6).as("recall"))
-        .orderBy("query_id")
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      detached(s, recallAtK(brute, pq, queryIds(e)))
     } finally e.unpersist(false)
   }
 
@@ -961,17 +967,8 @@ object VectorQueries {
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= K)
         .select(col("query_id").as("qi"), col("neighbor_id").as("ni"))
-      val overlap = brute
-        .join(bin, col("query_id") === col("qi") && col("neighbor_id") === col("ni"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val out = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"))
-        .join(overlap, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") / K, 6).as("recall"))
-        .orderBy("query_id")
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      // bounded: one recall row per query, ≤ NumQueries rows
+      detached(s, recallAtK(brute, bin, queryIds(e)))
     } finally e.unpersist(false)
   }
 
@@ -996,17 +993,7 @@ object VectorQueries {
       val brute = knnBruteFrom(e).select(col("query_id"), col("neighbor_id"))
       val trunc = knnBruteFrom(e.select(col("vec_id"), slice(col("v"), 1, TruncDim).as("v")))
         .select(col("query_id").as("qi"), col("neighbor_id").as("ni"))
-      val overlap = brute
-        .join(trunc, col("query_id") === col("qi") && col("neighbor_id") === col("ni"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val out = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"))
-        .join(overlap, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") / K, 6).as("recall"))
-        .orderBy("query_id")
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      detached(s, recallAtK(brute, trunc, queryIds(e)))
     } finally e.unpersist(false)
   }
 
@@ -1259,17 +1246,8 @@ object VectorQueries {
         .withColumn("rnk", row_number().over(wK))
         .filter(col("rnk") <= K)
         .select(col("query_id").as("qi"), col("neighbor_id").as("ni"))
-      val overlap = brute
-        .join(ivf, col("query_id") === col("qi") && col("neighbor_id") === col("ni"),
-          "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val out = queries.select("query_id")
-        .join(overlap, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") / K, 6).as("recall"))
-        .orderBy("query_id")
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      // bounded: one recall row per query, ≤ NumQueries rows
+      detached(s, recallAtK(brute, ivf, queries.select("query_id")))
     } finally e.unpersist(false)
   }
 
@@ -1317,8 +1295,7 @@ object VectorQueries {
     // bounded 3-row dial: evaluate while e is cached so the assignment
     // and pair passes reuse the cached scan, then release (the
     // knnIvfIncrementalRecall pattern)
-    val rows = out.collect()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    detached(s, out)
     } finally e.unpersist(false)
   }
 
@@ -1402,17 +1379,7 @@ object VectorQueries {
       val brute = knnBruteFrom(e).select(col("query_id"), col("neighbor_id"))
       val lsh = knnLshFrom(e)
         .select(col("query_id").as("qi"), col("neighbor_id").as("ni"))
-      val overlap = brute
-        .join(lsh, col("query_id") === col("qi") && col("neighbor_id") === col("ni"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val out = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"))
-        .join(overlap, Seq("query_id"), "left_outer")
-        .select(col("query_id"),
-          round(coalesce(col("n_hit"), lit(0L)).cast("double") / K, 6).as("recall"))
-        .orderBy("query_id")
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      detached(s, recallAtK(brute, lsh, queryIds(e)))
     } finally e.unpersist(false)
   }
 
@@ -1666,9 +1633,8 @@ object VectorQueries {
     try {
       val wA = Window.partitionBy("query_id").orderBy(col("adist").asc, col("neighbor_id"))
       val cand = ivfPqAdcFrom(e).withColumn("rnk", row_number().over(wA))
-      val out = rerankRecallCurve(s, e, cand)
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      // bounded: one (cand_k, recall) row per rerank depth
+      detached(s, rerankRecallCurve(s, e, cand))
     } finally e.unpersist(false)
   }
 

@@ -61,12 +61,11 @@ import graft.functions.ClusteredTable.asLong
   * aggregate the catalog exists to retire (r14's `weak`).
   *
   * Options: `root` (required); `dims` (a comma-separated ordered list)
-  * or the historical `d1`/`d2` pair name the clustered dimensions
-  * (enables envelope pruning on the k-dim hyper-box; must be
-  * integral-typed — envelope bounds are long, a wider or non-numeric
-  * dimension is rejected at relation creation instead of wrapping
-  * silently); `indexcol` names a
-  * Bloom-indexed key, long or string (enables point-lookup pruning through
+  * names the clustered dimensions (enables envelope pruning on the
+  * k-dim hyper-box; must be integral-typed — envelope bounds are long,
+  * a wider or non-numeric dimension is rejected at relation creation
+  * instead of wrapping silently); `indexcol` names a Bloom-indexed key,
+  * long or string (enables point-lookup pruning through
   * [[ClusteredTable.indexCandidates]]); `asofversion` TIME-TRAVELS the
   * scan to one retained fold (exactly what that version folded — the
   * Delta `versionAsOf` shape; envelope pruning reads that version's
@@ -87,9 +86,9 @@ import graft.functions.ClusteredTable.asLong
   * [NOT] NULL on any column) are applied exactly inside the source and
   * reported handled; anything else is declared unhandled and Spark
   * re-applies it above the scan — pruning can therefore only ever
-  * skip, never change, a result. A filter on d1/d2 additionally drives
-  * the envelope decision; an =/IN on `indexcol` drives the Bloom
-  * decision; the two prunes intersect.
+  * skip, never change, a result. A filter on a `dims` column
+  * additionally drives the envelope decision; an =/IN on `indexcol`
+  * drives the Bloom decision; the two prunes intersect.
   */
 class ClusteredSourceProvider extends RelationProvider with TableProvider
     with CreatableRelationProvider with StreamSinkProvider with DataSourceRegister {
@@ -520,30 +519,16 @@ private[clustered] object ClusteredRelation {
     case _ => false
   }
 
-  /** Clustered-dimension list from the option surface: `dims` (a
-    * comma-separated ordered list — the k-dimensional spelling) wins;
-    * otherwise the historical `d1`/`d2` pair in that order. A single
-    * `d1` without `d2` is a valid 1-dim prune (per-dim bounds are
-    * independent); a `d2` alone is honored too — the envelope read
-    * falls back to a snapshot recompute when the catalog's recorded
-    * dim names don't prefix-match, so pruning stays sound either way.
-    */
+  /** Clustered-dimension list from the `dims` option (a comma-separated
+    * ordered list); none without it. */
   def dimsOf(opt: String => Option[String]): Seq[String] =
-    opt("dims") match {
-      case Some(list) => list.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-      case None => Seq(opt("d1"), opt("d2")).flatten
-    }
+    opt("dims").toSeq.flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
 }
 
 class ClusteredRelation(override val sqlContext: SQLContext, root: String,
     dims: Seq[String], indexCol: Option[String],
     asOfVersion: Option[Long] = None)
   extends BaseRelation with PrunedFilteredScan with Logging {
-
-  /** Historical 2-D constructor (the option surface predating `dims`). */
-  def this(sqlContext: SQLContext, root: String, d1Col: Option[String],
-      d2Col: Option[String], indexCol: Option[String]) =
-    this(sqlContext, root, Seq(d1Col, d2Col).flatten, indexCol)
 
   private def spark = sqlContext.sparkSession
 

@@ -131,8 +131,8 @@ object GraftPipeline {
       // single-parse barrier: `p` is an attribute here on out — validity,
       // the transform, and every field reference read the SAME parse
       // (the reference also parses exactly once, js:149-155)
-      val staged = withParsedJson(input, col("payload"), cfg.payloadSchema, "p",
-        col("topic"), col("arrival_ts"))
+      val staged = stageBarrier(input, Seq(col("topic"), col("arrival_ts")),
+        "p" -> parseJsonLenient(col("payload"), cfg.payloadSchema))
       val valid = parseOk(col("p"))
       val value: Column = cfg.transform match {
         case Some(expr) => JsonataCompiler.compile(expr, col("p"), cfg.payloadSchema)

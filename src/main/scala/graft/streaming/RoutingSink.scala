@@ -97,8 +97,8 @@ trait StreamPublisher extends Serializable {
   * partition count is not known before it runs) is first repartitioned
   * on stream_id — one bounded-by-batch shuffle, a second job — so a
   * stream's rows land in one task (SURVEY §7.4#2, small-files control);
-  * without `coalescePerStream` it would write up to tasks × |stream ids|
-  * files. `maxRecordsPerFile` re-splits any hot stream's file so a
+  * without it the write would make up to tasks × |stream ids| files.
+  * `maxRecordsPerFile` re-splits any hot stream's file so a
   * skewed id can't produce an unboundedly large file.
   *
   * The plan goes straight to Spark's file writer, as
@@ -135,13 +135,12 @@ trait StreamPublisher extends Serializable {
   */
 class FsStreamPublisher(
     outDir: String,
-    coalescePerStream: Boolean = true,
     maxRecordsPerFile: Long = 5000000L) extends StreamPublisher {
   override def publish(routed: DataFrame, batchId: Long): Unit = {
     val batch = routed.withColumn("batch_id", lit(batchId.toString))
     val planned = batch.queryExecution
     val written =
-      if (coalescePerStream && !onePartition(planned.executedPlan))
+      if (!onePartition(planned.executedPlan))
         batch.repartition(col("stream_id")).queryExecution
       else planned
     write(written)
@@ -246,9 +245,6 @@ class RoutingSink(
   require(Set("fail", "sample")(cfg.streamIdOverflow),
     s"streamIdOverflow must be 'fail' or 'sample', got '${cfg.streamIdOverflow}'")
   require(cfg.maxStreamIdsPerBatch > 0, "maxStreamIdsPerBatch must be positive")
-
-  def this(registry: StreamRegistry, outDir: String, cfg: GraftConfig) =
-    this(registry, new FsStreamPublisher(outDir), cfg)
 
   // driver-side LRU memo (access-ordered): one ensure per distinct stream
   // id while it stays resident; re-ensure (idempotent) after eviction

@@ -29,7 +29,7 @@ class ClusteredSourceSpec extends SparkTestBase {
   }
 
   private def src(root: String) = spark.read.format("graft-clustered")
-    .option("root", root).option("d1", "d1").option("d2", "d2").load()
+    .option("root", root).option("dims", "d1,d2").load()
 
   test("source read equals ClusteredTable.read: base + tail + merge-on-read delete") {
     val root = build()
@@ -45,7 +45,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     val root = build()
     // the pruning DECISION, pinned directly: a (d1 in [3,5]) x (d2 in [2,5])
     // box must keep a strict subset of the occupied buckets
-    val rel = new ClusteredRelation(spark.sqlContext, root, Some("d1"), Some("d2"), None)
+    val rel = new ClusteredRelation(spark.sqlContext, root, Seq("d1", "d2"), None)
     val keep = rel.plannedBuckets(Array(
       GreaterThanOrEqual("d1", 3), LessThanOrEqual("d1", 5),
       GreaterThanOrEqual("d2", 2), LessThanOrEqual("d2", 5))).get
@@ -113,14 +113,14 @@ class ClusteredSourceSpec extends SparkTestBase {
     // catalog path (fresh fold always has _envelopes)
     val root = mkRoot()
     assert(ClusteredTable.envelopes(spark, root, 0L, Seq("d1", "d2")).isDefined)
-    val rel = new ClusteredRelation(spark.sqlContext, root, Some("d1"), Some("d2"), None)
+    val rel = new ClusteredRelation(spark.sqlContext, root, Seq("d1", "d2"), None)
     val decided = rel.plannedBuckets(box).get
     // fallback path on a TWIN table with the catalog removed: the
     // recomputed decision must be identical
     val twin = mkRoot()
     ClusteredTable.rmTree(new java.io.File(twin, "base/v=0/_envelopes"))
     assert(ClusteredTable.envelopes(spark, twin, 0L, Seq("d1", "d2")).isEmpty)
-    val relTwin = new ClusteredRelation(spark.sqlContext, twin, Some("d1"), Some("d2"), None)
+    val relTwin = new ClusteredRelation(spark.sqlContext, twin, Seq("d1", "d2"), None)
     assert(relTwin.plannedBuckets(box).get == decided,
       "catalog and recomputed decisions must agree")
     // the metadata-plane pin: corrupt EVERY base data file — the
@@ -451,18 +451,18 @@ class ClusteredSourceSpec extends SparkTestBase {
       "index degrades to unpruned, results always exact") {
     val root = build()
     ClusteredTable.buildIndex(spark, root, "id")
-    val rel = new ClusteredRelation(spark.sqlContext, root, Some("d1"), Some("d2"), Some("id"))
+    val rel = new ClusteredRelation(spark.sqlContext, root, Seq("d1", "d2"), Some("id"))
     val keep = rel.plannedBuckets(Array(EqualTo("id", 3L))).get
     val occupied = ClusteredTable.read(spark, root)
       .filter(col("zfile") >= 0).select("zfile").distinct().count()
     assert(keep.size < occupied, s"point lookup must skip buckets: $keep of $occupied")
     val got = spark.read.format("graft-clustered")
-      .option("root", root).option("d1", "d1").option("d2", "d2").option("indexcol", "id")
+      .option("root", root).option("dims", "d1,d2").option("indexcol", "id")
       .load().where(col("id") === 3L)
       .select("id", "d1", "d2").as[(Long, Int, Int)].collect().toSeq
     assert(got == Seq((3L, 15, 11)))
     // no index for this column -> no bloom decision, still exact
-    val rel2 = new ClusteredRelation(spark.sqlContext, root, None, None, Some("d2"))
+    val rel2 = new ClusteredRelation(spark.sqlContext, root, Nil, Some("d2"))
     assert(rel2.plannedBuckets(Array(EqualTo("d2", 4))).isEmpty)
   }
 
@@ -475,7 +475,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16)
     ClusteredTable.buildIndex(spark, root, "url")
     val rel = new ClusteredRelation(spark.sqlContext, root,
-      Some("d1"), Some("d2"), Some("url"))
+      Seq("d1", "d2"), Some("url"))
     val occupied = ClusteredTable.read(spark, root)
       .filter(col("zfile") >= 0).select("zfile").distinct().count()
     val keep = rel.plannedBuckets(Array(EqualTo("url", "doc-7"))).get
@@ -483,7 +483,7 @@ class ClusteredSourceSpec extends SparkTestBase {
       s"string point lookup must skip buckets: $keep of $occupied")
     // and through the public API, row-exact
     val got = spark.read.format("graft-clustered")
-      .option("root", root).option("d1", "d1").option("d2", "d2").option("indexcol", "url")
+      .option("root", root).option("dims", "d1,d2").option("indexcol", "url")
       .load().where(col("url") === "doc-7")
       .select("id").as[Long].collect().toSeq
     assert(got == Seq(7L))
@@ -500,7 +500,7 @@ class ClusteredSourceSpec extends SparkTestBase {
     ClusteredTable.append(mk(Seq((5L, 0, 0))), root, "02")
     ClusteredTable.optimize(spark, root, Seq("d1", "d2"), 4, 16) // v=1
     def at(v: String) = spark.read.format("graft-clustered")
-      .option("root", root).option("d1", "d1").option("d2", "d2")
+      .option("root", root).option("dims", "d1,d2")
       .option("asofversion", v).load()
     assert(at("0").select("id").as[Long].collect().toSeq.sorted ==
       Seq(1L, 2L, 3L, 4L), "v0 predates the delete — id 2 must be visible")

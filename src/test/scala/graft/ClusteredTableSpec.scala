@@ -71,7 +71,7 @@ class ClusteredTableSpec extends SparkTestBase {
     // manifest (the visibility point) did not
     val torn = new java.io.File(root, "base/v=1")
     ZorderLayout.write(
-      mk(Seq((1L, 4, 4), (2L, 8, 9), (3L, 12, 6))), "d1", "d2", 4, 16, torn.getPath)
+      mk(Seq((1L, 4, 4), (2L, 8, 9), (3L, 12, 6))), Seq("d1", "d2"), 4, 16, torn.getPath)
     assert(!new java.io.File(torn, "_MANIFEST").exists())
     // torn version is invisible: reads still serve v=0 + the b1 delta
     assert(ids(root) == Seq(1L, 2L, 3L))
@@ -937,25 +937,29 @@ class ClusteredTableSpec extends SparkTestBase {
 
   test("N-dim: mortonKeyN generalizes mortonKey (k=2 identical on the full " +
       "grid) and interleaves k=3 by the i*k+(k-1-j) bit formula") {
+    // k=2 against the 2-D interleave written out: d1 on the odd bits, d2 on the even
     val grid = (for { a <- 0 until 16; b <- 0 until 16 } yield (a, b)).toDF("d1", "d2")
+    val interleave2 = (0 until 4).map { i =>
+      (shiftright(col("d1"), i) % 2) * lit(1 << (2 * i + 1)) +
+        (shiftright(col("d2"), i) % 2) * lit(1 << (2 * i))
+    }.reduce(_ + _)
     val allEq = grid.select(
-      (ZorderLayout.mortonKey(col("d1"), col("d2"), 4) ===
-        ZorderLayout.mortonKeyN(Seq(col("d1"), col("d2")), 4)).as("ok"))
+      (ZorderLayout.mortonKey(Seq(col("d1"), col("d2")), 4) === interleave2).as("ok"))
       .agg(min(col("ok"))).as[Boolean].head()
-    assert(allEq, "mortonKeyN(Seq(d1, d2)) must be bit-identical to mortonKey")
+    assert(allEq, "mortonKey(Seq(d1, d2)) must be bit-identical to the 2-D interleave")
     // k=3 against an independent Scala re-derivation of the formula
     def ref(ds: Seq[Int], bits: Int): Int =
       (for { i <- 0 until bits; j <- ds.indices }
         yield ((ds(j) >> i) & 1) << (i * ds.length + (ds.length - 1 - j))).sum
     val rows = Seq((1, 2, 3), (15, 0, 7), (4, 11, 9), (0, 0, 0), (15, 15, 15))
     val got = rows.toDF("a", "b", "c")
-      .select(ZorderLayout.mortonKeyN(Seq(col("a"), col("b"), col("c")), 4).as("z"))
+      .select(ZorderLayout.mortonKey(Seq(col("a"), col("b"), col("c")), 4).as("z"))
       .as[Int].collect().toSeq
     assert(got == rows.map { case (a, b, c) => ref(Seq(a, b, c), 4) },
       s"3-way interleave drifted from its formula: $got")
     // the exact-Int key-domain guard
     intercept[IllegalArgumentException] {
-      ZorderLayout.mortonKeyN(Seq(col("a"), col("b"), col("c")), 11)
+      ZorderLayout.mortonKey(Seq(col("a"), col("b"), col("c")), 11)
     }
   }
 

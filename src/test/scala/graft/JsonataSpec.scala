@@ -28,8 +28,9 @@ class JsonataSpec extends SparkTestBase {
     * transform: one parse behind the barrier, the compiled transform over
     * the parsed struct, NULL unless the parse succeeded. */
   private def evalOn(json: String, schema: StructType, expr: String): Any = {
-    import graft.functions.PipelineFunctions.{parseOk, withParsedJson}
-    val df = withParsedJson(Seq(json).toDF("payload"), col("payload"), schema, "p")
+    import graft.functions.PipelineFunctions.{parseJsonLenient, parseOk, stageBarrier}
+    val df = stageBarrier(Seq(json).toDF("payload"), Nil,
+        "p" -> parseJsonLenient(col("payload"), schema))
       .select(when(parseOk(col("p")), JsonataCompiler.compile(expr, col("p"), schema)).as("r"))
     df.collect()(0).get(0)
   }

@@ -53,8 +53,8 @@ class PipelineFunctionsSpec extends SparkTestBase {
 
   test("safeParseJson yields NULL struct on malformed payload, value on valid") {
     val schema = StructType(Seq(StructField("k", IntegerType)))
-    val df = withParsedJson(Seq("""{"k": 7}""", "not json {", """{"k": null}""").toDF("p"),
-        col("p"), schema, "j")
+    val df = stageBarrier(Seq("""{"k": 7}""", "not json {", """{"k": null}""").toDF("p"),
+        Nil, "j" -> parseJsonLenient(col("p"), schema))
       .select(when(parseOk(col("j")), parsedPayload(col("j"), schema)).as("parsed"))
     val rows = df.select(col("parsed").isNull, col("parsed.k")).collect()
     assert(rows(0).getBoolean(0) == false && rows(0).getInt(1) == 7)

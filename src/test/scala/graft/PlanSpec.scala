@@ -84,7 +84,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("knn_ivf_kmeans: centroid assignment is a pure projection (no Exchange)") {
-    val e = queries.VectorQueries.embProjection(spark, sf())
+    val e = queries.VectorQueries.emb(spark, sf())
     val cent = Seq(0 -> Seq.fill(64)(0.1), 1 -> (0 until 64).map(_.toDouble))
     val p = queries.VectorQueries.assignListsProjection(e, cent)
       .queryExecution.executedPlan.toString

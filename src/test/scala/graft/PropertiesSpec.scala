@@ -56,7 +56,8 @@ class PropertiesSpec extends SparkTestBase {
     val schema = StructType(Seq(StructField("k", IntegerType)))
     val payloads = samples(Gen.asciiPrintableStr.map(_.take(60)), 200) ++
       Seq("{", "}", "null", "3.14", "[1,2]", """{"k":1}""", "\"s\"", "")
-    val rows = withParsedJson(payloads.toDF("p"), col("p"), schema, "j", col("p"))
+    val rows = stageBarrier(payloads.toDF("p"), Seq(col("p")),
+        "j" -> parseJsonLenient(col("p"), schema))
       .select(col("p"), when(parseOk(col("j")), parsedPayload(col("j"), schema)).as("v"))
       .collect()
     assert(rows.length == payloads.length) // every row evaluated without error

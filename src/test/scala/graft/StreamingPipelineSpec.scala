@@ -45,7 +45,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     val ckDir = Files.createTempDirectory("graft_ck").toString
     val registryRoot = Files.createTempDirectory("graft_reg").toString
     val registry = new FsStreamRegistry(registryRoot)
-    val sink = new RoutingSink(registry, outDir, cfg)
+    val sink = new RoutingSink(registry, new FsStreamPublisher(outDir), cfg)
     val stats = new StatsListener((_, _) => ())
     spark.streams.addListener(stats)
 
@@ -100,7 +100,8 @@ class StreamingPipelineSpec extends SparkTestBase {
     val cfg = GraftConfig(payloadSchema = schema, dryRun = true)
     val outDir = Files.createTempDirectory("graft_dry").toString
     val ckDir = Files.createTempDirectory("graft_dryck").toString
-    val sink = new RoutingSink(new FsStreamRegistry(outDir + "/reg"), outDir + "/data", cfg)
+    val sink = new RoutingSink(new FsStreamRegistry(outDir + "/reg"),
+      new FsStreamPublisher(outDir + "/data"), cfg)
 
     val q = sink.attach(input.transform(df => GraftPipeline.plan(df, cfg)).writeStream)
       .option("checkpointLocation", ckDir)

@@ -66,7 +66,7 @@ class VectorQueriesSpec extends SparkTestBase {
   }
 
   test("kmeans Lloyd-on-sample: deterministic, full coverage, full-data assignment") {
-    val e = VectorQueries.embProjection(spark, sf())
+    val e = VectorQueries.emb(spark, sf())
     val a = VectorQueries.kmeansCentroids(e, nLists = 8, iters = 2, sampleFraction = 0.5)
     val b = VectorQueries.kmeansCentroids(e, nLists = 8, iters = 2, sampleFraction = 0.5)
     assert(a == b) // seeded sample -> same centroids every run
